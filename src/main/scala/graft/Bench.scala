@@ -25,7 +25,8 @@ object Bench {
     * the reference for the outlier re-run rule. Missing dir/file or a
     * prior round with no parsable times → empty map (no re-runs).
     */
-  private def priorTimes(dir: String): Map[String, Double] = {
+  private[graft] def priorTimes(
+      dir: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", ".")): Map[String, Double] = {
     val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.matches("BENCH_r\\d+\\.json"))
     if (files.isEmpty) Map.empty
@@ -48,50 +49,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val prior = priorTimes(sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "."))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // A failing query must NOT fold its exception path into the
-      // numbers as a fast success: record it as null + failures entry.
-      def once(): Option[Double] = {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          None
-        }
-      }
-      def minOf(n: Int): Option[Double] = {
-        val runs = Seq.fill(n)(once())
-        if (runs.exists(_.isEmpty)) None else Some(runs.flatten.min)
-      }
-      once() // warmup
-      val timed = minOf(3).map { m =>
-        prior.get(name).filter(p => m > 3 * p).fold(m) { p =>
-          System.err.println(
-            f"[bench] $name min $m%.2fs > 3x prior record $p%.2fs - re-running")
-          minOf(2).fold(m)(math.min(m, _))
-        }
-      }
-      name -> timed
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v.fold("null")(_.toString) }
-      .mkString("{", ",", "}")
-    val failures = results.collect { case (k, None) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = results.flatMap(_._2).sum
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$failures,"sf":"$sfDir"}"""
+    val prior = priorTimes()
+    val spark = GraftSession.local("graft-bench", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val results = SparkEntry.queries.keys.toSeq.sorted.map(n => n -> time(spark, sfDir, n, prior.get(n)))
+    val (line, compact) = lines(results, sfDir)
     // the driver's BENCH_r*.json keeps only a truncated stdout tail
     // (VERDICT r12 housekeeping), so also persist the full per-query
     // map to a committed file — round-over-round deltas for every
@@ -103,28 +64,63 @@ object Bench {
     } catch { case e: Exception =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}")
     }
-    // Shutdown ordering (VERDICT r15 housekeeping item 7a): the
-    // streaming queries all stop inside their own finally blocks, but
-    // the StateStore singleton keeps a RocksDB maintenance thread that
-    // can outlive spark.stop() and log "SparkEnv not active" AFTER the
-    // JSON line — which is exactly what corrupted the driver's
-    // tail-JSON parse in BENCH_r15.json. Unload the stores and kill
-    // the maintenance task, stop Spark, and only THEN print the JSON
-    // line, so it is the absolute last thing on the wire.
-    try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    catch { case e: Exception =>
-      System.err.println(s"[bench] StateStore.stop: ${e.getMessage}") }
-    try spark.stop()
-    catch { case e: Exception =>
-      System.err.println(s"[bench] spark.stop: ${e.getMessage}") }
+    // stop Spark and only THEN print the JSON lines, so they are the
+    // absolute last thing on the wire: a late shutdown log line after
+    // them corrupted the tail-JSON parse of BENCH_r15.json
+    GraftSession.stop(spark)
     println(line)
-    // the driver keeps only a TRUNCATED stdout tail, and the full
-    // per-query line is ~8 KB — big enough to be cut mid-line, which
-    // is exactly why BENCH_r16.json's `parsed` came back null. A
-    // compact totals-only line LAST survives any tail window; the
-    // full map lives in the line above and in $out (VERDICT r16
-    // item 5).
+    println(compact)
+  }
+
+  /** Seconds for catalog query `name` under the discipline above: one
+    * warmup, the min of three runs, and two more runs when that min is
+    * over 3× `prior`. The frame is rebuilt inside each timed run, since
+    * several queries do eager work in their builder. A failing run
+    * must NOT fold its exception path into the numbers as a fast
+    * success: the query's time is None.
+    */
+  private[graft] def time(
+      spark: SparkSession, sfDir: String, name: String, prior: Option[Double]): Option[Double] = {
+    val fn = SparkEntry.queries(name)
+    def once(): Option[Double] = {
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+      }
+    }
+    def minOf(n: Int): Option[Double] = {
+      val runs = Seq.fill(n)(once())
+      if (runs.exists(_.isEmpty)) None else Some(runs.flatten.min)
+    }
+    once() // warmup
+    minOf(3).map { m =>
+      prior.filter(p => m > 3 * p).fold(m) { p =>
+        System.err.println(
+          f"[bench] $name min $m%.2fs > 3x prior record $p%.2fs - re-running")
+        minOf(2).fold(m)(math.min(m, _))
+      }
+    }
+  }
+
+  /** Bench's two stdout lines for per-query `results` (None = failed):
+    * the full per-query line, and a compact totals-only line. A reader
+    * that keeps only a TRUNCATED stdout tail (as BENCH_r*.json does) can
+    * cut the ~8 KB full line mid-line, which is exactly why
+    * BENCH_r16.json's `parsed` came back null — so the compact line is
+    * printed LAST and survives any tail window (VERDICT r16 item 5).
+    */
+  private[graft] def lines(results: Seq[(String, Option[Double])], sfDir: String): (String, String) = {
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v.fold("null")(_.toString) }
+      .mkString("{", ",", "}")
+    val failures = results.collect { case (k, None) => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val total = results.flatMap(_._2).sum
     val nFail = results.count(_._2.isEmpty)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failures":$nFail,"sf":"$sfDir"}""")
+    (s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$failures,"sf":"$sfDir"}""",
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failures":$nFail,"sf":"$sfDir"}""")
   }
 }

@@ -46,19 +46,12 @@ object Main {
         System.err.println(s"Error initializing job: ${e.getMessage}"); return 1
       }
 
-    // if a session already exists (tests, shared driver), reuse it and
-    // leave its lifecycle alone
-    val reusedSession = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(s"graft-${cfg.id}")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      // LLM calls are effectful — never re-run finished work
-      .config("spark.speculation", "false")
-      .getOrCreate()
+    // if a session already exists (tests, an embedding program), reuse it
+    // untouched — a builder's getOrCreate would overwrite its settings —
+    // and leave its lifecycle alone
+    val reused = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val spark = reused.getOrElse(GraftSession(s"graft-${cfg.id}",
+      sys.env.getOrElse("SPARK_MASTER", "local[*]"), sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
     try {
       val client: LlmClient =
         if (flags.contains("fake")) new FakeLlmClient() else new OpenAiClient()
@@ -114,7 +107,7 @@ object Main {
         stdinTmp.foreach(p => Files.deleteIfExists(p))
         stdoutTmp.foreach(deleteRecursively)
       }
-    } finally { if (!reusedSession) spark.stop() }
+    } finally { if (reused.isEmpty) GraftSession.stop(spark) }
   }
 
   private def deleteRecursively(root: java.nio.file.Path): Unit =

@@ -1385,7 +1385,7 @@ object Sources extends Catalog {
       //     600k at sf0.001/0.01/0.1) — the SQL analogue of the
       //     engine's explicit per-SF-dir size switch.
       // Validated bit-exact vs an independent numpy float32 replica on
-      // every phash bit of both corpus sizes (tools/q58_proto.py).
+      // every phash bit of both corpus sizes.
       sql = Some(ImageNearDupOracleSql),
       scaleNote = "image dedup at 100 TB: decode (real javax.imageio) + phash is one map pass; candidates come from the 8-band (band,key) equi-join with pigeonhole-guaranteed recall ≤ hamming 7 — never a cartesian; the file-system ingest half of this pipeline (spark.read binaryFile → decode) is REGISTERED as q237 under this oracle VERBATIM"),
 

@@ -147,7 +147,7 @@ object Streaming extends Catalog {
     *    engine's CPU count — every micro-batch commits EVERY state
     *    partition's RocksDB store, so 32 mostly-empty stores per batch
     *    was pure fixed overhead (~2/3 of q217's suite reading,
-    *    ProfileQ-measured r15). Production sizes this to key
+    *    measured min-of-3 r15). Production sizes this to key
     *    cardinality × state size, the same knob.
     */
   private def rocksDbChild(s0: SparkSession): SparkSession =

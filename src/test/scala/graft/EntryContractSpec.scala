@@ -23,4 +23,17 @@ class EntryContractSpec extends SparkSpec {
   test("entry() (driver smoke query) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
+
+  test("GraftSession is the only place src/main builds a session") {
+    import scala.jdk.CollectionConverters._
+    // split so that a grep of src/ for the call finds only GraftSession
+    val call = "SparkSession." + "builder("
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val builders =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(p => java.nio.file.Files.readString(p).contains(call))
+        .map(_.getFileName.toString).toSeq
+      finally walk.close()
+    assert(builders == Seq("GraftSession.scala"))
+  }
 }

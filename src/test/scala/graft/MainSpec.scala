@@ -73,4 +73,17 @@ class MainSpec extends SparkSpec {
     assert(lines.forall(_.contains(""""summary":"FAKE[""")))
     assert(spark.read.text(s"$err/corrupt").count() == 1)
   }
+
+  test("a reused session keeps its settings") {
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    val d = setup()
+    try {
+      spark.conf.set(key, "7")
+      assert(Main.run(Array(d.resolve("job.yml").toString,
+        "--in", d.resolve("in.jsonl").toString,
+        "--out", d.resolve("out").toString, "--fake")) == 0)
+      assert(spark.conf.get(key) == "7")
+    } finally spark.conf.set(key, old)
+  }
 }

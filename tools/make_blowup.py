@@ -2,7 +2,7 @@
 """Structure-preserving ~10x blowup of an sf corpus, ALL TEN tables —
 the r11 full-suite scale fixture (VERDICT r10 item 6 wants one
 graft.Bench pass over the whole catalog at 10x, not just per-query
-ProfileQ floors, to catch cross-query interference and plan flips
+MiniBench floors, to catch cross-query interference and plan flips
 under contended memory).
 
 Recipe (the r9/r10 per-copy-salt protocol, extended to every table):
