@@ -15,42 +15,44 @@ import org.apache.spark.sql.SparkSession
   * "regressions" on byte-identical code, all adjudicated box noise by
   * warm re-profiling), so on top of min-of-3 an OUTLIER RE-RUN rule
   * compares each min against the previous round's recorded value
-  * (latest BENCH_r*.json in the working dir): a min still >3× the
-  * prior record earns two extra runs. A genuine regression survives
-  * all five; a load spike almost never does.
+  * (latest BENCH_r*.json in the working dir at the same scale and core
+  * count): a min still >3× the prior record earns two extra runs. A
+  * genuine regression survives all five; a load spike almost never
+  * does.
   */
 object Bench {
 
-  /** per-query seconds from the most recent BENCH_r*.json in `dir` —
-    * the reference for the outlier re-run rule. Missing dir/file or a
-    * prior round with no parsable times → empty map (no re-runs).
+  /** per-query seconds from the most recent BENCH_r*.json in `dir`
+    * whose top-level `cpus` is `cpus` and whose stdout tail carries
+    * `"sf":"<sfDir>"` (so the _c8 records serve 8-core runs) — the
+    * reference for the outlier re-run rule. No such record → empty map
+    * (no re-runs).
     */
   private[graft] def priorTimes(
+      sfDir: String,
+      cpus: Int,
       dir: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", ".")): Map[String, Double] = {
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-    if (files.isEmpty) Map.empty
-    else {
-      val latest = files.maxBy(f => "\\d+".r.findFirstIn(f.getName).get.toInt)
-      try {
-        val txt = {
-          val src = scala.io.Source.fromFile(latest, "UTF-8")
-          try src.mkString finally src.close()
-        }
-        // query keys are the only "q…"-named numeric fields in the file
-        "\"(q[0-9a-zA-Z_]+)\"\\s*:\\s*([0-9][0-9.eE+-]*)".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case e: Exception =>
-        System.err.println(s"[bench] ignoring unreadable ${latest.getName}: ${e.getMessage}")
-        Map.empty
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val name = "BENCH_r(\\d+)\\w*\\.json".r
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .flatMap(f => name.unapplySeq(f.getName).map(g => g.head.toInt -> f))
+      .sortBy(-_._1).iterator
+      .flatMap { case (_, f) =>
+        try Some(mapper.readTree(f))
+        catch { case e: Exception =>
+          System.err.println(s"[bench] ignoring unreadable ${f.getName}: ${e.getMessage}"); None }
       }
-    }
+      .find(r => r.path("cpus").asInt(-1) == cpus && r.path("tail").asText().contains(s""""sf":"$sfDir""""))
+      .fold(Map.empty[String, Double])(_.path("parsed").path("queries").properties().asScala
+        .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val prior = priorTimes()
-    val spark = GraftSession.local("graft-bench", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val prior = priorTimes(sfDir, cpus.toInt)
+    val spark = GraftSession.local("graft-bench", cpus)
     val results = SparkEntry.queries.keys.toSeq.sorted.map(n => n -> time(spark, sfDir, n, prior.get(n)))
     val (line, compact) = lines(results, sfDir)
     // the driver's BENCH_r*.json keeps only a truncated stdout tail

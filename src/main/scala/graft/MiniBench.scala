@@ -24,7 +24,8 @@ object MiniBench {
     val args = if (plans) argv.drop(3) else argv
     val names = args(0).split(",").toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-minibench", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = GraftSession.local("graft-minibench", cpus)
     try {
       if (plans) {
         val Array(outDir, suffix) = argv.slice(1, 3)
@@ -36,7 +37,7 @@ object MiniBench {
           println(s"[plans] wrote $file")
         }
       } else {
-        val prior = Bench.priorTimes()
+        val prior = Bench.priorTimes(sfDir, cpus.toInt)
         val total = names.map { n =>
           val t = Bench.time(spark, sfDir, n, prior.get(n))
           println(t.fold(s"[mini] $n: FAILED")(m => f"[mini] $n: $m%.3f s"))

@@ -45,12 +45,18 @@ final class OpenAiClient(
       .build()
     val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
     if (resp.statusCode() / 100 != 2)
-      throw new RuntimeException(s"HTTP ${resp.statusCode()}: ${resp.body().take(500)}")
+      throw new HttpStatusException(resp.statusCode(),
+        s"HTTP ${resp.statusCode()}: ${resp.body().take(500)}")
     // choices[0].message.content, default "" (lib/job_processor.rb:173)
     val root = mapper.readTree(resp.body())
     root.path("choices").path(0).path("message").path("content").asText("")
   }
 }
+
+/** A non-2xx answer; `status` lets the retry policy tell the codes
+  * that can succeed on a retry from those that cannot. */
+final class HttpStatusException(val status: Int, message: String)
+    extends RuntimeException(message)
 
 object OpenAiClient {
   private val mapper = new ObjectMapper()

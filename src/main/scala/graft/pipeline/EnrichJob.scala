@@ -5,12 +5,13 @@ import java.util.concurrent.Executors
 import scala.collection.mutable
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.JobConfig
-import graft.llm.{LlmClient, Msg}
+import graft.llm.{HttpStatusException, LlmClient, Msg}
 import graft.template.Template
 
 /** Tuning for the effectful LLM stage. Defaults follow the reference's
@@ -23,10 +24,7 @@ final case class EnrichOptions(
       * partitions × this */
     concurrency: Int = 8,
     maxRetries: Int = 2,
-    retryBackoffMs: Long = 500,
-    /** request-rate cap per partition (0 = unlimited); cluster-wide
-      * rate = partitions × this — size it to the backend's quota */
-    maxReqPerSec: Double = 0.0)
+    retryBackoffMs: Long = 500)
 
 /** The reference's whole job — `process_item` mapped over a corpus
   * (SURVEY.md R3-R11) — as one declarative DataFrame transform.
@@ -37,6 +35,9 @@ final case class EnrichOptions(
   *   prompt render     — Catalyst concat/element_at (Template.column)
   *   LLM invoke        — mapPartitions, pooled client per partition,
   *                       async window of `concurrency` requests
+  *   checkpoint        — localCheckpoint(eager = false) of the called
+  *                       rows: each record is called exactly once, at
+  *                       the first action, whichever frame it runs on
   *   <think> strip     — regexp_replace + trim (codegen)
   *   label append      — map_filter + map_concat (codegen; overwrite
   *                       semantics without relying on mapKeyDedupPolicy)
@@ -68,35 +69,14 @@ object EnrichJob {
       regexp_replace(c, "(?s)<think>.*?</think>", ""),
       "(?s)\\A[\\s\\u0000]+|[\\s\\u0000]+\\z", "")
 
-  /** @param materialize localCheckpoint the called frame BEFORE the
-    *   good/dead-letter fork, so a caller consuming BOTH forks (e.g.
-    *   [[ValidateRepair]], which must account for call failures) runs
-    *   the LLM stage exactly once; the default keeps the stage lazy
-    *   for the common good-only consumers. Two deliberate trade-offs
-    *   when true (ADVICE r14): the checkpoint is EAGER, so every
-    *   first-pass LLM call fires AT run() time even if the returned
-    *   frames are never acted on — callers opting in are buying
-    *   exactly-once calls, not laziness; and localCheckpoint blocks
-    *   are UNREPLICATED executor-local state, so losing an executor
-    *   fails the job instead of recomputing (acceptable here because
-    *   recomputing IS the failure being priced: a recompute would
-    *   re-fire paid API calls — restart-durability is what
-    *   [[runCached]]'s on-disk idempotency cache is for)
-    */
+  /** `good` and `deadLetter` read the same rows of [[calledFrame]]: the
+    * backend is called once per record, whatever the caller consumes. */
   def run(
       records: DataFrame,
       cfg: JobConfig,
       client: LlmClient,
-      opts: EnrichOptions = EnrichOptions(),
-      materialize: Boolean = false): Result = {
-    import records.sparkSession.implicits._
-    val prompted = promptedFrame(records, cfg).as[Prompted]
-    val useImages = cfg.useImages
-    val called = prompted.mapPartitions { it =>
-      callPartition(it, cfg, client, opts, useImages)
-    }.toDF()
-    assemble(if (materialize) called.localCheckpoint() else called, cfg)
-  }
+      opts: EnrichOptions = EnrichOptions()): Result =
+    assemble(calledFrame(promptedFrame(records, cfg), cfg, client, opts), cfg)
 
   /** Cached variant for at-least-once environments (SURVEY.md §7.4):
     * responses are keyed by an idempotency hash of the full request
@@ -114,7 +94,6 @@ object EnrichJob {
       cacheDir: String,
       opts: EnrichOptions = EnrichOptions()): Result = {
     val spark = records.sparkSession
-    import spark.implicits._
 
     // idempotency key: request content, not record id — the same
     // record re-templated differently must re-call.
@@ -160,12 +139,9 @@ object EnrichJob {
     val misses = joined.filter(col("cached_response").isNull)
       .drop("cached_response")
 
-    val useImages = cfg.useImages
-    // localCheckpoint = run the LLM stage exactly once, then reuse the
-    // materialized rows for both the cache append and the output union
-    val missCalled = misses.as[Prompted].mapPartitions { it =>
-      callPartition(it, cfg, client, opts, useImages)
-    }.toDF().localCheckpoint()
+    // the cache append below is the first action: it makes the calls,
+    // and the output union reads the same checkpointed rows
+    val missCalled = calledFrame(misses, cfg, client, opts)
 
     missCalled.filter(col("error").isNull)
       .select(col("cacheKey"), col("response"))
@@ -250,6 +226,24 @@ object EnrichJob {
       lit("").as("cacheKey"))
   }
 
+  /** The one LLM stage, shared by run/runCached, checkpointed lazily:
+    * the first action makes the calls (a partial one such as `limit`
+    * still completes the stage) and later actions read the stored rows
+    * instead of paying again. Trade-off: checkpoint blocks are
+    * unreplicated executor-local state, so losing an executor fails
+    * the job instead of re-calling — restart durability is what
+    * [[runCached]]'s on-disk cache is for.
+    */
+  private def calledFrame(
+      prompted: DataFrame,
+      cfg: JobConfig,
+      client: LlmClient,
+      opts: EnrichOptions): DataFrame = {
+    import prompted.sparkSession.implicits._
+    prompted.as[Prompted].mapPartitions(callPartition(_, cfg, client, opts))
+      .toDF().localCheckpoint(eager = false)
+  }
+
   /** clean + label-append + good/dead-letter fork over a called frame */
   private def assemble(called: DataFrame, cfg: JobConfig): Result = {
     val withLabel = map_concat(
@@ -274,8 +268,7 @@ object EnrichJob {
       it: Iterator[Prompted],
       cfg: JobConfig,
       client: LlmClient,
-      opts: EnrichOptions,
-      useImages: Boolean): Iterator[Called] = {
+      opts: EnrichOptions): Iterator[Called] = {
     val pool = Executors.newFixedThreadPool(math.max(1, opts.concurrency))
     // the pool must die with the TASK, not with iterator exhaustion:
     // partial consumption (downstream limit, task failure, write error)
@@ -286,7 +279,7 @@ object EnrichJob {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
 
     def callOne(r: Prompted): Called = {
-      val messages = buildMessages(r, useImages)
+      val messages = buildMessages(r, cfg.useImages)
       try Called(r.id, r.texts, r.images,
         Some(withRetry(opts)(client.chat(messages, cfg))), None, r.cacheKey)
       catch { case e: Throwable =>
@@ -297,16 +290,7 @@ object EnrichJob {
       }
     }
 
-    // simple per-partition pacing: submissions spaced >= 1/maxReqPerSec
-    val minIntervalNs =
-      if (opts.maxReqPerSec > 0) (1e9 / opts.maxReqPerSec).toLong else 0L
-    var nextSlotNs = System.nanoTime()
-    def throttle(): Unit = if (minIntervalNs > 0) {
-      val wait = nextSlotNs - System.nanoTime()
-      if (wait > 0) Thread.sleep(wait / 1000000, (wait % 1000000).toInt)
-      nextSlotNs = math.max(nextSlotNs + minIntervalNs, System.nanoTime())
-    }
-    val source = it.map { r => throttle(); Future(callOne(r)) } // lazy — forced by enqueue
+    val source = it.map(r => Future(callOne(r))) // lazy — forced by enqueue
     val inflight = mutable.Queue.empty[Future[Called]]
     new Iterator[Called] {
       private def fill(): Unit =
@@ -325,12 +309,23 @@ object EnrichJob {
     }
   }
 
+  /** Retries, with exponential backoff, only what can succeed on a
+    * retry: transport errors, timeouts, 5xx, 408, 429 and malformed
+    * bodies. Any other 4xx is the same answer on every attempt, and a
+    * fatal throwable (including the InterruptedException the task-end
+    * `shutdownNow` delivers) is not a backend failure, so both are
+    * rethrown at once instead of paying for more calls.
+    */
   private def withRetry[A](opts: EnrichOptions)(f: => A): A = {
+    def retryable(e: Throwable): Boolean = e match {
+      case h: HttpStatusException => h.status / 100 != 4 || h.status == 408 || h.status == 429
+      case _ => true
+    }
     var attempt = 0
     while (true) {
       try return f
       catch {
-        case e: Throwable if attempt < opts.maxRetries =>
+        case NonFatal(e) if attempt < opts.maxRetries && retryable(e) =>
           Thread.sleep(opts.retryBackoffMs * (1L << attempt)) // exp backoff
           attempt += 1
       }

@@ -20,11 +20,9 @@ import graft.llm.LlmClient
   * Loop shape, by construction:
   *   - BOUNDED: exactly one retry — attempts ∈ {1, 2}, never a
   *     re-ask loop that a stubborn model could spin forever;
-  *   - FRUGAL: only first-pass FAILURES are re-asked (the first-pass
-  *     frame is localCheckpoint'd so the LLM stage runs exactly once
-  *     per pass — without it, the dead/valid forks would each re-fire
-  *     the mapPartitions call stage), spec-proven with a counting
-  *     client;
+  *   - FRUGAL: only first-pass FAILURES are re-asked, and EnrichJob
+  *     calls each record once per pass however many forks read it,
+  *     spec-proven with a counting client;
   *   - TOTAL: every input record gets one report row — (attempts,
   *     valid_first, valid_final, reason_first, reason_final) — so the
   *     per-reason repair-rate dashboard is one fold of this frame.
@@ -67,16 +65,13 @@ object ValidateRepair {
       constraints: Seq[(String, SchemaValidate.Constraint)],
       contentLabel: String = "content",
       opts: EnrichOptions = EnrichOptions()): DataFrame = {
-    // materialize = true: both forks (good AND deadLetter) are
-    // consumed here, and the frugality contract demands the LLM stage
-    // run exactly once per pass
-    val r1 = EnrichJob.run(records, cfg, client, opts, materialize = true)
+    val r1 = EnrichJob.run(records, cfg, client, opts)
     val first = r1.good
       .select(col("id"),
         element_at(col("texts"), contentLabel).as("content"),
         element_at(col("texts"), cfg.outputLabel).as("j"))
-    // one LLM call per record per pass — materialize before forking
-    // into the valid/dead consumers (and the retry join)
+    // validate once: three consumers read the verdicts (the retry
+    // records, the repaired join and the clean rows)
     val checked1 = SchemaValidate.verdicts(first, "j", constraints)
       .select(col("id"), col("content"),
         col("valid").cast("boolean").as("valid1"),
@@ -89,12 +84,7 @@ object ValidateRepair {
         lit("why"), col("reason_first")).as("texts"),
       array().cast("array<string>").as("images"))
     val cfg2 = cfg.copy(id = cfg.id + "-retry", erbTemplate = retryTemplate)
-    // materialize = true on the retry pass too (ADVICE r14): without
-    // it the frugality contract ("LLM stage runs exactly once per
-    // pass") held only per CONSUMPTION — a caller running count()
-    // then collect() on the report would re-fire every retry call
-    val second = EnrichJob.run(retryRecords, cfg2, client, opts,
-        materialize = true).good
+    val second = EnrichJob.run(retryRecords, cfg2, client, opts).good
       .select(col("id"), element_at(col("texts"), cfg.outputLabel).as("j"))
     val checked2 = SchemaValidate.verdicts(second, "j", constraints)
       .select(col("id"), col("valid").cast("boolean").as("valid2"),

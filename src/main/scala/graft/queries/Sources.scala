@@ -1049,18 +1049,11 @@ object Sources extends Catalog {
         // re-pay the fake thrice per dead letter
         val opts = graft.pipeline.EnrichOptions(
           concurrency = 16, maxRetries = 0)
-        // materialize = true on BOTH passes: each result is consumed
-        // twice (good + deadLetter), and un-checkpointed lineage would
-        // re-fire the backend per consumer — with a paid API that is
-        // the 3× re-bill the flag exists to prevent (and exactly what
-        // EnrichJobSpec's frugality test counts)
         val first = graft.pipeline.EnrichJob.run(records, cfg,
-          new graft.llm.FakeLlmClient(face("ENR", 9L)), opts,
-          materialize = true)
+          new graft.llm.FakeLlmClient(face("ENR", 9L)), opts)
         val replayed = graft.io.Jsonl.replayDeadLetter(s, first.deadLetter)
         val second = graft.pipeline.EnrichJob.run(replayed, cfg,
-          new graft.llm.FakeLlmClient(face("REC", 27L)), opts,
-          materialize = true)
+          new graft.llm.FakeLlmClient(face("REC", 27L)), opts)
         def shape(df: DataFrame, attempts: Int, recovered: Int,
             status: String) =
           df.select(col("id").cast("long").as("doc_id"),

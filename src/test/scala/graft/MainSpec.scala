@@ -74,6 +74,50 @@ class MainSpec extends SparkSpec {
     assert(spark.read.text(s"$err/corrupt").count() == 1)
   }
 
+  test("--err over a real HTTP backend: one request per record, a 400 " +
+    "is dead-lettered and the rest reach the output") {
+    spark // ensure the shared session exists so Main reuses it
+    val requests = new java.util.concurrent.atomic.AtomicInteger(0)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress(java.net.InetAddress.getLoopbackAddress, 0), 0)
+    server.createContext("/v1/chat/completions", ex => {
+      requests.incrementAndGet()
+      val msgs = mapper.readTree(ex.getRequestBody.readAllBytes()).path("messages")
+      val id = msgs.get(msgs.size() - 1).path("content").asText()
+      val (status, body) =
+        if (id == "3") (400, """{"error":{"message":"bad request"}}""")
+        else (200, s"""{"choices":[{"message":{"role":"assistant","content":"S$id"}}]}""")
+      val bytes = body.getBytes("UTF-8")
+      ex.sendResponseHeaders(status, bytes.length.toLong)
+      ex.getResponseBody.write(bytes)
+      ex.close()
+    })
+    server.start()
+    try {
+      val d = Files.createTempDirectory("graft-main-http")
+      Files.writeString(d.resolve("prompt.erb"), "<%= id %>")
+      Files.writeString(d.resolve("job.yml"),
+        s""":id: cli-http
+           |:erb_filepath: prompt.erb
+           |:backend_endpoint: http://127.0.0.1:${server.getAddress.getPort}/v1
+           |:model: m
+           |:output_label: summary""".stripMargin)
+      val ids = (1 to 6).map(_.toString)
+      Files.writeString(d.resolve("in.jsonl"), ids.map(i =>
+        s"""{"id": "$i", "texts": {"content": "c$i"}}""").mkString("", "\n", "\n"))
+      val out = d.resolve("out").toString
+      val err = d.resolve("err").toString
+      assert(Main.run(Array(d.resolve("job.yml").toString,
+        "--in", d.resolve("in.jsonl").toString, "--out", out, "--err", err)) == 0)
+      import spark.implicits._
+      assert(requests.get() == ids.size)
+      assert(spark.read.json(s"$err/failed").select("id").as[String].collect().toSeq == Seq("3"))
+      assert(spark.read.json(out).select("id").as[String].collect().sorted.toSeq ==
+        ids.filter(_ != "3"))
+    } finally server.stop(0)
+  }
+
   test("a reused session keeps its settings") {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)

@@ -244,13 +244,8 @@ class EnrichJobSpec extends SparkSpec {
         "ok"
       }
     }
-    // materialize = true is LOAD-BEARING for frugality: without the
-    // checkpoint, every downstream consumer (good, deadLetter, the
-    // replay) re-executes pass 1's mapPartitions and re-fires the
-    // paid backend calls — q262 sets it for the same reason
     val opts = EnrichOptions(maxRetries = 0)
-    val first = EnrichJob.run(records, rCfg, logging(4), opts,
-      materialize = true)
+    val first = EnrichJob.run(records, rCfg, logging(4), opts)
     first.good.count()
     val deadIds = first.deadLetter.select("id").as[String].collect()
       .map(_.toInt).toSeq.sorted
@@ -264,16 +259,51 @@ class EnrichJobSpec extends SparkSpec {
       s"pass 2 must touch EXACTLY the dead-lettered subset: $pass2 vs $deadIds")
   }
 
-  test("rate limit paces submissions (maxReqPerSec)") {
-    val df = (1 to 30).map(i => (i.toString, Map("content" -> s"d$i"), Seq.empty[String]))
-      .toDF("id", "texts", "images").coalesce(1)
-    val t0 = System.nanoTime()
-    val n = EnrichJob.run(df, cfg(), new FakeLlmClient(p => p),
-      EnrichOptions(concurrency = 8, maxReqPerSec = 100.0)).good.count()
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    assert(n == 30)
-    // 30 requests at <=100/s on one partition need >= ~0.29s of pacing
-    assert(elapsed >= 0.25, s"rate limiter did not pace: ${elapsed}s")
+  test("each record is called once, whatever the caller consumes and " +
+    "in whatever order; good and dead-letter partition the input") {
+    EnrichJobSpec.calls.set(0)
+    // odd-numbered calls fail: if a second action re-ran the stage, the
+    // same record could land in both outputs or in neither
+    val oddFails = new graft.llm.LlmClient {
+      override def chat(ms: Seq[graft.llm.Msg], c: JobConfig): String =
+        if (EnrichJobSpec.calls.incrementAndGet() % 2 == 1)
+          throw new RuntimeException("odd call") else "ok"
+    }
+    val ids = (1 to 40).map(_.toString)
+    val records = ids.map(i => (i, Map("content" -> s"c$i"), Seq.empty[String]))
+      .toDF("id", "texts", "images").repartition(4)
+    val r = EnrichJob.run(records, cfg(), oddFails, EnrichOptions(maxRetries = 0))
+    assert(EnrichJobSpec.calls.get() == 0, "building the frames makes no calls")
+    val nGood = r.good.count()
+    val nDead = r.deadLetter.count()
+    assert(r.good.count() == nGood)
+    assert(EnrichJobSpec.calls.get() == ids.size)
+    val good = r.good.select("id").as[String].collect().toSet
+    val dead = r.deadLetter.select("id").as[String].collect().toSet
+    assert(EnrichJobSpec.calls.get() == ids.size)
+    assert((good intersect dead).isEmpty, s"in both outputs: ${good intersect dead}")
+    assert(good ++ dead == ids.toSet)
+    assert(nGood + nDead == ids.size)
+  }
+
+  test("retry classes: a 4xx is called once, a 5xx maxRetries + 1 times") {
+    def answering(status: Int) = new graft.llm.LlmClient {
+      override def chat(ms: Seq[graft.llm.Msg], c: JobConfig): String = {
+        EnrichJobSpec.calls.incrementAndGet()
+        throw new graft.llm.HttpStatusException(status, s"HTTP $status: nope")
+      }
+    }
+    val one = Seq(("1", Map("content" -> "x"), Seq.empty[String]))
+      .toDF("id", "texts", "images")
+    val opts = EnrichOptions(maxRetries = 2, retryBackoffMs = 1)
+    EnrichJobSpec.calls.set(0)
+    val bad = EnrichJob.run(one, cfg(), answering(400), opts).deadLetter
+      .select("error").as[String].collect()
+    assert(EnrichJobSpec.calls.get() == 1)
+    assert(bad.toSeq == Seq("API request failed: HTTP 400: nope"))
+    EnrichJobSpec.calls.set(0)
+    EnrichJob.run(one, cfg(), answering(503), opts).deadLetter.count()
+    assert(EnrichJobSpec.calls.get() == opts.maxRetries + 1)
   }
 
   test("reference repo's own example input runs end-to-end (README.md:35 scenario)") {
