@@ -1,22 +1,35 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
+
+import graft.plans.AsOfJoinPlan
 
 /** As-of join — for each left row, the latest right row with
   * `rightTime <= leftTime` (direction "backward", the default), or the
   * earliest right row with `rightTime >= leftTime` ("forward"), within
   * the same key (the canonical time-series enrichment operator; Spark
-  * has no built-in).
+  * has no built-in). Output: every left column, then one
+  * `asof_<payload>` column per right payload column, all taken from the
+  * same matching right row (NULL payload values included); a left row
+  * with no match keeps nulls there (left-outer shape).
   *
-  * Implementation is the ONE-SHUFFLE union-window plan, not a range
-  * join: tag both inputs, union them, and carry the last right payload
-  * forward with `last(_, ignoreNulls) over (partition key order time)`.
-  * The forward direction is the same plan on the REVERSED time order.
-  * A naive `l.ts >= r.ts` join explodes to the full per-key cross
-  * product before aggregation; this stays O(n log n) per key and
-  * shuffles each row exactly once — the property that survives 100 TB.
+  * Built as a first-class Catalyst operator: [[graft.plans.AsOfJoinPlan]]
+  * planned by graft.plans.GraftStrategy onto
+  * [[graft.plans.AsOfJoinExec]]'s streamed sorted-merge — one hash
+  * exchange and one spillable sort per side, one buffered right row,
+  * never the per-key cross product a naive `l.ts >= r.ts` join
+  * materializes. Requires the session to carry
+  * `graft.functions.GraftExtensions` (which injects the strategy; every
+  * `graft.GraftSession` does).
+  *
+  * NULL semantics are SQL comparison semantics, = DuckDB's ASOF JOIN: a
+  * NULL key or a NULL timestamp on either side never matches. Ties on
+  * (key, rightTime) resolve to the row with the largest orderable
+  * payload, the same row in both directions.
   */
 object AsOfJoin {
 
@@ -34,59 +47,34 @@ object AsOfJoin {
       direction: String = "backward"): DataFrame = {
     require(direction == "backward" || direction == "forward",
       s"direction must be backward|forward, got $direction")
-    val fwd = direction == "forward"
-    val lCols = left.columns
-    // side ordering at equal timestamps: right (0) sorts before left
-    // (1), so a right row at exactly leftTime matches (<= semantics)
-    val taggedLeft = left
-      .withColumn("_ts", col(leftTime))
-      .withColumn("_side", lit(1))
-    // ONE struct carries the whole right row. Carrying each payload
-    // column independently with last(_, ignoreNulls) would skip a right
-    // row whose payload value is legitimately NULL (substituting an
-    // older row's value) and could mix values from different right rows
-    // across columns — the struct is atomic: all fields come from the
-    // same (latest) right row, NULL fields included.
-    val taggedRight = right
-      .select((key +: rightTime +: rightPayload).distinct.map(col): _*)
-      .withColumn("_ts", col(rightTime))
-      .withColumn("_side", lit(0))
-      .select(col(key), col("_ts"), col("_side"),
-        struct(rightPayload.map(col): _*).as("_p"))
+    val spark = left.sparkSession
+    val rCols = (key +: rightTime +: rightPayload).distinct
+    val rNarrow = right.select(rCols.map(col): _*)
 
-    // missing columns (left's payload struct, right's left columns) are
-    // null-filled by name — no per-column null casting needed
-    val unioned = taggedLeft.unionByName(
-      taggedRight, allowMissingColumns = true)
+    val lPlan = GraftSqlBridge.analyzed(left)
+    val rPlan0 = GraftSqlBridge.analyzed(rNarrow)
+    // re-alias the whole right side to FRESH exprIds with reserved
+    // names: makes self-joins (left and right scanning the same source)
+    // unambiguous without relying on analyzer dedup of a node type it
+    // doesn't know, and keeps right columns from colliding with left's
+    val rPlan = Project(
+      rPlan0.output.map(a => Alias(a, s"_asof_r_${a.name}")()), rPlan0)
 
-    // the payload values are the equal-timestamp tie-break among right
-    // rows: deterministic regardless of partition layout (left rows
-    // carry nulls but never compete — _side splits them). Only
-    // ORDERABLE payload types participate: a map-typed payload column
-    // would make the sort unresolvable, and rows differing only in
-    // unorderable columns simply keep an arbitrary-but-consistent
-    // window order.
-    val tieBreak = rightPayload
-      .filter(c => org.apache.spark.sql.catalyst.expressions.RowOrdering
-        .isOrderable(right.schema(c).dataType))
-      .map(c => col("_p").getField(c))
-    // forward = the identical carry-last plan on REVERSED time: _ts
-    // descends, right (_side 0) still sorts before left at equal _ts so
-    // the >= bound is inclusive. The payload tie-break stays ASCENDING
-    // in both directions: carry-last then resolves duplicate right
-    // rows at the matching timestamp to the same (max-payload) row
-    // either way — flipping it with the time order would make q99 and
-    // q46 choose OPPOSITE rows at (key, ts) ties
-    val ordering =
-      if (fwd) Seq(col("_ts").desc, col("_side")) ++ tieBreak
-      else Seq(col("_ts"), col("_side")) ++ tieBreak
-    val w = Window.partitionBy(col(key))
-      .orderBy(ordering: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    unioned
-      .withColumn("_asof", last(col("_p"), ignoreNulls = true).over(w))
-      .filter(col("_side") === 1)
-      .select(lCols.toIndexedSeq.map(col) ++
-        rightPayload.map(c => col("_asof").getField(c).as(s"asof_$c")): _*)
+    def attr(plan: Seq[Attribute], name: String): Attribute =
+      plan.find(_.name == name).getOrElse(
+        throw new IllegalArgumentException(s"column $name not found"))
+
+    val plan = AsOfJoinPlan(
+      lPlan, rPlan,
+      leftKeys = Seq(attr(lPlan.output, key)),
+      rightKeys = Seq(attr(rPlan.output, s"_asof_r_$key")),
+      leftTime = attr(lPlan.output, leftTime),
+      rightTime = attr(rPlan.output, s"_asof_r_$rightTime"),
+      forward = direction == "forward")
+
+    val lCols: Seq[Column] = left.columns.toIndexedSeq.map(col)
+    val pCols: Seq[Column] =
+      rightPayload.map(c => col(s"_asof_r_$c").as(s"asof_$c"))
+    GraftSqlBridge.ofRows(spark, plan).select(lCols ++ pCols: _*)
   }
 }

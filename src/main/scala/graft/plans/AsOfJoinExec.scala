@@ -16,18 +16,12 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
   * through a single-pass merge: O(n_l + n_r) per partition, one right
   * row buffered at a time, no materialized per-key group.
   *
-  * Vs the union-window formulation (`graft.operators.AsOfJoin`): the
-  * same two exchanges, but the sort runs per SIDE instead of over the
-  * union, and the merge never allocates a window buffer — at 100 TB the
-  * carry-last window holds each partition's full union in the window
-  * frame walker while this operator holds exactly one buffered row.
-  *
   * Tie-break: at equal (key, rightTime) the requiredChildOrdering on the
   * right appends the orderable payload columns — ascending for backward
   * (the LAST qualifying row the scan passes is the payload-max), and
   * descending for forward (the FIRST row the scan stops on is the
   * payload-max) — so both directions deterministically pick the same
-  * payload-max row the composed operator picks.
+  * payload-max row, whatever the partition layout.
   */
 case class AsOfJoinExec(
     left: SparkPlan,

@@ -4,18 +4,12 @@ import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** Logical as-of join — the whole-operator Catalyst surface of the
-  * engine's as-of semantics (SURVEY §2B E5/E19).
-  *
-  * `graft.operators.AsOfJoin` expresses the operator by COMPOSING
-  * built-ins (union + carry-last window). This node is the other
-  * extension route the engine supports: a first-class logical operator
-  * planned by [[GraftStrategy]] onto a dedicated physical
-  * [[AsOfJoinExec]], registered through `SparkSessionExtensions
-  * .injectPlannerStrategy` (graft.functions.GraftExtensions). Same
-  * contract, one fewer sort: the union-window plan sorts the CONCATENATED
-  * inputs (n_l + n_r rows) while the physical merge sorts each side
-  * separately and streams them once.
+/** Logical as-of join — the Catalyst node behind
+  * `graft.operators.AsOfJoin`, the engine's one as-of operator (SURVEY
+  * §2B E5/E19). [[GraftStrategy]], registered through
+  * `SparkSessionExtensions.injectPlannerStrategy`
+  * (graft.functions.GraftExtensions), plans it onto the streamed
+  * sorted-merge [[AsOfJoinExec]].
   *
   * Semantics: for every left row, the single right row with the same
   * key and the latest rightTime <= leftTime (backward) or the earliest
@@ -23,8 +17,7 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   * right side (left-outer shape). NULL keys and NULL timestamps never
   * match (SQL comparison semantics, matching DuckDB's ASOF JOIN).
   * Ties on (key, rightTime) resolve to the row with the largest
-  * orderable payload, matching `graft.operators.AsOfJoin`'s
-  * deterministic tie-break.
+  * orderable payload, in both directions.
   */
 case class AsOfJoinPlan(
     left: LogicalPlan,

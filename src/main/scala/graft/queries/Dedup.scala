@@ -907,7 +907,7 @@ object Dedup extends Catalog {
                CAST((CAST(sum(rec) AS BIGINT) * 1000000) // count(*) AS BIGINT)
                  AS recall_ppm
         FROM j GROUP BY 1"""),
-      scaleNote = "the ground-truth side is the expensive half and exists only for calibration — run it on a SAMPLE at 100 TB (the curve is a per-band proportion, so a uniform doc sample estimates it unbiased); the LSH side is q27's plan: one (band, key) candidate shuffle, signature computed in one codegen'd pass, and the report folds to ≤ 9 rows of integer counters whatever the corpus"),
+      scaleNote = "the ground-truth side is the expensive half and exists only for calibration — run it on a SAMPLE at 100 TB (the curve is a per-band proportion, so a uniform doc sample estimates it unbiased); the LSH side is q27's plan: one (band, key) candidate shuffle, signature computed in one codegen'd pass, and the report folds to ≤ 9 rows of integer counters whatever the corpus; the ground-truth join keys on the xxhash64 of each shingle, not the string, so by the birthday bound (n²/2^65 expected collisions) one 64-bit collision becomes expected at about 2^32.5 ≈ 6×10⁹ distinct shingles — a collision inflates that pair's inter (and so its j) and fails no gate: nothing here checks for it, only an oracle compare on the string-keyed truth would show it"),
 
     // ----- E12: both-geometry recall companion to q192 (r12) ---------
     // q192 calibrates the PORTABLE md5 4-band × 2-row family because
@@ -939,7 +939,7 @@ object Dedup extends Catalog {
               .as("recall_portable_ppm"),
             expr("CAST((n_rec_production * 1000000) DIV n_pairs AS BIGINT)")
               .as("recall_production_ppm")),
-      scaleNote = "the production half is exactly q27's shipping plan — one codegen'd minhash_bands pass, one (band, key) shuffle — so the calibration measures the geometry that runs at 100 TB, not a stand-in; the exact half is the same calibration-only cost q192 documents (uniform-sample it at scale: both curves are per-band proportions, unbiased under sampling); the report folds to ≤ 9 rows of integer counters, and the two recall columns side by side are the go/no-go artifact for a banding-geometry change"),
+      scaleNote = "the production half is exactly q27's shipping plan — one codegen'd minhash_bands pass, one (band, key) shuffle — so the calibration measures the geometry that runs at 100 TB, not a stand-in; the exact half is the same calibration-only cost q192 documents (uniform-sample it at scale: both curves are per-band proportions, unbiased under sampling), with q192's xxhash64 collision bound: one collision expected at about 2^32.5 ≈ 6×10⁹ distinct shingles, inflating that pair's inter without failing any gate; the report folds to ≤ 9 rows of integer counters, and the two recall columns side by side are the go/no-go artifact for a banding-geometry change"),
 
     // ----- E11/E12: winnowing fingerprints (MOSS) — r11 --------------
     // Schleimer, Wilkerson & Aiken 2003: CHARACTER-level copy

@@ -1805,40 +1805,16 @@ object Relational extends Catalog {
         FROM orders"""),
       scaleNote = "value-based frame evaluates with a sliding aggregate over the sorted partition — one shuffle on custkey, O(n) per partition; decimal accumulation + BIGINT-cents output (hash-portable)"),
 
-    // ----- E5+: as-of join (custom operator, graft.operators) --------
-    "q46_asof_join" -> Q(
-      fn = (s, d) => {
-        val e = t(s, d, "events")
-        val errors = e.filter(col("event_type") === "error")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val clicks = e.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts").as("click_ts"),
-            col("value").as("click_value"))
-        graft.operators.AsOfJoin
-          .asofJoin(errors, clicks, "user_id", "ts", "click_ts",
-            Seq("click_ts", "click_value"))
-          .filter(col("asof_click_ts").isNotNull) // inner as-of semantics
-          .select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("err_ts_us"),
-            unix_micros(col("asof_click_ts")).as("click_ts_us"),
-            col("asof_click_value").as("click_value"))
-      },
-      sql = Some("""
-        SELECT e.event_id, e.user_id,
-               epoch_us(e.ts::TIMESTAMP) AS err_ts_us,
-               epoch_us(c.ts::TIMESTAMP) AS click_ts_us,
-               c.value AS click_value
-        FROM (SELECT * FROM events WHERE event_type = 'error') e
-        ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
-          ON e.user_id = c.user_id AND e.ts >= c.ts"""),
-      scaleNote = "one-shuffle union-window as-of join (graft.operators.AsOfJoin) — never the per-key cross product a naive ts>=ts range join materializes"),
+    // ----- E5+: as-of join (graft.operators.AsOfJoin): each error
+    // matched to the LAST click at or before it ----------------------
+    "q46_asof_join" -> errorClickAsOf("backward"),
 
     // ----- point-in-time join against an SCD2 dimension -------------
     // The warehouse-join modality q87 (SCD2 build) points at: each
     // fact row joins the dimension VERSION valid at the fact's own
     // time. With contiguous validity intervals, PIT ≡ as-of backward
     // on valid_from — so the engine REUSES graft.operators.AsOfJoin
-    // (one-shuffle union-window, no per-key interval fan-out), while
+    // (streamed sorted-merge, no per-key interval fan-out), while
     // the oracle spells the textbook interval form (valid_from ≤ ts <
     // valid_to) — the gate proves the two formulations equivalent.
     // The versioned dimension derives deterministically from supplier
@@ -1887,7 +1863,7 @@ object Relational extends Catalog {
          AND l.l_shipdate >= h.valid_from
          AND (h.v = 2 OR l.l_shipdate < h.valid_to)
         GROUP BY h.v"""),
-      scaleNote = "PIT-as-as-of is the 100 TB form: one shuffle on the key, union-window, no interval fan-out — the naive interval join replicates each fact row per candidate version and filters (|versions|× the I/O); dimension history stays version-count-sized so at scale it is often broadcastable outright"),
+      scaleNote = "PIT-as-as-of is the 100 TB form: one hash exchange and one spillable sort per side on the key, then a streamed merge holding one buffered version row (graft.plans.AsOfJoinExec), no interval fan-out — the naive interval join replicates each fact row per candidate version and filters (|versions|× the I/O); dimension history stays version-count-sized. A version with a NULL valid_from never matches (DuckDB's ASOF rule); the derived valid_from and both suppkeys are never NULL"),
 
     // ----- SQL-string entry point (spark.sql, no DataFrame calls) ---
     // The second API surface: the whole query — scans included, via
@@ -1966,95 +1942,14 @@ object Relational extends Catalog {
 
     // ----- E5+: FORWARD as-of join ----------------------------------
     // The mirror of q46: each error matched to the FIRST click at or
-    // after it — "what did the user do next". Same one-shuffle
-    // union-window operator on reversed time order.
-    "q99_asof_forward" -> Q(
-      fn = (s, d) => {
-        val e = t(s, d, "events")
-        val errors = e.filter(col("event_type") === "error")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val clicks = e.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts").as("click_ts"),
-            col("value").as("click_value"))
-        graft.operators.AsOfJoin
-          .asofJoin(errors, clicks, "user_id", "ts", "click_ts",
-            Seq("click_ts", "click_value"), direction = "forward")
-          .filter(col("asof_click_ts").isNotNull) // inner as-of semantics
-          .select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("err_ts_us"),
-            unix_micros(col("asof_click_ts")).as("click_ts_us"),
-            col("asof_click_value").as("click_value"))
-      },
-      sql = Some("""
-        SELECT e.event_id, e.user_id,
-               epoch_us(e.ts::TIMESTAMP) AS err_ts_us,
-               epoch_us(c.ts::TIMESTAMP) AS click_ts_us,
-               c.value AS click_value
-        FROM (SELECT * FROM events WHERE event_type = 'error') e
-        ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
-          ON e.user_id = c.user_id AND e.ts <= c.ts"""),
-      scaleNote = "identical shuffle profile to q46 (one exchange on the key, carry-last over the reversed sort) — direction is a sort-order flag, not a different plan"),
+    // after it — "what did the user do next".
+    "q99_asof_forward" -> errorClickAsOf("forward"),
 
-    // ----- E5/E19: NATIVE as-of join (custom LogicalPlan + Strategy
-    // + SparkPlan via SparkSessionExtensions) ------------------------
-    // q46's exact query and oracle, through the other extension route:
-    // graft.plans.AsOfJoinPlan planned by GraftStrategy onto
-    // AsOfJoinExec's streamed sorted-merge. Green here means the
-    // whole-operator Catalyst surface computes the same rows DuckDB's
-    // native ASOF JOIN does.
-    "q121_asof_native" -> Q(
-      fn = (s, d) => {
-        val e = t(s, d, "events")
-        val errors = e.filter(col("event_type") === "error")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val clicks = e.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts").as("click_ts"),
-            col("value").as("click_value"))
-        graft.operators.NativeAsOfJoin
-          .asofJoin(errors, clicks, "user_id", "ts", "click_ts",
-            Seq("click_ts", "click_value"))
-          .filter(col("asof_click_ts").isNotNull) // inner as-of semantics
-          .select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("err_ts_us"),
-            unix_micros(col("asof_click_ts")).as("click_ts_us"),
-            col("asof_click_value").as("click_value"))
-      },
-      sql = Some("""
-        SELECT e.event_id, e.user_id,
-               epoch_us(e.ts::TIMESTAMP) AS err_ts_us,
-               epoch_us(c.ts::TIMESTAMP) AS click_ts_us,
-               c.value AS click_value
-        FROM (SELECT * FROM events WHERE event_type = 'error') e
-        ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
-          ON e.user_id = c.user_id AND e.ts >= c.ts"""),
-      scaleNote = "same two key exchanges as q46 but each side sorts separately (spillable SortExec) and the merge streams with ONE buffered row — no union-wide window frame; output keeps the left side's hash partitioning so downstream keyed ops skip their exchange (plan-asserted in NativeAsOfJoinSpec)"),
-
-    "q122_asof_native_forward" -> Q(
-      fn = (s, d) => {
-        val e = t(s, d, "events")
-        val errors = e.filter(col("event_type") === "error")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val clicks = e.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts").as("click_ts"),
-            col("value").as("click_value"))
-        graft.operators.NativeAsOfJoin
-          .asofJoin(errors, clicks, "user_id", "ts", "click_ts",
-            Seq("click_ts", "click_value"), direction = "forward")
-          .filter(col("asof_click_ts").isNotNull) // inner as-of semantics
-          .select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("err_ts_us"),
-            unix_micros(col("asof_click_ts")).as("click_ts_us"),
-            col("asof_click_value").as("click_value"))
-      },
-      sql = Some("""
-        SELECT e.event_id, e.user_id,
-               epoch_us(e.ts::TIMESTAMP) AS err_ts_us,
-               epoch_us(c.ts::TIMESTAMP) AS click_ts_us,
-               c.value AS click_value
-        FROM (SELECT * FROM events WHERE event_type = 'error') e
-        ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
-          ON e.user_id = c.user_id AND e.ts <= c.ts"""),
-      scaleNote = "forward direction inside the same physical operator: the right side's required ordering flips only the payload tie-break columns, the merge takes the first qualifying row instead of the last — same O(n_l + n_r) streamed pass"),
+    // ----- E5/E19: q46/q99 registered again under the names of the
+    // Catalyst extension route every as-of query takes (AsOfJoinPlan +
+    // GraftStrategy + AsOfJoinExec via SparkSessionExtensions) --------
+    "q121_asof_native" -> errorClickAsOf("backward"),
+    "q122_asof_native_forward" -> errorClickAsOf("forward"),
 
     // ----- E4: salted skew join through the oracle gate -------------
     // operators/SkewJoin under planted skew: half of lineitem's rows
@@ -2224,6 +2119,49 @@ object Relational extends Catalog {
         FROM ch GROUP BY ROLLUP (channel, nation, yr)"""),
       scaleNote = "rollup over a union costs ONE extra plan node vs q254: Expand replicates each branch's rows into the 4 grouping sets map-side and the same single two-phase aggregate folds them (PlanSpec pins exactly one Expand + two HashAggregates above the one Union) — at 100 TB this is 4× the aggregate's map-side input for zero extra scans, shuffles, or passes, which is why warehouse reports ask for subtotals in the statement instead of re-querying per grain; exact e4 integers keep every subtotal hash-portable, and the n_sales beside the sum makes each rollup row self-auditing (a subtotal must equal the sum of its children — checkable downstream in one pass)"),
   )
+
+  /** q46/q121 (backward) and q99/q122 (forward): each error event
+    * matched to the latest click at or before it, or the earliest click
+    * at or after it, of the same user — inner as-of semantics against
+    * DuckDB's native ASOF JOIN.
+    */
+  private def errorClickAsOf(direction: String): Q = {
+    val cmp = if (direction == "forward") "<=" else ">="
+    Q(
+      fn = (s, d) => {
+        val e = t(s, d, "events")
+        val errors = e.filter(col("event_type") === "error")
+          .select(col("event_id"), col("user_id"), col("ts"))
+        val clicks = e.filter(col("event_type") === "click")
+          .select(col("user_id"), col("ts").as("click_ts"),
+            col("value").as("click_value"))
+        graft.operators.AsOfJoin
+          .asofJoin(errors, clicks, "user_id", "ts", "click_ts",
+            Seq("click_ts", "click_value"), direction)
+          .filter(col("asof_click_ts").isNotNull) // inner as-of semantics
+          .select(col("event_id"), col("user_id"),
+            unix_micros(col("ts")).as("err_ts_us"),
+            unix_micros(col("asof_click_ts")).as("click_ts_us"),
+            col("asof_click_value").as("click_value"))
+      },
+      sql = Some(s"""
+        SELECT e.event_id, e.user_id,
+               epoch_us(e.ts::TIMESTAMP) AS err_ts_us,
+               epoch_us(c.ts::TIMESTAMP) AS click_ts_us,
+               c.value AS click_value
+        FROM (SELECT * FROM events WHERE event_type = 'error') e
+        ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
+          ON e.user_id = c.user_id AND e.ts $cmp c.ts"""),
+      scaleNote = "streamed as-of merge (graft.plans.AsOfJoinExec): one " +
+        "hash exchange and one spillable sort per side, then one pass " +
+        "over both sorted partitions holding ONE buffered right row — " +
+        "no union-wide window frame, never the per-key cross product a " +
+        s"naive ts $cmp ts range join materializes; the output keeps the " +
+        "left side's hash partitioning, so an op keyed on user_id " +
+        "downstream skips its exchange. A click with a NULL ts or " +
+        "user_id never matches (DuckDB's ASOF rule); both columns are " +
+        "null-free in events")
+  }
 
   /** q254/q257's shared multi-channel fact union: the 'store' lineage
     * (1998+ orders x lineitem through customer->nation) and the

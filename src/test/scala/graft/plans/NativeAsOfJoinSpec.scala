@@ -7,12 +7,13 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{AsOfJoin, NativeAsOfJoin}
+import graft.operators.AsOfJoin
 
-/** The native-plan as-of join (AsOfJoinPlan → GraftStrategy →
-  * AsOfJoinExec) against its composed twin and against hand-computed
-  * truth — plus the plan-shape assertions that make it a real physical
-  * operator, not a decorated shuffle.
+/** The native-plan as-of join (graft.operators.AsOfJoin → AsOfJoinPlan
+  * → GraftStrategy → AsOfJoinExec) against hand-computed truth and a
+  * brute-force per-key reference over the collected rows — plus the
+  * plan-shape assertions that make it a real physical operator, not a
+  * decorated shuffle.
   */
 class NativeAsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -27,8 +28,24 @@ class NativeAsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     ("b", 9L, 4.0), ("d", 1L, 9.9)
   ).toDF("acct", "q_ts", "px")
 
+  /** Brute-force as-of over collected rows: for each left (key, time),
+    * the same-key right rows on the matching side of the time, the
+    * nearest time first, then the largest payload. */
+  private def bruteForce[K, P: Ordering](
+      lefts: Seq[(K, Long)], rights: Seq[(K, Long, P)],
+      forward: Boolean): Seq[Option[(Long, P)]] =
+    lefts.map { case (k, ts) =>
+      val cands = rights.collect {
+        case (rk, rts, p) if rk == k && (if (forward) rts >= ts else rts <= ts) =>
+          (rts, p)
+      }
+      if (cands.isEmpty) None
+      else Some(cands.maxBy { case (rts, p) =>
+        (if (forward) -rts else rts, p) })
+    }
+
   test("native backward: latest right <= left time, per key, left-outer") {
-    val out = NativeAsOfJoin.asofJoin(trades, quotes, "acct", "ts", "q_ts",
+    val out = AsOfJoin.asofJoin(trades, quotes, "acct", "ts", "q_ts",
       Seq("q_ts", "px"))
       .select("trade_id", "asof_px").as[(String, Option[Double])]
       .collect().toMap
@@ -41,7 +58,7 @@ class NativeAsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("native forward: earliest right >= left time, per key") {
-    val out = NativeAsOfJoin.asofJoin(trades, quotes, "acct", "ts", "q_ts",
+    val out = AsOfJoin.asofJoin(trades, quotes, "acct", "ts", "q_ts",
       Seq("q_ts", "px"), direction = "forward")
       .select("trade_id", "asof_px").as[(String, Option[Double])]
       .collect().toMap
@@ -53,21 +70,16 @@ class NativeAsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "t5" -> None))
   }
 
-  test("duplicate right timestamps resolve to the payload-max row, both directions, matching the composed operator") {
+  test("duplicate right timestamps resolve to the payload-max row in both directions") {
     val dupQuotes = Seq(
       ("a", 10L, 1.0), ("a", 10L, 7.0), ("a", 10L, 3.0)
     ).toDF("acct", "q_ts", "px")
     for (dir <- Seq("backward", "forward")) {
-      val native = NativeAsOfJoin.asofJoin(
+      val px = AsOfJoin.asofJoin(
         trades.filter($"trade_id" === "t1"), dupQuotes,
         "acct", "ts", "q_ts", Seq("px"), dir)
         .select("asof_px").as[Option[Double]].head()
-      val composed = AsOfJoin.asofJoin(
-        trades.filter($"trade_id" === "t1"), dupQuotes,
-        "acct", "ts", "q_ts", Seq("px"), dir)
-        .select("asof_px").as[Option[Double]].head()
-      assert(native === Some(7.0), s"dir=$dir")
-      assert(native === composed, s"dir=$dir")
+      assert(px === Some(7.0), s"dir=$dir")
     }
   }
 
@@ -82,14 +94,14 @@ class NativeAsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       (Some("a"), None: Option[Long], 99.0), // null ts: must never match
       (None: Option[String], Some(1L), 50.0) // null key: must never match
     ).toDF("k", "q_ts", "px")
-    val out = NativeAsOfJoin.asofJoin(l, r, "k", "ts", "q_ts", Seq("px"))
+    val out = AsOfJoin.asofJoin(l, r, "k", "ts", "q_ts", Seq("px"))
       .select("tag", "asof_px").as[(String, Option[Double])]
       .collect().toMap
     assert(out === Map(
       "ok" -> Some(1.0), "nullkey" -> None, "nullts" -> None))
   }
 
-  test("randomized parity with the composed operator (20 seeds, both directions, self-join shape)") {
+  test("randomized parity with a brute-force per-key reference (20 seeds, both directions)") {
     for (seed <- 1 to 20; dir <- Seq("backward", "forward")) {
       val rnd = new Random(seed)
       // small key space + small time space → dense ties and misses
@@ -99,15 +111,16 @@ class NativeAsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         (rnd.nextInt(8).toString, rnd.nextInt(30).toLong, rnd.nextDouble()))
       val l = lRows.toDF("k", "ts", "tag")
       val r = rRows.toDF("k", "q_ts", "px")
-      val native = NativeAsOfJoin
+      val got = AsOfJoin
         .asofJoin(l, r, "k", "ts", "q_ts", Seq("q_ts", "px"), dir)
         .select("k", "ts", "tag", "asof_q_ts", "asof_px")
-        .collect().map(_.toSeq).sortBy(_.mkString("|"))
-      val composed = AsOfJoin
-        .asofJoin(l, r, "k", "ts", "q_ts", Seq("q_ts", "px"), dir)
-        .select("k", "ts", "tag", "asof_q_ts", "asof_px")
-        .collect().map(_.toSeq).sortBy(_.mkString("|"))
-      assert(native === composed, s"seed=$seed dir=$dir")
+        .as[(String, Long, Int, Option[Long], Option[Double])]
+        .collect().toSeq.sortBy(_.toString)
+      val want = lRows.zip(bruteForce(lRows.map(x => (x._1, x._2)), rRows,
+          forward = dir == "forward"))
+        .map { case ((k, ts, tag), m) => (k, ts, tag, m.map(_._1), m.map(_._2)) }
+        .sortBy(_.toString)
+      assert(got === want, s"seed=$seed dir=$dir")
     }
   }
 
@@ -117,20 +130,26 @@ class NativeAsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .select($"event_id", $"user_id", $"ts")
     val clicks = e.filter($"event_type" === "click")
       .select($"user_id", $"ts".as("click_ts"), $"value".as("click_value"))
-    val native = NativeAsOfJoin.asofJoin(
+    val got = AsOfJoin.asofJoin(
       errors, clicks, "user_id", "ts", "click_ts",
       Seq("click_ts", "click_value"))
-    val composed = AsOfJoin.asofJoin(
-      errors, clicks, "user_id", "ts", "click_ts",
-      Seq("click_ts", "click_value"))
-    assert(native.collect().map(_.toSeq).sortBy(_.mkString("|")) ===
-      composed.collect().map(_.toSeq).sortBy(_.mkString("|")))
+      .select($"event_id", unix_micros($"asof_click_ts"), $"asof_click_value")
+      .as[(Long, Option[Long], Option[Double])]
+      .collect().map(r => r._1 -> r._2.map(ts => (ts, r._3))).toMap
+    val errs = errors.select($"event_id", $"user_id", unix_micros($"ts"))
+      .as[(Long, Long, Long)].collect().toSeq
+    val cks = clicks.select($"user_id", unix_micros($"click_ts"), $"click_value")
+      .as[(Long, Long, Option[Double])].collect().toSeq
+    val want = errs.map(_._1).zip(bruteForce(errs.map(x => (x._2, x._3)),
+        cks, forward = false)).toMap
+    assert(got.values.count(_.nonEmpty) > 0)
+    assert(got === want)
   }
 
   test("plan shape: AsOfJoinExec present, exactly one exchange + one sort per side, output reusable") {
     val l = (1 to 100).map(i => (i % 7, i.toLong, i)).toDF("k", "ts", "v")
     val r = (1 to 100).map(i => (i % 5, i.toLong, i * 1.0)).toDF("k", "q_ts", "px")
-    val df = NativeAsOfJoin.asofJoin(l, r, "k", "ts", "q_ts", Seq("px"))
+    val df = AsOfJoin.asofJoin(l, r, "k", "ts", "q_ts", Seq("px"))
     df.collect()
     val plan = df.queryExecution.executedPlan
     val execs = collect(plan) { case e: AsOfJoinExec => e }

@@ -117,15 +117,38 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(600))
   }
 
-  test("q46: as-of join is one window over one shuffle, no range-join blowup") {
-    val p = plan("q46_asof_join")
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      p.take(600))
-    assert(p.contains("Window"), "expected the union-window plan")
-    // exactly one exchange feeds the window (plus AQE wrappers)
-    val exchanges = p.linesIterator.count(l =>
-      l.contains("Exchange hashpartitioning"))
-    assert(exchanges == 1, s"expected 1 shuffle, got $exchanges")
+  /** `name`'s as-of join runs on ONE streamed AsOfJoinExec fed by
+    * exactly one hash exchange per side: no union-window, no range-join
+    * blowup. */
+  private def assertStreamedAsOf(name: String): Unit = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{
+      BroadcastNestedLoopJoinExec, CartesianProductExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val nodes = planNodes(name)
+    val shown = nodes.head.toString.take(1600)
+    assert(!nodes.exists(n => n.isInstanceOf[CartesianProductExec] ||
+      n.isInstanceOf[BroadcastNestedLoopJoinExec]), shown)
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]), shown)
+    val execs = nodes.collect { case e: graft.plans.AsOfJoinExec => e }
+    assert(execs.size == 1, shown)
+    execs.head.children.foreach { side =>
+      val hashExchanges = expandPlan(side).count {
+        case e: ShuffleExchangeExec =>
+          e.outputPartitioning.isInstanceOf[HashPartitioning]
+        case _ => false
+      }
+      assert(hashExchanges == 1, s"expected 1 hash exchange per side:\n$shown")
+    }
+  }
+
+  test("q46: as-of join is one AsOfJoinExec over one hash exchange per side, no range-join blowup") {
+    assertStreamedAsOf("q46_asof_join")
+  }
+
+  test("q152: the point-in-time join is one AsOfJoinExec over one hash exchange per side") {
+    assertStreamedAsOf("q152_pit_scd2_join")
   }
 
   test("q48: range frame runs as a single window after one shuffle") {
