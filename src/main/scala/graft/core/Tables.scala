@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Canonical access to the driver-provided test tables
@@ -86,6 +86,20 @@ object Tables {
           col(tsCol).cast(org.apache.spark.sql.types.TimestampType))
       case _ => raw
     }
+
+  /** Spreads a frame across the session's `spark.sql.shuffle.partitions`
+    * by hashing `keys` — the one spelling of the scan spread. Every test
+    * table is a single parquet row group, which Spark cannot split, so
+    * its scan is ONE task and all the per-row work above it runs
+    * single-threaded unless something re-partitions it. The count is
+    * explicit (REPARTITION_BY_NUM) because AQE sizes a count-less
+    * repartition by its input bytes and would coalesce a few MB of
+    * pre-explode text back to one partition; it cannot see the row
+    * fan-out that comes after. Callers state only why their key fits.
+    */
+  def spread(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, keys: _*)
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

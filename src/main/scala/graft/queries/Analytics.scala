@@ -260,15 +260,10 @@ object Analytics extends Catalog {
       math.min(t(s, d, "supplier").count() * 5, Int.MaxValue.toLong).toInt
     val li = t(s, d, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"))
-    // the probe side of the co-occurrence self-join is repartitioned
-    // off the single-row-group scan (r17, guide §2.5): the build side
-    // broadcasts, so without this the probe — the ~4x pair fanout and
-    // its partial (u,v) aggregation — ran in ONE scan task; explicit
-    // count so AQE cannot coalesce the pre-fanout ~10 MB to one
-    // partition (q250's REPARTITION_BY_NUM stance)
-    li.repartition(
-        s.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("l_orderkey"))
+    // the probe side of the co-occurrence self-join is spread (r17):
+    // the build side broadcasts, so without this the probe — the ~4x
+    // pair fanout and its partial (u,v) aggregation — ran in ONE task
+    Tables.spread(li, col("l_orderkey"))
       .as("a").join(li.as("b"),
         col("a.l_orderkey") === col("b.l_orderkey") &&
         col("a.l_suppkey") < col("b.l_suppkey"))
@@ -339,6 +334,15 @@ object Analytics extends Catalog {
                       THEN u.o_totalprice ELSE b.o_totalprice END AS o_totalprice
           FROM base b FULL OUTER JOIN delta u ON b.o_orderkey = u.o_orderkey)"""
 
+  /** q185/q188's shared oracle: the per-status view over the merged
+    * orders, one-shot (q188 folds the same view from batch partials) */
+  private val OrdersMergedAggSql: String = s"""
+        WITH $OrdersMergedCtes
+        SELECT o_orderstatus, count(*) AS n,
+               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+                 AS total_cents
+        FROM merged GROUP BY 1"""
+
   /** q95's DuckDB mirror (diff-class counts over the full-outer
     * reconciliation join), shared VERBATIM with its hashed spelling
     * q249 — the carry-the-oracle discipline.
@@ -370,13 +374,10 @@ object Analytics extends Catalog {
     // prePartition: stage the edges into HashPartitioning(u) ONCE —
     // localCheckpoint preserves outputPartitioning, so every round's
     // join finds its distribution already satisfied on the edge side.
-    // The partition count is EXPLICIT (REPARTITION_BY_NUM): a keyless
-    // repartition is an AQE-coalescible shuffle, and a coalesced
-    // stage's partitioning does not survive the checkpoint — the
-    // silent way to lose the whole point of this spelling
-    val ew = (if (prePartition)
-        ewBase.repartition(
-          s.conf.get("spark.sql.shuffle.partitions").toInt, col("u"))
+    // The spread's explicit count matters here: a coalesced stage's
+    // partitioning does not survive the checkpoint — the silent way
+    // to lose the whole point of this spelling
+    val ew = (if (prePartition) Tables.spread(ewBase, col("u"))
       else ewBase)
       .localCheckpoint()
     // q113 spelling: the node-sized rank frame BROADCASTS into the
@@ -405,13 +406,8 @@ object Analytics extends Catalog {
       s: SparkSession, d: String): DataFrame = {
     val li = t(s, d, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"))
-    // probe-side repartition off the single-row-group scan — same
-    // rationale as sparsifiedSupplierEdges (r17, guide §2.5): the
-    // broadcast join's probe fanout + partial agg otherwise run in
-    // ONE task
-    val e = li.repartition(
-        s.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("l_orderkey"))
+    // probe-side spread — same reason as sparsifiedSupplierEdges
+    val e = Tables.spread(li, col("l_orderkey"))
       .as("a").join(li.as("b"),
         col("a.l_orderkey") === col("b.l_orderkey") &&
         col("a.l_suppkey") =!= col("b.l_suppkey"))
@@ -608,6 +604,156 @@ object Analytics extends Catalog {
     (1 to 39).map(i => s"WHEN rem >= ${1L << (39 - i)} THEN $i")
       .mkString("CASE ", " ", " ELSE 40 END")
 
+  /** q203's one-shot DuckDB profile, shared VERBATIM with its
+    * two-batch fold q208 (the ZipfOracleSql discipline: same oracle,
+    * operational spelling — the gate is the fold theorem itself).
+    */
+  private val ProfileOracleSql: String = """
+        WITH a AS (
+          SELECT count(*) AS n,
+                 CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END)
+                   AS BIGINT) AS nn_st,
+                 CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS nd_st,
+                 CAST(min(o_orderstatus) AS VARCHAR) AS mn_st,
+                 CAST(max(o_orderstatus) AS VARCHAR) AS mx_st,
+                 CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
+                   AS BIGINT) AS nn_ck,
+                 CAST(count(DISTINCT o_custkey) AS BIGINT) AS nd_ck,
+                 CAST(min(o_custkey) AS VARCHAR) AS mn_ck,
+                 CAST(max(o_custkey) AS VARCHAR) AS mx_ck,
+                 CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END)
+                   AS BIGINT) AS nn_tp,
+                 CAST(count(DISTINCT CAST(round(o_totalprice * 100) AS BIGINT))
+                   AS BIGINT) AS nd_tp,
+                 CAST(min(CAST(round(o_totalprice * 100) AS BIGINT))
+                   AS VARCHAR) AS mn_tp,
+                 CAST(max(CAST(round(o_totalprice * 100) AS BIGINT))
+                   AS VARCHAR) AS mx_tp,
+                 CAST(sum(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END)
+                   AS BIGINT) AS nn_od,
+                 CAST(count(DISTINCT epoch_us(o_orderdate)) AS BIGINT) AS nd_od,
+                 CAST(min(epoch_us(o_orderdate)) AS VARCHAR) AS mn_od,
+                 CAST(max(epoch_us(o_orderdate)) AS VARCHAR) AS mx_od
+          FROM orders)
+        SELECT 'o_orderstatus' AS col_name, n, nn_st AS n_nulls,
+               nd_st AS n_distinct, mn_st AS min_repr, mx_st AS max_repr
+        FROM a
+        UNION ALL
+        SELECT 'o_custkey', n, nn_ck, nd_ck, mn_ck, mx_ck FROM a
+        UNION ALL
+        SELECT 'o_totalprice_cents', n, nn_tp, nd_tp, mn_tp, mx_tp FROM a
+        UNION ALL
+        SELECT 'o_orderdate_us', n, nn_od, nd_od, mn_od, mx_od FROM a"""
+
+  /** q196/q198's robust outlier gate over the planted ×100 order
+    * cents: per status the median, the median absolute deviation, and
+    * the rows beyond 3 MADs. `median` spells the Spark median of a
+    * column — exact `percentile` (q196) or the GK sketch (q198).
+    */
+  private def robustGate(
+      s: SparkSession, d: String, median: String => String): DataFrame = {
+    val c = t(s, d, "orders")
+      .select(col("o_orderstatus").as("st"),
+        (round(col("o_totalprice") * 100).cast("long") *
+          when(col("o_orderkey") % 501 === 0, 100L).otherwise(1L))
+          .as("cents"))
+      .localCheckpoint() // one cents frame feeds all three folds
+    val m = c.groupBy(col("st"))
+      .agg(expr(median("cents")).as("med"))
+    val a = c.join(broadcast(m), "st")
+      .select(col("st"), col("cents"), col("med"),
+        abs(col("cents") - col("med")).as("ad"))
+    val md = a.groupBy(col("st"))
+      .agg(expr(median("ad")).as("mad"))
+    a.join(broadcast(md), "st")
+      .groupBy(col("st"))
+      .agg(count(lit(1)).as("n"),
+        first(col("med")).as("med_cents"),
+        first(col("mad")).as("mad_cents"),
+        sum(when(col("ad") > col("mad") * 3, 1L).otherwise(0L))
+          .as("n_outliers"))
+  }
+
+  /** robustGate's DuckDB mirror; `median` spells the DuckDB median */
+  private def robustGateSql(median: String => String): String = s"""
+        WITH c AS (SELECT o_orderstatus AS st,
+                          CAST(round(o_totalprice * 100) AS BIGINT)
+                            * CASE WHEN o_orderkey % 501 = 0
+                                   THEN 100 ELSE 1 END AS cents
+                   FROM orders),
+        m AS (SELECT st, ${median("cents")} AS med FROM c GROUP BY 1),
+        a AS (SELECT c.st, cents, med, abs(cents - med) AS ad
+              FROM c JOIN m USING (st)),
+        md AS (SELECT st, ${median("ad")} AS mad FROM a GROUP BY 1)
+        SELECT a.st, count(*) AS n,
+               any_value(a.med) AS med_cents,
+               any_value(md.mad) AS mad_cents,
+               CAST(sum(CASE WHEN ad > 3 * mad THEN 1 ELSE 0 END) AS BIGINT)
+                 AS n_outliers
+        FROM a JOIN md USING (st) GROUP BY 1"""
+
+  /** q205/q213's daily event counts (event_type, d, x) with a planted
+    * weekly season: on one weekday each type gets twice its mean added */
+  private def seasonalDaily(s: SparkSession, d: String): DataFrame = {
+    val daily0 = t(s, d, "events")
+      .select(col("event_type"),
+        expr("unix_micros(date_trunc('day', ts))").as("d"))
+      .groupBy(col("event_type"), col("d"))
+      .agg(count(lit(1)).as("x0"))
+      .localCheckpoint() // one daily frame feeds the mean AND the series
+    val ref = daily0.groupBy(col("event_type"))
+      .agg(expr("sum(x0) DIV count(1)").as("mu"))
+    daily0.join(broadcast(ref), "event_type")
+      .select(col("event_type"), col("d"),
+        (col("x0") + when(
+          (col("d") / lit(86400000000L) + 4) % 7 === 6, col("mu") * 2)
+          .otherwise(0L)).as("x"))
+  }
+
+  /** the planted-drift monitors' daily feed (q194's family): per event
+    * type and day `d` (epoch µs) the event count, named by `x`, with
+    * the corpus midpoint `cut` broadcast onto every row
+    */
+  private def driftCounts(s: SparkSession, d: String, x: String): DataFrame = {
+    val ev = t(s, d, "events").select(col("event_type"),
+      unix_micros(date_trunc("day", col("ts"))).as("d"))
+    val span = ev.agg(expr("(min(d) + max(d)) DIV 2").as("cut"))
+    ev.groupBy(col("event_type"), col("d"))
+      .agg(count(lit(1)).as(x))
+      .crossJoin(broadcast(span))
+  }
+
+  /** the plant itself, as column `x`: click volume doubles from `cut` on */
+  private def plantedDrift(x: String): Column =
+    when(col("event_type") === "click" && col("d") >= col("cut"),
+      col(x) * 2).otherwise(col(x)).as("x")
+
+  /** q194/q207's (event_type, d, cut, x), shared with their streaming
+    * twins q199/q212 */
+  private[queries] def driftDaily(s: SparkSession, d: String): DataFrame =
+    driftCounts(s, d, "x")
+      .select(col("event_type"), col("d"), col("cut"), plantedDrift("x"))
+      .localCheckpoint() // one daily frame feeds the reference AND the scan
+
+  /** q206/q218/q226's (event_type, dd, x), dd the day number */
+  private def driftDays(s: SparkSession, d: String, x: String): DataFrame =
+    driftCounts(s, d, x).select(col("event_type"),
+      expr("d DIV 86400000000").as("dd"), plantedDrift(x))
+
+  /** driftDays' DuckDB mirror: the ev/span/daily CTEs q206, q218 and
+    * q226 open with; the caller appends its CTEs and SELECT */
+  private val DriftDaysSql: String = """
+        WITH ev AS (SELECT event_type,
+                           epoch_us(date_trunc('day', ts::TIMESTAMP)) AS d
+                    FROM events),
+        span AS (SELECT (min(d) + max(d)) // 2 AS cut FROM ev),
+        daily AS (
+          SELECT event_type, d // 86400000000 AS dd,
+                 CAST(CASE WHEN event_type = 'click'
+                             AND d >= (SELECT cut FROM span)
+                      THEN count(*) * 2 ELSE count(*) END AS BIGINT) AS x
+          FROM ev GROUP BY event_type, d)"""
+
   override def queries: Map[String, Q] = Map(
 
     // ----- PIVOT: wide conditional aggregation ----------------------
@@ -758,16 +904,7 @@ object Analytics extends Catalog {
     // mirrored in the oracle.
     "q194_cusum_drift" -> Q(
       fn = (s, d) => {
-        val ev = t(s, d, "events").select(col("event_type"),
-          unix_micros(date_trunc("day", col("ts"))).as("d"))
-        val span = ev.agg(expr("(min(d) + max(d)) DIV 2").as("cut"))
-        val daily = ev.groupBy(col("event_type"), col("d"))
-          .agg(count(lit(1)).as("x"))
-          .crossJoin(broadcast(span))
-          .select(col("event_type"), col("d"), col("cut"),
-            when(col("event_type") === "click" && col("d") >= col("cut"),
-              col("x") * 2).otherwise(col("x")).as("x"))
-          .localCheckpoint() // one daily frame feeds the reference AND the scan
+        val daily = driftDaily(s, d)
         val ref = daily.filter(col("d") < col("cut"))
           .groupBy(col("event_type"))
           .agg(expr("sum(x) DIV count(1)").as("mu"))
@@ -805,16 +942,7 @@ object Analytics extends Catalog {
     // emitted columns are the exact integers, never the double.
     "q206_theil_sen_trend" -> Q(
       fn = (s, d) => {
-        val ev = t(s, d, "events").select(col("event_type"),
-          unix_micros(date_trunc("day", col("ts"))).as("d"))
-        val span = ev.agg(expr("(min(d) + max(d)) DIV 2").as("cut"))
-        val daily = ev.groupBy(col("event_type"), col("d"))
-          .agg(count(lit(1)).as("x"))
-          .crossJoin(broadcast(span))
-          .select(col("event_type"),
-            expr("d DIV 86400000000").as("dd"),
-            when(col("event_type") === "click" && col("d") >= col("cut"),
-              col("x") * 2).otherwise(col("x")).as("x"))
+        val daily = driftDays(s, d, "x")
           .localCheckpoint() // one daily frame feeds both pair sides
         val pairs = daily.as("a").join(daily.as("b"),
             col("a.event_type") === col("b.event_type") &&
@@ -838,17 +966,7 @@ object Analytics extends Catalog {
             col("num").as("med_slope_num"), col("den").as("med_slope_den"),
             (col("num") > 0).cast("long").as("rising"))
       },
-      sql = Some("""
-        WITH ev AS (SELECT event_type,
-                           epoch_us(date_trunc('day', ts::TIMESTAMP)) AS d
-                    FROM events),
-        span AS (SELECT (min(d) + max(d)) // 2 AS cut FROM ev),
-        daily AS (
-          SELECT event_type, d // 86400000000 AS dd,
-                 CAST(CASE WHEN event_type = 'click'
-                             AND d >= (SELECT cut FROM span)
-                      THEN count(*) * 2 ELSE count(*) END AS BIGINT) AS x
-          FROM ev GROUP BY event_type, d),
+      sql = Some(DriftDaysSql + """,
         pairs AS (
           SELECT a.event_type AS event_type,
                  b.x - a.x AS num, b.dd - a.dd AS den
@@ -885,16 +1003,7 @@ object Analytics extends Catalog {
     // says HOW FAST, q218 says WHETHER to believe it.
     "q218_mann_kendall_test" -> Q(
       fn = (s, d) => {
-        val ev = t(s, d, "events").select(col("event_type"),
-          unix_micros(date_trunc("day", col("ts"))).as("d"))
-        val span = ev.agg(expr("(min(d) + max(d)) DIV 2").as("cut"))
-        val daily = ev.groupBy(col("event_type"), col("d"))
-          .agg(count(lit(1)).as("x0"))
-          .crossJoin(broadcast(span))
-          .select(col("event_type"),
-            expr("d DIV 86400000000").as("dd"),
-            when(col("event_type") === "click" && col("d") >= col("cut"),
-              col("x0") * 2).otherwise(col("x0")).as("x"))
+        val daily = driftDays(s, d, "x0")
           .localCheckpoint() // one daily frame feeds S, n AND the ties
         val sStat = daily.as("a").join(daily.as("b"),
             col("a.event_type") === col("b.event_type") &&
@@ -928,17 +1037,7 @@ object Analytics extends Catalog {
                 625L * 18L > lit(2401L) * col("varnum"))
               .cast("long").as("significant"))
       },
-      sql = Some("""
-        WITH ev AS (SELECT event_type,
-                           epoch_us(date_trunc('day', ts::TIMESTAMP)) AS d
-                    FROM events),
-        span AS (SELECT (min(d) + max(d)) // 2 AS cut FROM ev),
-        daily AS (
-          SELECT event_type, d // 86400000000 AS dd,
-                 CAST(CASE WHEN event_type = 'click'
-                             AND d >= (SELECT cut FROM span)
-                      THEN count(*) * 2 ELSE count(*) END AS BIGINT) AS x
-          FROM ev GROUP BY event_type, d),
+      sql = Some(DriftDaysSql + """,
         pairs AS (
           SELECT a.event_type AS event_type,
                  CAST(CASE WHEN b.x > a.x THEN 1
@@ -988,16 +1087,7 @@ object Analytics extends Catalog {
     // SIGN is recovered by the sample at all three.
     "q226_pair_sampled_trend" -> Q(
       fn = (s, d) => {
-        val ev = t(s, d, "events").select(col("event_type"),
-          unix_micros(date_trunc("day", col("ts"))).as("d"))
-        val span = ev.agg(expr("(min(d) + max(d)) DIV 2").as("cut"))
-        val daily = ev.groupBy(col("event_type"), col("d"))
-          .agg(count(lit(1)).as("x0"))
-          .crossJoin(broadcast(span))
-          .select(col("event_type"),
-            expr("d DIV 86400000000").as("dd"),
-            when(col("event_type") === "click" && col("d") >= col("cut"),
-              col("x0") * 2).otherwise(col("x0")).as("x"))
+        val daily = driftDays(s, d, "x0")
           .localCheckpoint() // feeds idx, the samples AND the exact witness
         // day index per key: a window over the bounded daily frame
         // (|days| rows/key — q206's own exchange), never the corpus
@@ -1063,17 +1153,7 @@ object Analytics extends Catalog {
               .cast("long").as("err_ok"),
             col("num").as("med_est_num"), col("den").as("med_est_den"))
       },
-      sql = Some(s"""
-        WITH ev AS (SELECT event_type,
-                           epoch_us(date_trunc('day', ts::TIMESTAMP)) AS d
-                    FROM events),
-        span AS (SELECT (min(d) + max(d)) // 2 AS cut FROM ev),
-        daily AS (
-          SELECT event_type, d // 86400000000 AS dd,
-                 CAST(CASE WHEN event_type = 'click'
-                             AND d >= (SELECT cut FROM span)
-                      THEN count(*) * 2 ELSE count(*) END AS BIGINT) AS x
-          FROM ev GROUP BY event_type, d),
+      sql = Some(DriftDaysSql + s""",
         idx AS (SELECT event_type, dd, x,
                        row_number() OVER (PARTITION BY event_type
                          ORDER BY dd) - 1 AS idx
@@ -1155,16 +1235,7 @@ object Analytics extends Catalog {
     "q207_ewma_control_chart" -> Q(
       fn = (s, d) => {
         import s.implicits._
-        val ev = t(s, d, "events").select(col("event_type"),
-          unix_micros(date_trunc("day", col("ts"))).as("d"))
-        val span = ev.agg(expr("(min(d) + max(d)) DIV 2").as("cut"))
-        val daily = ev.groupBy(col("event_type"), col("d"))
-          .agg(count(lit(1)).as("x"))
-          .crossJoin(broadcast(span))
-          .select(col("event_type"), col("d"), col("cut"),
-            when(col("event_type") === "click" && col("d") >= col("cut"),
-              col("x") * 2).otherwise(col("x")).as("x"))
-          .localCheckpoint() // one daily frame feeds the reference AND the scan
+        val daily = driftDaily(s, d)
         val ref = daily.filter(col("d") < col("cut"))
           .groupBy(col("event_type"))
           .agg(expr("sum(x) DIV count(1)").as("mu"),
@@ -1265,19 +1336,7 @@ object Analytics extends Catalog {
     // BIGINT sums, CASE-guarded against a constant series.
     "q205_seasonal_naive_backtest" -> Q(
       fn = (s, d) => {
-        val daily0 = t(s, d, "events")
-          .select(col("event_type"),
-            expr("unix_micros(date_trunc('day', ts))").as("d"))
-          .groupBy(col("event_type"), col("d"))
-          .agg(count(lit(1)).as("x0"))
-          .localCheckpoint() // one daily frame feeds the mean AND the series
-        val ref = daily0.groupBy(col("event_type"))
-          .agg(expr("sum(x0) DIV count(1)").as("mu"))
-        val daily = daily0.join(broadcast(ref), "event_type")
-          .select(col("event_type"), col("d"),
-            (col("x0") + when(
-              (col("d") / lit(86400000000L) + 4) % 7 === 6, col("mu") * 2)
-              .otherwise(0L)).as("x"))
+        val daily = seasonalDaily(s, d)
         val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
         daily
           .withColumn("f_seasonal", lag(col("x"), 7).over(w))
@@ -1348,19 +1407,7 @@ object Analytics extends Catalog {
     "q213_holt_winters_backtest" -> Q(
       fn = (s, d) => {
         import s.implicits._
-        val daily0 = t(s, d, "events")
-          .select(col("event_type"),
-            expr("unix_micros(date_trunc('day', ts))").as("d"))
-          .groupBy(col("event_type"), col("d"))
-          .agg(count(lit(1)).as("x0"))
-          .localCheckpoint() // one daily frame feeds the mean AND the series
-        val ref = daily0.groupBy(col("event_type"))
-          .agg(expr("sum(x0) DIV count(1)").as("mu"))
-        val daily = daily0.join(broadcast(ref), "event_type")
-          .select(col("event_type"), col("d"),
-            (col("x0") + when(
-              (col("d") / lit(86400000000L) + 4) % 7 === 6, col("mu") * 2)
-              .otherwise(0L)).as("x"))
+        val daily = seasonalDaily(s, d)
         daily
           .repartition(col("event_type"))
           .sortWithinPartitions(col("event_type"), col("d"))
@@ -1463,17 +1510,12 @@ object Analytics extends Catalog {
     // column (PlanSpec pins exactly one orders scan in-plan).
     "q203_column_profiler" -> Q(
       fn = (s, d) => {
-        // explicit-count repartition off the single-row-group scan
-        // (r17, guide §2.5): the four COUNT(DISTINCT)s expand every
-        // row x4 and partial-aggregate map-side — all inside ONE scan
-        // task without this; the profile is a global aggregate, so
-        // any deterministic key distributes it (o_orderkey spreads
-        // uniformly). The plan keeps exactly one orders scan
-        // (PlanSpec's pin) — the repartition is above the scan.
-        val o = t(s, d, "orders")
-          .repartition(
-            s.conf.get("spark.sql.shuffle.partitions").toInt,
-            col("o_orderkey"))
+        // spread (r17): the four COUNT(DISTINCT)s expand every row x4
+        // and partial-aggregate map-side; the profile is a global
+        // aggregate, so any deterministic key distributes it
+        // (o_orderkey spreads uniformly). The plan keeps exactly one
+        // orders scan (PlanSpec's pin) — the spread is above the scan.
+        val o = Tables.spread(t(s, d, "orders"), col("o_orderkey"))
         val cents = expr("CAST(round(o_totalprice * 100) AS BIGINT)")
         val dus = unix_micros(col("o_orderdate"))
         val a = o.agg(
@@ -1501,42 +1543,7 @@ object Analytics extends Catalog {
             'o_orderdate_us', n, nn_od, nd_od, mn_od, mx_od)
           AS (col_name, n, n_nulls, n_distinct, min_repr, max_repr)""")
       },
-      sql = Some("""
-        WITH a AS (
-          SELECT count(*) AS n,
-                 CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END)
-                   AS BIGINT) AS nn_st,
-                 CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS nd_st,
-                 CAST(min(o_orderstatus) AS VARCHAR) AS mn_st,
-                 CAST(max(o_orderstatus) AS VARCHAR) AS mx_st,
-                 CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
-                   AS BIGINT) AS nn_ck,
-                 CAST(count(DISTINCT o_custkey) AS BIGINT) AS nd_ck,
-                 CAST(min(o_custkey) AS VARCHAR) AS mn_ck,
-                 CAST(max(o_custkey) AS VARCHAR) AS mx_ck,
-                 CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END)
-                   AS BIGINT) AS nn_tp,
-                 CAST(count(DISTINCT CAST(round(o_totalprice * 100) AS BIGINT))
-                   AS BIGINT) AS nd_tp,
-                 CAST(min(CAST(round(o_totalprice * 100) AS BIGINT))
-                   AS VARCHAR) AS mn_tp,
-                 CAST(max(CAST(round(o_totalprice * 100) AS BIGINT))
-                   AS VARCHAR) AS mx_tp,
-                 CAST(sum(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END)
-                   AS BIGINT) AS nn_od,
-                 CAST(count(DISTINCT epoch_us(o_orderdate)) AS BIGINT) AS nd_od,
-                 CAST(min(epoch_us(o_orderdate)) AS VARCHAR) AS mn_od,
-                 CAST(max(epoch_us(o_orderdate)) AS VARCHAR) AS mx_od
-          FROM orders)
-        SELECT 'o_orderstatus' AS col_name, n, nn_st AS n_nulls,
-               nd_st AS n_distinct, mn_st AS min_repr, mx_st AS max_repr
-        FROM a
-        UNION ALL
-        SELECT 'o_custkey', n, nn_ck, nd_ck, mn_ck, mx_ck FROM a
-        UNION ALL
-        SELECT 'o_totalprice_cents', n, nn_tp, nd_tp, mn_tp, mx_tp FROM a
-        UNION ALL
-        SELECT 'o_orderdate_us', n, nn_od, nd_od, mn_od, mx_od FROM a"""),
+      sql = Some(ProfileOracleSql),
       scaleNote = "ONE scan whatever the column count: the multi-distinct plans as a single Expand (fan-out × |profiled columns|, each branch partial-aggregating map-side before one exchange), min/max/null-counts ride the same pass free, and the unpivot touches a 1-row frame — at 100 TB swap the exact distincts for approx_count_distinct (q43's HLL sketch, same Expand-free single pass) and the profile costs what one COUNT(*) costs; this is the discovery half that feeds q148's constraint gate and q127's drift monitor"),
 
     // ----- q208: the q203 profile as a MERGEABLE two-batch fold ------
@@ -1612,42 +1619,7 @@ object Analytics extends Catalog {
               CAST(mn_od AS STRING), CAST(mx_od AS STRING))
           AS (col_name, n, n_nulls, n_distinct, min_repr, max_repr)""")
       },
-      sql = Some("""
-        WITH a AS (
-          SELECT count(*) AS n,
-                 CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END)
-                   AS BIGINT) AS nn_st,
-                 CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS nd_st,
-                 CAST(min(o_orderstatus) AS VARCHAR) AS mn_st,
-                 CAST(max(o_orderstatus) AS VARCHAR) AS mx_st,
-                 CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
-                   AS BIGINT) AS nn_ck,
-                 CAST(count(DISTINCT o_custkey) AS BIGINT) AS nd_ck,
-                 CAST(min(o_custkey) AS VARCHAR) AS mn_ck,
-                 CAST(max(o_custkey) AS VARCHAR) AS mx_ck,
-                 CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END)
-                   AS BIGINT) AS nn_tp,
-                 CAST(count(DISTINCT CAST(round(o_totalprice * 100) AS BIGINT))
-                   AS BIGINT) AS nd_tp,
-                 CAST(min(CAST(round(o_totalprice * 100) AS BIGINT))
-                   AS VARCHAR) AS mn_tp,
-                 CAST(max(CAST(round(o_totalprice * 100) AS BIGINT))
-                   AS VARCHAR) AS mx_tp,
-                 CAST(sum(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END)
-                   AS BIGINT) AS nn_od,
-                 CAST(count(DISTINCT epoch_us(o_orderdate)) AS BIGINT) AS nd_od,
-                 CAST(min(epoch_us(o_orderdate)) AS VARCHAR) AS mn_od,
-                 CAST(max(epoch_us(o_orderdate)) AS VARCHAR) AS mx_od
-          FROM orders)
-        SELECT 'o_orderstatus' AS col_name, n, nn_st AS n_nulls,
-               nd_st AS n_distinct, mn_st AS min_repr, mx_st AS max_repr
-        FROM a
-        UNION ALL
-        SELECT 'o_custkey', n, nn_ck, nd_ck, mn_ck, mx_ck FROM a
-        UNION ALL
-        SELECT 'o_totalprice_cents', n, nn_tp, nd_tp, mn_tp, mx_tp FROM a
-        UNION ALL
-        SELECT 'o_orderdate_us', n, nn_od, nd_od, mn_od, mx_od FROM a"""),
+      sql = Some(ProfileOracleSql),
       scaleNote = "this is how q203 ships at 100 TB: each ingest batch computes its OWN |columns|-row scalar partial plus per-column distinct-value partials (both pure functions of the batch — overwrite-idempotent, the IvmSink property), and the served profile folds partials without touching the base; the distinct-value frames are the one component whose size tracks cardinality, and the documented swap is q143's portable HLL registers (bucket-max merge, fixed 512 cells) once a column's cardinality outgrows a frame — counts/bounds fold unchanged; the fold here deliberately routes through union+re-distinct because adding per-batch distinct COUNTS is the classic re-aggregation bug, and the oracle (q203's one-shot SQL verbatim) gates exactly that equivalence"),
 
     // ----- q210: the profile fold with HLL-REGISTER distincts (r13) --
@@ -1848,44 +1820,8 @@ object Analytics extends Catalog {
     // 501st key, the q62 injection stance): the medians barely move —
     // the robustness on display — while every planted row flags.
     "q196_robust_outlier_gate" -> Q(
-      fn = (s, d) => {
-        val c = t(s, d, "orders")
-          .select(col("o_orderstatus").as("st"),
-            (round(col("o_totalprice") * 100).cast("long") *
-              when(col("o_orderkey") % 501 === 0, 100L).otherwise(1L))
-              .as("cents"))
-          .localCheckpoint() // one cents frame feeds all three folds
-        val m = c.groupBy(col("st"))
-          .agg(expr("percentile(cents, 0.5D)").as("med"))
-        val a = c.join(broadcast(m), "st")
-          .select(col("st"), col("cents"), col("med"),
-            abs(col("cents") - col("med")).as("ad"))
-        val md = a.groupBy(col("st"))
-          .agg(expr("percentile(ad, 0.5D)").as("mad"))
-        a.join(broadcast(md), "st")
-          .groupBy(col("st"))
-          .agg(count(lit(1)).as("n"),
-            first(col("med")).as("med_cents"),
-            first(col("mad")).as("mad_cents"),
-            sum(when(col("ad") > col("mad") * 3, 1L).otherwise(0L))
-              .as("n_outliers"))
-      },
-      sql = Some("""
-        WITH c AS (SELECT o_orderstatus AS st,
-                          CAST(round(o_totalprice * 100) AS BIGINT)
-                            * CASE WHEN o_orderkey % 501 = 0
-                                   THEN 100 ELSE 1 END AS cents
-                   FROM orders),
-        m AS (SELECT st, median(cents) AS med FROM c GROUP BY 1),
-        a AS (SELECT c.st, cents, med, abs(cents - med) AS ad
-              FROM c JOIN m USING (st)),
-        md AS (SELECT st, median(ad) AS mad FROM a GROUP BY 1)
-        SELECT a.st, count(*) AS n,
-               any_value(a.med) AS med_cents,
-               any_value(md.mad) AS mad_cents,
-               CAST(sum(CASE WHEN ad > 3 * mad THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_outliers
-        FROM a JOIN md USING (st) GROUP BY 1"""),
+      fn = (s, d) => robustGate(s, d, x => s"percentile($x, 0.5D)"),
+      sql = Some(robustGateSql(x => s"median($x)")),
       scaleNote = "exact per-group medians sort within groups — fine while a group fits a task (here |status| = 3 groups of n/3); at 100 TB swap `percentile` for `approx_percentile` (q64's mergeable GK sketch) and the plan becomes two skinny two-phase aggregates + two broadcasts with NO per-group sort — same report shape, rank-error-bounded yardstick, which a robust gate tolerates by construction (MAD only needs to be roughly right to dominate a 100× error) — q198 is that registered twin"),
 
     // ----- q198: the robust gate's promised 100 TB spelling (r12) ----
@@ -1907,44 +1843,9 @@ object Analytics extends Catalog {
     // yardstick by at most a few neighboring order totals while the
     // planted deviation is two orders of magnitude.
     "q198_robust_gate_approx" -> Q(
-      fn = (s, d) => {
-        val c = t(s, d, "orders")
-          .select(col("o_orderstatus").as("st"),
-            (round(col("o_totalprice") * 100).cast("long") *
-              when(col("o_orderkey") % 501 === 0, 100L).otherwise(1L))
-              .as("cents"))
-          .localCheckpoint() // one cents frame feeds all three folds
-        val m = c.groupBy(col("st"))
-          .agg(expr("approx_percentile(cents, 0.5D, 1000000)").as("med"))
-        val a = c.join(broadcast(m), "st")
-          .select(col("st"), col("cents"), col("med"),
-            abs(col("cents") - col("med")).as("ad"))
-        val md = a.groupBy(col("st"))
-          .agg(expr("approx_percentile(ad, 0.5D, 1000000)").as("mad"))
-        a.join(broadcast(md), "st")
-          .groupBy(col("st"))
-          .agg(count(lit(1)).as("n"),
-            first(col("med")).as("med_cents"),
-            first(col("mad")).as("mad_cents"),
-            sum(when(col("ad") > col("mad") * 3, 1L).otherwise(0L))
-              .as("n_outliers"))
-      },
-      sql = Some("""
-        WITH c AS (SELECT o_orderstatus AS st,
-                          CAST(round(o_totalprice * 100) AS BIGINT)
-                            * CASE WHEN o_orderkey % 501 = 0
-                                   THEN 100 ELSE 1 END AS cents
-                   FROM orders),
-        m AS (SELECT st, quantile_disc(cents, 0.5) AS med FROM c GROUP BY 1),
-        a AS (SELECT c.st, cents, med, abs(cents - med) AS ad
-              FROM c JOIN m USING (st)),
-        md AS (SELECT st, quantile_disc(ad, 0.5) AS mad FROM a GROUP BY 1)
-        SELECT a.st, count(*) AS n,
-               any_value(a.med) AS med_cents,
-               any_value(md.mad) AS mad_cents,
-               CAST(sum(CASE WHEN ad > 3 * mad THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_outliers
-        FROM a JOIN md USING (st) GROUP BY 1"""),
+      fn = (s, d) =>
+        robustGate(s, d, x => s"approx_percentile($x, 0.5D, 1000000)"),
+      sql = Some(robustGateSql(x => s"quantile_disc($x, 0.5)")),
       scaleNote = "this IS q196's 100 TB plan, registered: the GK sketch is O(accuracy) memory per group and PARTIAL-AGGREGABLE, so each median is a two-phase ObjectHashAggregate (map-side sketches merge at the reducer — plan-asserted, with NO window and no per-group full sort anywhere), the two 3-row median frames broadcast, and the deviation compare + outlier count collapse map-side; at production scale drop accuracy to the memory budget — the gate's verdict is unchanged because a bounded rank error cannot close a 100× deviation gap (the spec proves exactly that claim on the sketch path)"),
 
     // ----- q195: Benford first-digit audit (r11) ---------------------
@@ -2266,22 +2167,13 @@ object Analytics extends Catalog {
     // Catalyst decorrelates this into an aggregate + join — asserting
     // the SQL text path produces the same plan family the DataFrame
     // API would, which is what makes the SQL surface usable at scale.
-    "q81_correlated_scalar" -> Q(
-      fn = (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("q81_orders")
-        s.sql("""
-          SELECT o_orderkey, o_custkey, o_totalprice,
-                 (SELECT avg(o2.o_totalprice) FROM q81_orders o2
-                  WHERE o2.o_custkey = o1.o_custkey) AS cust_avg
-          FROM q81_orders o1
-          WHERE o_totalprice > 100000""")
-      },
-      sql = Some("""
+    "q81_correlated_scalar" -> Q.onViews("q81", Seq("orders"),
+      sql = tb => s"""
         SELECT o_orderkey, o_custkey, o_totalprice,
-               (SELECT avg(o2.o_totalprice) FROM orders o2
+               (SELECT avg(o2.o_totalprice) FROM ${tb("orders")} o2
                 WHERE o2.o_custkey = o1.o_custkey) AS cust_avg
-        FROM orders o1
-        WHERE o_totalprice > 100000"""),
+        FROM ${tb("orders")} o1
+        WHERE o_totalprice > 100000""",
       scaleNote = "decorrelation rewrites the per-row subquery into ONE aggregate over orders joined back on o_custkey — O(n) instead of O(n²) re-execution; the filter pushes to the outer scan only, preserving the subquery's full-table aggregate semantics"),
 
     // ----- unpivot / melt (inverse of q52) --------------------------
@@ -2940,12 +2832,7 @@ object Analytics extends Catalog {
         fold(afterBatch1, feed.filter(col("o_orderkey") % 2 =!= 0))
           .select(col("o_orderstatus"), col("n"), col("total_cents"))
       },
-      sql = Some(s"""
-        WITH $OrdersMergedCtes
-        SELECT o_orderstatus, count(*) AS n,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-                 AS total_cents
-        FROM merged GROUP BY 1"""),
+      sql = Some(OrdersMergedAggSql),
       scaleNote = "the base aggregate is computed ONCE (or inherited from yesterday's view); each batch then touches only its own changes — contribution rows collapse map-side into |groups| partials and fold into the |groups|-row view, so maintenance cost tracks the DELTA, not the base, at any scale; this is the algebraic-view half of the warehouse story (q103's partitioned MERGE maintains the ROWS, this maintains the AGGREGATE, and sketches q143/q165 extend the same fold to non-algebraic stats)"),
 
     // ---- q188: the q185 fold as a maintained SERVICE ----------------
@@ -2978,12 +2865,7 @@ object Analytics extends Catalog {
           .select(col("o_orderstatus"), col("n"),
             col("total").as("total_cents"))
       },
-      sql = Some(s"""
-        WITH $OrdersMergedCtes
-        SELECT o_orderstatus, count(*) AS n,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-                 AS total_cents
-        FROM merged GROUP BY 1"""),
+      sql = Some(OrdersMergedAggSql),
       scaleNote = "q185's scale story made operational: each micro-batch writes ONE |groups|-row partial to its own run-namespaced subdir (a pure function of the batch — no read-modify-write, so replay is overwrite-idempotent by construction), the served view folds N×|groups| rows, and compaction folds the partials back into the flat layer under DirSwap; maintenance cost tracks the delta at any base size"),
 
     // ---- q183: CUPED variance-reduced experiment readout -----------

@@ -13,6 +13,24 @@ final case class Q(
     /** one-line note on the 100 TB execution strategy, surfaced in docs */
     scaleNote: String = "")
 
+object Q {
+
+  /** A query whose Spark side runs its oracle's own SQL text. `sql`
+    * names each table through its argument: the oracle gets the corpus
+    * table names, and Spark gets `<prefix>_<table>` temp views over
+    * `Tables.load`, so the two engines parse one text.
+    */
+  private[queries] def onViews(prefix: String, tables: Seq[String],
+      sql: (String => String) => String, scaleNote: String): Q =
+    Q(fn = (s, d) => {
+        tables.foreach(n =>
+          graft.core.Tables.load(s, d, n).createOrReplaceTempView(s"${prefix}_$n"))
+        s.sql(sql(n => s"${prefix}_$n"))
+      },
+      sql = Some(sql(identity)),
+      scaleNote = scaleNote)
+}
+
 trait Catalog {
   def queries: Map[String, Q]
 }

@@ -16,9 +16,6 @@ import graft.operators.ConnectedComponents
   */
 object Curation extends Catalog {
 
-  private def docs(s: SparkSession, d: String): DataFrame =
-    Tables.load(s, d, "documents")
-
   // ---- q62: PII redaction ------------------------------------------
   // The synthetic corpus carries no organic PII, so the query first
   // injects a deterministic email/phone/IP per doc (a function of
@@ -70,7 +67,7 @@ object Curation extends Catalog {
     */
   private def dsirPer(s: SparkSession, d: String): DataFrame = {
     val B = 4096L
-    val base = docs(s, d).filter(length(col("text")) > 0)
+    val base = Tables.documents(s, d).filter(length(col("text")) > 0)
       .select(col("doc_id"), split(lower(col("text")), " ").as("ws"))
       .withColumn("is_t", size(col("ws")) >= 55)
     val uni = base.select(col("doc_id"), col("is_t"),
@@ -204,7 +201,7 @@ object Curation extends Catalog {
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val wArr = split(lower(col("text")), " ")
     val nTok = size(wArr).cast("double")
-    val feats = docs(s, d).filter(length(col("text")) > 0)
+    val feats = Tables.documents(s, d).filter(length(col("text")) > 0)
       .select(
         col("doc_id"),
         when(size(wArr) >= 55, 1.0).otherwise(0.0).as("y"),
@@ -251,6 +248,51 @@ object Curation extends Catalog {
       .localCheckpoint()
   }
 
+  /** q67/q159's (doc_id, sh, is_test): native 3-word shingle hashes
+    * and the salted md5 eval split (~20% of docs are test) */
+  private def evalSplitShingles(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id"),
+        call_function("shingle_hashes", lower(col("text")), lit(3)).as("sh"),
+        (substring(md5(concat(lit("t:"), col("doc_id").cast("string"))), 1, 2)
+          >= "cc").as("is_test"))
+
+  /** q222/q228's per-language budgets (lang, cnt, t_n): a 300-doc
+    * budget split by q90's count^0.5 temperature */
+  private def langBudgets(s: SparkSession, d: String): DataFrame = {
+    val budget = 300
+    val counts = Tables.documents(s, d).groupBy(col("lang"))
+      .agg(count(lit(1)).as("cnt"))
+    val tot = counts.agg(sum(sqrt(col("cnt"))).as("twgt"))
+    counts.crossJoin(broadcast(tot))
+      .select(col("lang"), col("cnt"),
+        round(lit(budget) * sqrt(col("cnt")) / col("twgt"))
+          .cast("long").as("t_n"))
+  }
+
+  /** q155/q211's per-bin report over a (bin, y, z) frame: docs,
+    * positives, z range, and the positive rate as exact integer ppm */
+  private def calibrationBinStats(binned: DataFrame): DataFrame =
+    binned.groupBy(col("bin"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(when(col("y") === 1.0, 1L).otherwise(0L)).as("n_pos"),
+        min(col("z")).as("z_min"), max(col("z")).as("z_max"))
+      .withColumn("pos_ppm",
+        expr("n_pos * CAST(1000000 AS BIGINT) DIV n_docs"))
+
+  /** calibrationScored's DuckDB mirror: q142's 5-round fit, scored */
+  private def calibrationScoredSql: String = s"""${logregCtes(rounds = 5)},
+        scored AS MATERIALIZED (
+          SELECT doc_id, y, $LogregDot AS z FROM f, w5t)"""
+
+  /** calibrationBinStats' select list, after the caller's bin column */
+  private val calibrationBinStatsSql: String = """count(*) AS n_docs,
+               CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_pos,
+               min(z) AS z_min, max(z) AS z_max,
+               (CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS BIGINT)
+                  * CAST(1000000 AS BIGINT)) // count(*) AS pos_ppm"""
+
   /** q215's ascending-oriented signal frame: (doc_id, sq, sl, sc) with
     * sq = −quality, sl = avg_nll, sc = −classifier-z — the q158 trio
     * with the descending signals sign-flipped (an exact IEEE negation
@@ -265,7 +307,7 @@ object Curation extends Catalog {
       col("w2") * col("x2") + col("w3") * col("x3")
     val clf = feats.crossJoin(broadcast(wts))
       .select(col("doc_id"), (-zExpr).as("sc"))
-    val ql = docs(s, d).filter(length(col("text")) > 0)
+    val ql = Tables.documents(s, d).filter(length(col("text")) > 0)
       .select(col("doc_id"), (-TextAnalysis.qualityCol).as("sq"))
     val nll = unigramNll(s, d, nonEmptyOnly = true)
       .select(col("doc_id"), col("avg_nll").as("sl"))
@@ -282,7 +324,7 @@ object Curation extends Catalog {
     */
   private def unigramNll(
       s: SparkSession, d: String, nonEmptyOnly: Boolean): DataFrame = {
-    val base0 = docs(s, d)
+    val base0 = Tables.documents(s, d)
     val base = if (nonEmptyOnly) base0.filter(length(col("text")) > 0)
                else base0
     val tf = base
@@ -405,13 +447,9 @@ object Curation extends Catalog {
     // Pure string/regexp arithmetic — bit-exact without rounding.
     "q138_url_canonical_dedup" -> Q(
       fn = (s, d) => {
-        // explicit-count repartition off the single-row-group events
-        // scan (r17, guide §2.5): the ~8-regex canonicalization chain
-        // below otherwise runs in ONE scan task
-        val raw = Tables.load(s, d, "events")
-          .repartition(
-            s.conf.get("spark.sql.shuffle.partitions").toInt,
-            col("event_id"))
+        // spread (r17): the ~8-regex canonicalization chain below
+        // otherwise runs in ONE scan task
+        val raw = Tables.spread(Tables.load(s, d, "events"), col("event_id"))
           .select(col("event_id"),
           concat(
             when(pmod(col("event_id"), lit(3)) === 0, "HTTPS").otherwise("https"),
@@ -506,7 +544,7 @@ object Curation extends Catalog {
     "q139_repetition_signals" -> Q(
       fn = (s, d) => {
         val w = split(lower(col("text")), " ")
-        val base = docs(s, d).filter(size(w) >= 2)
+        val base = Tables.documents(s, d).filter(size(w) >= 2)
           .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"),
             w.as("w"))
           .localCheckpoint() // feeds the 2-gram and 5-gram sides once
@@ -603,7 +641,7 @@ object Curation extends Catalog {
           lit("&#39;"), lit("'"))
         val fullDecoded = replace(decoded, lit("&amp;"), lit("&"))
         val clean = trim(regexp_replace(fullDecoded, "\\s+", " "))
-        docs(s, d).select(col("doc_id"),
+        Tables.documents(s, d).select(col("doc_id"),
           md5(clean).as("extract_md5"),
           octet_length(clean).cast("long").as("n_bytes"))
       },
@@ -705,27 +743,15 @@ object Curation extends Catalog {
           .withColumn("rn",
             row_number().over(Window.orderBy(col("z"), col("doc_id"))))
           .withColumn("bin", expr("(rn - 1) * 10 DIV n + 1"))
-          .groupBy(col("bin"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(when(col("y") === 1.0, 1L).otherwise(0L)).as("n_pos"),
-            min(col("z")).as("z_min"), max(col("z")).as("z_max"))
-          .withColumn("pos_ppm",
-            expr("n_pos * CAST(1000000 AS BIGINT) DIV n_docs"))
+          .transform(calibrationBinStats)
       },
-      sql = Some(s"""${logregCtes(rounds = 5)},
-        scored AS MATERIALIZED (
-          SELECT doc_id, y, $LogregDot AS z FROM f, w5t),
+      sql = Some(s"""$calibrationScoredSql,
         nn AS (SELECT count(*) AS n FROM scored),
         r AS (SELECT doc_id, y, z,
                      row_number() OVER (ORDER BY z, doc_id) AS rn
               FROM scored)
         SELECT ((rn - 1) * 10) // n + 1 AS bin,
-               count(*) AS n_docs,
-               CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_pos,
-               min(z) AS z_min, max(z) AS z_max,
-               (CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS BIGINT)
-                  * CAST(1000000 AS BIGINT)) // count(*) AS pos_ppm
+               $calibrationBinStatsSql
         FROM r, nn GROUP BY 1"""),
       scaleNote = "training is q142's zero-data-shuffle loop; scoring is map-side; the decile assignment is ONE global sort (Spark range-partitions orderBy, so it distributes — the single-partition row_number window here is the test-scale spelling; at 100 TB replace the exact rank with q64 approx-quantile bin boundaries broadcast to a map-side bucketer and the bin stats stay one partial agg — REGISTERED as q211)"),
 
@@ -767,26 +793,14 @@ object Curation extends Catalog {
         scored.crossJoin(broadcast(bounds))
           .withColumn("bin",
             (lit(1) + size(filter(col("bs"), b => col("z") > b))).cast("int"))
-          .groupBy(col("bin"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(when(col("y") === 1.0, 1L).otherwise(0L)).as("n_pos"),
-            min(col("z")).as("z_min"), max(col("z")).as("z_max"))
-          .withColumn("pos_ppm",
-            expr("n_pos * CAST(1000000 AS BIGINT) DIV n_docs"))
+          .transform(calibrationBinStats)
       },
-      sql = Some(s"""${logregCtes(rounds = 5)},
-        scored AS MATERIALIZED (
-          SELECT doc_id, y, $LogregDot AS z FROM f, w5t),
+      sql = Some(s"""$calibrationScoredSql,
         bs AS (SELECT quantile_disc(z, [0.1, 0.2, 0.3, 0.4, 0.5,
                                         0.6, 0.7, 0.8, 0.9]) AS bs
                FROM scored)
         SELECT CAST(1 + len(list_filter(bs, b -> z > b)) AS INT) AS bin,
-               count(*) AS n_docs,
-               CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_pos,
-               min(z) AS z_min, max(z) AS z_max,
-               (CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS BIGINT)
-                  * CAST(1000000 AS BIGINT)) // count(*) AS pos_ppm
+               $calibrationBinStatsSql
         FROM scored, bs GROUP BY 1"""),
       scaleNote = "the registered windowless calibration: training is q142's zero-data-shuffle loop, scoring map-side, the boundary frame is ONE mergeable GK-sketch aggregate (map-side partials, O(accuracy) memory) broadcast as nine doubles, bucketing is a row-local array scan, and the bin stats are one 10-group partial agg — no Window, no global sort, no single-partition stage anywhere (PlanSpec-pinned), so the audit survives any corpus size; at 100 TB drop the accuracy parameter to the memory budget — bins become approximate-RANK deciles while every emitted bin stat stays exact over its bucket, which is the honest trade q186 already documents"),
 
@@ -812,7 +826,7 @@ object Curation extends Catalog {
           col("w2") * col("x2") + col("w3") * col("x3")
         val clf = feats.crossJoin(broadcast(wts))
           .select(col("doc_id"), zExpr.as("zc"))
-        val ql = docs(s, d).filter(length(col("text")) > 0)
+        val ql = Tables.documents(s, d).filter(length(col("text")) > 0)
           .select(col("doc_id"), TextAnalysis.qualityCol.as("ql"))
         val nll = unigramNll(s, d, nonEmptyOnly = true)
           .select(col("doc_id"), col("avg_nll").as("nl"))
@@ -948,7 +962,7 @@ object Curation extends Catalog {
         val frac = ((conv(substring(md5(concat(lit("ws:"),
           col("doc_id").cast("string"))), 1, 12), 16, 10).cast("long")
           + lit(1L)).cast("double") / lit(281474976710656.0))
-        docs(s, d).filter(col("n_chars") > 0)
+        Tables.documents(s, d).filter(col("n_chars") > 0)
           .select(col("doc_id"), col("n_chars"),
             round(-log(frac) / col("n_chars").cast("double"), 12)
               .as("samp_key"))
@@ -991,7 +1005,7 @@ object Curation extends Catalog {
     // engines); budget = 1.5x the corpus so caps genuinely bind.
     "q154_mixture_waterfill" -> Q(
       fn = (s, d) => {
-        val base = docs(s, d).filter(length(col("text")) > 0)
+        val base = Tables.documents(s, d).filter(length(col("text")) > 0)
           .groupBy(col("source"))
           .agg(sum(size(split(lower(col("text")), " ")).cast("long")).as("a"))
           .withColumn("w",
@@ -1078,7 +1092,7 @@ object Curation extends Catalog {
           lit(" contact doc"), col("doc_id"), lit("@example.com or +1-555-"),
           lpad(col("doc_id").cast("string"), 4, "0"),
           lit(" from 10.0."), pmod(col("doc_id"), lit(256)), lit(".1"))
-        docs(s, d)
+        Tables.documents(s, d)
           .select(col("doc_id"), injected.as("raw"))
           .select(
             col("doc_id"),
@@ -1114,7 +1128,7 @@ object Curation extends Catalog {
 
     "q63_quality_filter" -> Q(
       fn = (s, d) => {
-        val w = docs(s, d)
+        val w = Tables.documents(s, d)
           .select(col("doc_id"),
             split(lower(col("text")), " ").as("words"),
             length(regexp_replace(col("text"), lit(" "), lit(""))).as("n_alpha"))
@@ -1150,7 +1164,7 @@ object Curation extends Catalog {
 
     "q65_tfidf_top_terms" -> Q(
       fn = (s, d) => {
-        val base = docs(s, d)
+        val base = Tables.documents(s, d)
         val tf = base
           .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
           .groupBy(col("doc_id"), col("term"))
@@ -1202,7 +1216,7 @@ object Curation extends Catalog {
         // streaming pass — the classic secondary-sort pattern; no
         // group materialization, no driver loop. A source's docs can
         // exceed one executor's memory and this still streams.
-        val t = docs(s, d)
+        val t = Tables.documents(s, d)
           .select(col("source"), col("doc_id"),
             size(split(col("text"), " ")).as("n_tokens"))
           .repartition(col("source"))
@@ -1250,11 +1264,7 @@ object Curation extends Catalog {
     // pretraining hygiene step: n-gram overlap against the eval set.
     "q67_decontaminate" -> Q(
       fn = (s, d) => {
-        val base = docs(s, d)
-          .select(col("doc_id"),
-            call_function("shingle_hashes", lower(col("text")), lit(3)).as("sh"),
-            (substring(md5(concat(lit("t:"), col("doc_id").cast("string"))), 1, 2)
-              >= "cc").as("is_test"))
+        val base = evalSplitShingles(s, d)
         // ONLY the tiny eval side materializes (it is read to build the
         // broadcast); the corpus side streams straight off the scan —
         // pinning the whole corpus's shingle arrays behind a checkpoint
@@ -1298,11 +1308,7 @@ object Curation extends Catalog {
     // engines.
     "q159_leakage_audit" -> Q(
       fn = (s, d) => {
-        val base = docs(s, d)
-          .select(col("doc_id"),
-            call_function("shingle_hashes", lower(col("text")), lit(3)).as("sh"),
-            (substring(md5(concat(lit("t:"), col("doc_id").cast("string"))), 1, 2)
-              >= "cc").as("is_test"))
+        val base = evalSplitShingles(s, d)
           .filter(size(col("sh")) > 0)
         val evalSide = base.filter(col("is_test"))
           .select(col("doc_id").as("eval_id"), col("sh"))
@@ -1431,7 +1437,7 @@ object Curation extends Catalog {
     "q191_dsir_ess" -> Q(
       fn = (s, d) => {
         val per = dsirPer(s, d)
-        val src = docs(s, d).select(col("doc_id"), col("source"))
+        val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
         per.join(src, "doc_id")
           .select(col("source"), exp(col("logw_pg")).as("w"),
             (col("logw_pg") > 0).as("pos"))
@@ -1483,7 +1489,7 @@ object Curation extends Catalog {
         val kseg = floor(
           least((pmod(col("doc_id"), lit(3)) + 1) * lit(5), size(col("w")))
             / lit(5)).cast("int")
-        docs(s, d)
+        Tables.documents(s, d)
           .filter(size(w0) >= 5)
           .select(col("doc_id"), w0.as("w"))
           .select(col("doc_id"),
@@ -1521,7 +1527,7 @@ object Curation extends Catalog {
       fn = (s, d) => {
         val rkw = Window.partitionBy(col("source"))
           .orderBy(md5(concat(lit("c:"), col("doc_id").cast("string"))), col("doc_id"))
-        docs(s, d)
+        Tables.documents(s, d)
           .select(col("doc_id"), col("source"))
           .withColumn("rk", row_number().over(rkw).cast("long"))
           .filter(col("rk") <= 15)
@@ -1542,7 +1548,7 @@ object Curation extends Catalog {
     "q70_token_chunks" -> Q(
       fn = (s, d) => {
         val w = split(col("text"), " ")
-        docs(s, d)
+        Tables.documents(s, d)
           .select(col("doc_id"), w.as("w"), size(w).as("n"))
           .withColumn("n_chunks",
             lit(1) + greatest(lit(0),
@@ -1612,7 +1618,7 @@ object Curation extends Catalog {
     "q90_lang_mix_resample" -> Q(
       fn = (s, d) => {
         val budget = 300
-        val counts = docs(s, d).groupBy(col("lang"))
+        val counts = Tables.documents(s, d).groupBy(col("lang"))
           .agg(count(lit(1)).as("cnt"))
         val targets = counts
           .withColumn("wgt", sqrt(col("cnt")))
@@ -1623,7 +1629,7 @@ object Curation extends Catalog {
         val rn = row_number().over(Window.partitionBy(col("lang"))
           .orderBy(md5(concat(lit("m:"), col("doc_id").cast("string"))),
             col("doc_id")))
-        docs(s, d).join(broadcast(targets), "lang")
+        Tables.documents(s, d).join(broadcast(targets), "lang")
           .withColumn("rn", rn)
           .filter(col("rn") <= col("t_n"))
           .select(col("doc_id"), col("lang"))
@@ -1648,17 +1654,10 @@ object Curation extends Catalog {
     // Spark and the oracle select the identical set by construction.
     "q222_budget_sample_thresholded" -> Q(
       fn = (s, d) => {
-        val budget = 300
-        val counts = docs(s, d).groupBy(col("lang"))
-          .agg(count(lit(1)).as("cnt"))
-        val tot = counts.agg(sum(sqrt(col("cnt"))).as("twgt"))
-        val targets = counts.crossJoin(broadcast(tot))
-          .select(col("lang"), col("cnt"),
-            round(lit(budget) * sqrt(col("cnt")) / col("twgt"))
-              .cast("long").as("t_n"))
+        val targets = langBudgets(s, d)
         val h28 = conv(substring(md5(concat(lit("m:"),
           col("doc_id").cast("string"))), 1, 7), 16, 10).cast("long")
-        docs(s, d).join(broadcast(targets), "lang")
+        Tables.documents(s, d).join(broadcast(targets), "lang")
           .filter(h28 * col("cnt") < col("t_n") * lit(268435456L))
           .select(col("doc_id"), col("lang"))
       },
@@ -1697,18 +1696,11 @@ object Curation extends Catalog {
     // rerun at 4× rate, never a silent wrong sample.
     "q228_budget_sample_exact_sliced" -> Q(
       fn = (s, d) => {
-        val budget = 300
-        val counts = docs(s, d).groupBy(col("lang"))
-          .agg(count(lit(1)).as("cnt"))
-        val tot = counts.agg(sum(sqrt(col("cnt"))).as("twgt"))
-        val targets = counts.crossJoin(broadcast(tot))
-          .select(col("lang"), col("cnt"),
-            round(lit(budget) * sqrt(col("cnt")) / col("twgt"))
-              .cast("long").as("t_n"))
+        val targets = langBudgets(s, d)
         val hx = md5(concat(lit("m:"), col("doc_id").cast("string")))
         val h28 = conv(substring(hx, 1, 7), 16, 10).cast("long")
         // pass 1: q222's map-side filter at 2× the target rate
-        val sliced = docs(s, d).join(broadcast(targets), "lang")
+        val sliced = Tables.documents(s, d).join(broadcast(targets), "lang")
           .filter(h28 * col("cnt") < col("t_n") * lit(536870912L))
           .select(col("doc_id"), col("lang"), hx.as("hx"))
           .localCheckpoint() // one slice feeds the guard AND the rank
@@ -1735,7 +1727,7 @@ object Curation extends Catalog {
     "q94_shard_shuffle" -> Q(
       fn = (s, d) => {
         val hx = md5(concat(lit("sh:"), col("doc_id").cast("string")))
-        docs(s, d)
+        Tables.documents(s, d)
           .withColumn("hx", hx)
           .withColumn("shard", substring(col("hx"), 1, 1))
           .withColumn("rk", row_number().over(
@@ -1777,7 +1769,7 @@ object Curation extends Catalog {
         // under a max-derived shifted id (q62's inject-then-operate
         // stance, q86's derived-shift idiom) — giving the keep-first
         // stage real work at every scale factor
-        val base = docs(s, d).select(col("doc_id"), col("text"))
+        val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
         val shiftF = base.agg((max(col("doc_id")) + 1L).as("__shift"))
         val input = base.union(
           base.filter(col("doc_id") % 25 === 0)
@@ -1910,7 +1902,7 @@ object Curation extends Catalog {
     // not a concession: Dataset has no partition-offset primitive.
     "q167_global_row_ids" -> Q(
       fn = (s, d) =>
-        globalSortRank(docs(s, d).select(col("source"), col("doc_id")),
+        globalSortRank(Tables.documents(s, d).select(col("source"), col("doc_id")),
           Seq("source", "doc_id"), "row_id")
           .select(col("doc_id"), col("source"), col("row_id")),
       sql = Some("""
@@ -1985,7 +1977,7 @@ object Curation extends Catalog {
     // the q110-class rounded ln-sum score.
     "q174_backoff_lm" -> Q(
       fn = (s, d) => {
-        val base = docs(s, d)
+        val base = Tables.documents(s, d)
           .select(col("doc_id"), split(lower(col("text")), " ").as("ws"))
           .localCheckpoint() // one tokenize feeds bigrams AND the model
         val bi = base.filter(size(col("ws")) >= 2)
@@ -2080,7 +2072,7 @@ object Curation extends Catalog {
     "q177_negative_sampling" -> Q(
       fn = (s, d) => {
         val K = 3
-        val ds = docs(s, d).select(col("doc_id"), col("source"))
+        val ds = Tables.documents(s, d).select(col("doc_id"), col("source"))
         val pool = globalSortRank(
           ds.select(col("doc_id").as("neg_id"),
             col("source").as("neg_source"),
@@ -2145,7 +2137,7 @@ object Curation extends Catalog {
     "q178_stratified_shards" -> Q(
       fn = (s, d) => {
         val S = 8
-        val base = docs(s, d)
+        val base = Tables.documents(s, d)
           .select(col("doc_id"), col("source"),
             split(lower(col("text")), " ").as("ws"))
           .select(col("doc_id"), col("source"),

@@ -18,9 +18,6 @@ import graft.operators.ConnectedComponents
   */
 object Dedup extends Catalog {
 
-  private def docs(s: SparkSession, d: String): DataFrame =
-    Tables.load(s, d, "documents")
-
   /** whitespace tokens, lowered */
   private val words: Column = split(lower(col("text")), " ")
 
@@ -34,17 +31,11 @@ object Dedup extends Catalog {
     * list_transform(generate_series(...), i -> arr[i:i+2]).
     */
   private def shingled(s: SparkSession, d: String): DataFrame =
-    docs(s, d)
-      // explicit-count repartition before the shingle kernel (r17,
-      // guide §2.5): the corpus parquet is ONE unsplittable row group,
-      // so without this every consumer's posting explode + join-side
-      // shuffle write ran single-threaded out of a 1-partition
-      // checkpoint; the explicit count (q250's REPARTITION_BY_NUM
-      // stance) keeps AQE from coalescing ~3 MB of pre-explode text
-      // back to one partition. Keyed by doc_id so the checkpoint's
-      // partitioning is also the one q132's incremental split reuses.
-      .repartition(
-        s.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
+    // spread before the shingle kernel (r17): without it every
+    // consumer's posting explode + join-side shuffle write ran out of a
+    // 1-partition checkpoint. Keyed by doc_id so the checkpoint's
+    // partitioning is also the one q132's incremental split reuses.
+    Tables.spread(Tables.documents(s, d), col("doc_id"))
       .select(col("doc_id"),
         call_function("shingle_hashes", lower(col("text")), lit(3)).as("sh"))
       .filter(size(col("sh")) > 0)
@@ -58,44 +49,40 @@ object Dedup extends Catalog {
       |    i -> array_to_string((string_split(lower(text),' '))[i:i+2],' '))
       |ELSE [] END)""".stripMargin
 
-  /** q192's injected-twin corpus measured against BOTH banding
-    * geometries (VERDICT r11 item 6): the portable md5-hex48 4-band ×
-    * 2-row family (the oracle-able calibration kernel) and the
-    * production XXH64 8-band × 2-row kernel q27 actually ships
-    * (`minhash_bands` — no DuckDB twin exists for XXH64, which is why
-    * q192's registered curve couldn't calibrate it). One exact
-    * ground-truth pass at floor j ≥ 0.2, one candidate join per
-    * geometry, LEFT-joined so misses emit 0. Returns the PER-PAIR
-    * frame (d1, d2, inter, un, rec_portable, rec_production) — q200
-    * folds it to the per-decile report; the spec consumes it directly
-    * to pin the 1−(1−j²)^b recall form within Poisson-binomial
-    * tolerance for both geometries.
+  /** q192's calibration inputs, shared with q200: the injected-twin
+    * corpus's string shingle sets, the exact ground truth at floor
+    * j ≥ 0.2 (d1, d2, inter, un), and the portable md5-hex48 4-band ×
+    * 2-row candidate pairs (d1, d2) — the oracle-able calibration
+    * kernel. The organic corpus has pairs only at j ≈ 0 (random
+    * template text) and j ≈ 0.9 (the planted near-dups), and a curve
+    * with no mid-range has no misses to calibrate, so PREFIX TWINS are
+    * injected at controlled similarity (q62/q68's honest-injection
+    * stance): for docs with doc_id % 7 == 3, a twin of the first
+    * k = max(3, n·(3 + doc_id%8)/10) words (doc_id%8 == 7 copies the
+    * WHOLE doc — the band-10 theorem case). A prefix's distinct
+    * shingles are a subset of the full doc's, so j = |sh_p|/|sh_f|
+    * lands near (3 + doc_id%8)/10 — deciles 2..10 populate, where a
+    * 4×2 geometry genuinely misses (recall 1-(1-j²)⁴).
     */
-  private[queries] def lshRecallPairs(
-      s: SparkSession, d: String): DataFrame = {
+  private def lshRecallBase(
+      s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     val ws = split(lower(col("text")), " ")
-    val dd = docs(s, d).select(col("doc_id"), ws.as("ws"))
-    // q192's prefix twins, verbatim: doc_id % 7 == 3 spawns a copy of
-    // the first n·(3 + id%8)/10 words — subset shingles put exact j
-    // near (3 + id%8)/10, populating deciles 2..10 with real misses
+    val dd = Tables.documents(s, d).select(col("doc_id"), ws.as("ws"))
     val twins = dd.filter(col("doc_id") % 7 === 3 && size(col("ws")) >= 10)
       .select((col("doc_id") + 10000000L).as("doc_id"),
         slice(col("ws"), lit(1), greatest(lit(3),
           expr("CAST((size(ws) * (3 + doc_id % 8)) DIV 10 AS INT)")))
           .as("ws"))
-    val shStr = dd.unionByName(twins)
-      .filter(size(col("ws")) >= 3)
-      // explicit-count repartition before the shingle/minhash map work
-      // (r17, guide §2.5): the corpus parquet is one unsplittable row
-      // group, so the 3-gram transform, the 8-min portable_minhash and
-      // the XXH64 banding below otherwise all run inside ONE task
-      // behind this checkpoint (the q193 fix applied to this family)
-      .repartition(
-        s.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
+    // spread before the shingle/minhash map work (r17): the 3-gram
+    // transform, the 8-min portable_minhash and q200's XXH64 banding
+    // otherwise all run inside ONE task behind this checkpoint (the
+    // q193 fix applied to this family)
+    val shStr = Tables.spread(dd.unionByName(twins)
+        .filter(size(col("ws")) >= 3), col("doc_id"))
       .select(col("doc_id"), array_distinct(
         transform(sequence(lit(1), size(col("ws")) - 2),
           i => array_join(slice(col("ws"), i, lit(3)), " "))).as("sh"))
-      .localCheckpoint() // shingles feed truth, sizes AND both kernels
+      .localCheckpoint() // shingles feed truth, sizes AND the kernels
     val sizes = shStr.select(col("doc_id"), size(col("sh")).as("sz"))
     // ground-truth postings join on the 64-bit shingle hash, not the
     // shingle STRING (r17, guide §2.3 "narrower types / shuffle fewer
@@ -117,12 +104,16 @@ object Dedup extends Catalog {
       .select(col("d1"), col("d2"), col("inter"),
         (col("sz1") + col("sz2") - col("inter")).as("un"))
       .filter(col("inter") * 5 >= col("un")) // j >= 0.2
-    // portable geometry: 8 md5-derived 48-bit minima, 4 bands × 2 rows
-    // (native PortableMinHash — bit-identical to the HOF spelling,
-    // see q192)
+    // portable minhash signature: 8 md5-derived 48-bit hash mins
+    // native one-pass kernel (PortableMinHash) — bit-identical to
+    // the HOF spelling transform(sequence(0,7), p -> array_min(
+    // transform(sh, g -> conv(substr(md5('mh'||p||':'||g),1,12),
+    // 16,10)))) it replaced (PortableMinHashSpec), so the DuckDB
+    // oracle is untouched; the interpreted HOF walked the shingle set
+    // once per hash function and dominated q192
     val sig = shStr.select(col("doc_id"),
       call_function("portable_minhash", col("sh"), lit(8)).as("mins"))
-      .localCheckpoint()
+      .localCheckpoint() // one signature pass feeds both join sides
     val bandedPort = sig.select(col("doc_id"),
       posexplode(transform(sequence(lit(0), lit(3)), b =>
         struct(element_at(col("mins"), b * 2 + 1).as("k1"),
@@ -133,7 +124,23 @@ object Dedup extends Catalog {
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .dropDuplicates("d1", "d2")
-      .withColumn("rec_portable", lit(1L))
+    (shStr, exact, candPort)
+  }
+
+  /** q192's twin corpus measured against BOTH banding geometries
+    * (VERDICT r11 item 6): lshRecallBase's portable family plus the
+    * production XXH64 8-band × 2-row kernel q27 actually ships
+    * (`minhash_bands` — no DuckDB twin exists for XXH64, which is why
+    * q192's registered curve couldn't calibrate it), LEFT-joined onto
+    * the exact truth so misses emit 0. Returns the PER-PAIR frame
+    * (d1, d2, inter, un, rec_portable, rec_production) — q200 folds it
+    * to the per-decile report; the spec consumes it directly to pin
+    * the 1−(1−j²)^b recall form within Poisson-binomial tolerance for
+    * both geometries.
+    */
+  private[queries] def lshRecallPairs(
+      s: SparkSession, d: String): DataFrame = {
+    val (shStr, exact, candPort) = lshRecallBase(s, d)
     // production geometry: q27's native one-pass XXH64 kernel, 8 × 2
     // (xxhash64 over the same string shingles mirrors shingle_hashes'
     // hash-the-joined-window semantics)
@@ -148,7 +155,8 @@ object Dedup extends Catalog {
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .dropDuplicates("d1", "d2")
       .withColumn("rec_production", lit(1L))
-    exact.join(candPort, Seq("d1", "d2"), "left")
+    exact.join(candPort.withColumn("rec_portable", lit(1L)),
+        Seq("d1", "d2"), "left")
       .join(candProd, Seq("d1", "d2"), "left")
       .select(col("d1"), col("d2"), col("inter"), col("un"),
         coalesce(col("rec_portable"), lit(0L)).as("rec_portable"),
@@ -263,7 +271,7 @@ object Dedup extends Catalog {
     * second pass on chars 9–16
     */
   private[graft] def blockedFrameBy(s: SparkSession, d: String, off: Int): DataFrame =
-    docs(s, d).select(col("doc_id"),
+    Tables.documents(s, d).select(col("doc_id"),
       substring(lower(col("text")), 1, 40).as("t"),
       substring(lower(col("text")), off, 8).as("blk"))
 
@@ -281,7 +289,14 @@ object Dedup extends Catalog {
     val sh = shingled(s, d)
     val sizes = sh.select(col("doc_id"), size(col("sh")).as("sz"))
     val ex = sh.select(col("doc_id"), explode(col("sh")).as("shingle"))
-    ex.as("a").join(ex.as("b"),
+    postingPairs(ex, sizes)
+  }
+
+  /** (doc1, doc2, jaccard ≥ τ) from a (doc_id, shingle) posting frame
+    * and the (doc_id, sz) set sizes: the posting self-join counts each
+    * pair's intersection, the two size lookups give the union */
+  private def postingPairs(postings: DataFrame, sizes: DataFrame): DataFrame =
+    postings.as("a").join(postings.as("b"),
         col("a.shingle") === col("b.shingle") &&
         col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
@@ -294,7 +309,61 @@ object Dedup extends Catalog {
         col("inter").cast("double") / (col("sz1") + col("sz2") - col("inter")))
       .filter(col("jaccard") >= JaccardTau)
       .select(col("doc1"), col("doc2"), col("jaccard"))
+
+  /** q26's brute-force DuckDB pairs — the oracle of every variant that
+    * must return exactly q26's pair set (q26, q27, q59, q132, q201) */
+  private lazy val jaccardPairsSql: String = s"""
+        WITH s AS (SELECT doc_id, $sqlShingles AS sh FROM documents)
+        SELECT a.doc_id AS doc1, b.doc_id AS doc2,
+               len(list_intersect(a.sh, b.sh)) * 1.0 /
+                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
+        FROM s a JOIN s b ON a.doc_id < b.doc_id
+        WHERE len(a.sh) > 0 AND len(b.sh) > 0
+          AND len(list_intersect(a.sh, b.sh)) * 1.0 /
+                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= $JaccardTau"""
+
+  /** q61/q116/q171's dup groups (doc_id, group_id): every doc, labelled
+    * by the min doc_id of its connected component over q26's pairs
+    * (star contraction, operators/ConnectedComponents.scala); a
+    * singleton is its own group.
+    */
+  private def dupGroups(s: SparkSession, d: String): DataFrame = {
+    val pairs = jaccardPairs(s, d)
+      .select(col("doc1").as("u"), col("doc2").as("v"))
+    val labels = ConnectedComponents.run(pairs)
+    val ids = Tables.documents(s, d).select(col("doc_id"))
+    ids.join(labels, ids("doc_id") === labels("node"), "left")
+      .select(col("doc_id"),
+        coalesce(col("label"), col("doc_id")).as("group_id"))
   }
+
+  /** dupGroups joined to each group's size (group_id, doc_id, group_sz) */
+  private def sizedDupGroups(s: SparkSession, d: String): DataFrame = {
+    val grouped = dupGroups(s, d)
+    val sizes = grouped.groupBy(col("group_id"))
+      .agg(count(lit(1)).as("group_sz"))
+    grouped.join(sizes, "group_id")
+  }
+
+  /** dupGroups' DuckDB mirror up to `lab` (doc_id, group_id): q26's
+    * pairs by brute force, and the components as a recursive
+    * reachability CTE; the caller appends its CTEs and SELECT.
+    */
+  private lazy val dupGroupsSql: String = s"""
+        WITH RECURSIVE
+        s AS (SELECT doc_id, $sqlShingles AS sh FROM documents),
+        pairs AS (
+          SELECT a.doc_id AS u, b.doc_id AS v
+          FROM s a JOIN s b ON a.doc_id < b.doc_id
+          WHERE len(a.sh) > 0 AND len(b.sh) > 0
+            AND len(list_intersect(a.sh, b.sh)) * 1.0 /
+                  (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= $JaccardTau),
+        edges AS (SELECT u, v FROM pairs UNION SELECT v AS u, u AS v FROM pairs),
+        reach AS (
+          SELECT doc_id AS node, doc_id AS label FROM documents
+          UNION
+          SELECT e.v AS node, r.label FROM reach r JOIN edges e ON e.u = r.node),
+        lab AS (SELECT node AS doc_id, min(label) AS group_id FROM reach GROUP BY node)"""
 
   /** q179/q180's shared linkage comparison frame: database A = the
     * customer table, database B = its deterministic perturbation
@@ -479,7 +548,7 @@ object Dedup extends Catalog {
     // ----- E11: exact dedup via content hash ------------------------
     "q24_dedup_exact_hash" -> Q(
       fn = (s, d) =>
-        docs(s, d)
+        Tables.documents(s, d)
           .groupBy(col("source"))
           .agg(
             countDistinct(md5(lower(col("text")))).as("n_unique"),
@@ -495,7 +564,7 @@ object Dedup extends Catalog {
       fn = (s, d) => {
         val key = array_join(slice(words, 1, 2), " ")
         val w = Window.partitionBy(col("dup_key")).orderBy(col("doc_id"))
-        docs(s, d)
+        Tables.documents(s, d)
           .withColumn("dup_key", key)
           .withColumn("rn", row_number().over(w).cast("long"))
           .withColumn("group_sz", count(lit(1)).over(Window.partitionBy(col("dup_key"))))
@@ -516,15 +585,7 @@ object Dedup extends Catalog {
     // ----- E12: n-gram Jaccard near-dup pairs (inverted index) ------
     "q26_dedup_ngram_jaccard" -> Q(
       fn = (s, d) => jaccardPairs(s, d),
-      sql = Some(s"""
-        WITH s AS (SELECT doc_id, $sqlShingles AS sh FROM documents)
-        SELECT a.doc_id AS doc1, b.doc_id AS doc2,
-               len(list_intersect(a.sh, b.sh)) * 1.0 /
-                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE len(a.sh) > 0 AND len(b.sh) > 0
-          AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= $JaccardTau"""),
+      sql = Some(jaccardPairsSql),
       scaleNote = "inverted-index self-join on shingle — O(sum posting²) not O(n²); at 100 TB drop ultra-frequent shingles (stop-shingle cap) to bound posting lists"),
 
     // ----- E12: asymmetric containment (subset / quote detection) ---
@@ -581,7 +642,7 @@ object Dedup extends Catalog {
     "q132_incremental_pairs" -> Q(
       fn = (s, d) => {
         val root = Analytics.tempSnapshotDir("graft_q132_idx")
-        val base = docs(s, d).select(col("doc_id"), col("text"))
+        val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
         val half = base.agg(max(col("doc_id"))).head().getLong(0) / 2
         val p1 = graft.pipeline.IncrementalDedup.dedupBatch(
           base.filter(col("doc_id") <= half), root,
@@ -591,15 +652,7 @@ object Dedup extends Catalog {
           tau = JaccardTau, batchId = Some(1L), runId = "q132")
         p1.unionByName(p2)
       },
-      sql = Some(s"""
-        WITH s AS (SELECT doc_id, $sqlShingles AS sh FROM documents)
-        SELECT a.doc_id AS doc1, b.doc_id AS doc2,
-               len(list_intersect(a.sh, b.sh)) * 1.0 /
-                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE len(a.sh) > 0 AND len(b.sh) > 0
-          AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= $JaccardTau"""),
+      sql = Some(jaccardPairsSql),
       scaleNote = "per-batch cost is new-postings × matching old postings (the old side is a streamed column-pruned scan of the persisted index, never recomputed, never checkpointed) — ingesting a 0.1% daily slice probes the index instead of re-shingling the corpus; the batch-subdir layout appends without rewriting"),
 
     // ----- E12: n-gram Jaccard with a stop-shingle cap --------------
@@ -628,29 +681,9 @@ object Dedup extends Catalog {
         // self-join below must share ONE capped-posting computation
         // (same discipline as q27's banded frame).
         val capped = cappedPostings(sh, StopShingleCap).localCheckpoint()
-        capped.as("a").join(capped.as("b"),
-            col("a.shingle") === col("b.shingle") &&
-            col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-          .agg(count(lit(1)).as("inter"))
-          .join(sizes.withColumnRenamed("doc_id", "doc1")
-            .withColumnRenamed("sz", "sz1"), "doc1")
-          .join(sizes.withColumnRenamed("doc_id", "doc2")
-            .withColumnRenamed("sz", "sz2"), "doc2")
-          .withColumn("jaccard",
-            col("inter").cast("double") / (col("sz1") + col("sz2") - col("inter")))
-          .filter(col("jaccard") >= JaccardTau)
-          .select(col("doc1"), col("doc2"), col("jaccard"))
+        postingPairs(capped, sizes)
       },
-      sql = Some(s"""
-        WITH s AS (SELECT doc_id, $sqlShingles AS sh FROM documents)
-        SELECT a.doc_id AS doc1, b.doc_id AS doc2,
-               len(list_intersect(a.sh, b.sh)) * 1.0 /
-                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE len(a.sh) > 0 AND len(b.sh) > 0
-          AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= $JaccardTau"""),
+      sql = Some(jaccardPairsSql),
       scaleNote = "stop-list via groupBy (map-side partial agg) + broadcast anti-join, checkpointed before the self-join; the cap bounds sum(posting²) — the term that explodes on boilerplate shingles at 100 TB"),
 
     // ----- E12: MinHash + LSH banding, verified ---------------------
@@ -691,15 +724,7 @@ object Dedup extends Catalog {
       },
       // the verified-LSH result equals brute force (recall ≈ 1-(1-j²)^8
       // ≥ 0.9997 at the τ boundary, ~1 at the planted j≈0.99 pairs)
-      sql = Some(s"""
-        WITH s AS (SELECT doc_id, $sqlShingles AS sh FROM documents)
-        SELECT a.doc_id AS doc1, b.doc_id AS doc2,
-               len(list_intersect(a.sh, b.sh)) * 1.0 /
-                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE len(a.sh) > 0 AND len(b.sh) > 0
-          AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= $JaccardTau"""),
+      sql = Some(jaccardPairsSql),
       scaleNote = "LSH banding: one shuffle on (band,bucket) — candidate set is tiny vs n²; signature+banding all codegen'd Catalyst; verify stage touches only candidates"),
 
     // ----- E12: prefix-filtered EXACT similarity join (r12; true
@@ -754,15 +779,7 @@ object Dedup extends Catalog {
           .filter(col("jaccard") >= JaccardTau)
           .select(col("doc1"), col("doc2"), col("jaccard"))
       },
-      sql = Some(s"""
-        WITH s AS (SELECT doc_id, $sqlShingles AS sh FROM documents)
-        SELECT a.doc_id AS doc1, b.doc_id AS doc2,
-               len(list_intersect(a.sh, b.sh)) * 1.0 /
-                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE len(a.sh) > 0 AND len(b.sh) > 0
-          AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= $JaccardTau"""),
+      sql = Some(jaccardPairsSql),
       scaleNote = "the prefix cut bounds posting volume to ~(1−τ) of q26's full inverted index AND concentrates it on the rarest tokens (ascending-df order), so the pair join's sum-of-df² term collapses without giving up exactness — this is the serving-free exact dedup plan for 100 TB when a miss is unacceptable (legal/PII copies) and LSH's recall curve (q192/q200) isn't; df ordering costs one vocabulary-keyed aggregate that partial-aggregates map-side, prefixes explode map-side, the candidate join shuffles on the token key, and verification touches only surviving candidates — at τ = 0.9 the prefix is a single-digit fraction of each set; the r13 positional filter prunes candidates BEFORE the dropDuplicates shuffle and the verify joins (a row-local integer compare on columns the join already carries — free at any scale, and the pruned set is what pays for the two verify joins); zero-miss is unconditional, zero-extra rests on in-corpus 64-bit shingle-hash injectivity (documented above)"),
 
     // ----- E12: LSH recall calibration curve (r11) -------------------
@@ -782,72 +799,10 @@ object Dedup extends Catalog {
     // integer division of BIGINT counts.
     "q192_lsh_recall_curve" -> Q(
       fn = (s, d) => {
-        // The organic corpus has pairs only at j ≈ 0 (random template
-        // text) and j ≈ 0.9 (the planted near-dups) — a curve with no
-        // mid-range has no misses to calibrate. Inject PREFIX TWINS at
-        // controlled similarity (q62/q68's honest-injection stance):
-        // for docs with doc_id % 7 == 3, a twin of the first
-        // k = max(3, n·(3 + doc_id%8)/10) words (doc_id%8 == 7 copies
-        // the WHOLE doc — the band-10 theorem case). A prefix's distinct
-        // shingles are a subset of the full doc's, so j = |sh_p|/|sh_f|
-        // lands near (3 + doc_id%8)/10 — deciles 2..10 populate, where
-        // a 4×2 geometry genuinely misses (recall 1-(1-j²)⁴).
-        val ws = split(lower(col("text")), " ")
-        val dd = docs(s, d).select(col("doc_id"), ws.as("ws"))
-        val twins = dd.filter(col("doc_id") % 7 === 3 && size(col("ws")) >= 10)
-          .select((col("doc_id") + 10000000L).as("doc_id"),
-            slice(col("ws"), lit(1), greatest(lit(3),
-              expr("CAST((size(ws) * (3 + doc_id % 8)) DIV 10 AS INT)")))
-              .as("ws"))
-        val shStr = dd.unionByName(twins)
-          .filter(size(col("ws")) >= 3)
-          // explicit-count repartition before the shingle/minhash map
-          // work (r17, guide §2.5 — see lshRecallPairs for the full
-          // rationale: single-row-group corpus, otherwise ONE task)
-          .repartition(
-            s.conf.get("spark.sql.shuffle.partitions").toInt,
-            col("doc_id"))
-          .select(col("doc_id"), array_distinct(
-            transform(sequence(lit(1), size(col("ws")) - 2),
-              i => array_join(slice(col("ws"), i, lit(3)), " "))).as("sh"))
-          .localCheckpoint() // shingles feed postings, sizes AND minhash
-        val sizes = shStr.select(col("doc_id"), size(col("sh")).as("sz"))
-        // postings join on the 64-bit shingle hash, not the string
-        // (r17, guide §2.3 — see lshRecallPairs; counts unchanged
-        // under the documented in-corpus xxhash64 injectivity, and the
-        // string-keyed oracle gate would catch any collision)
-        val ex = shStr.select(col("doc_id"), explode(col("sh")).as("g0"))
-          .select(col("doc_id"), xxhash64(col("g0")).as("g"))
-        val exact = ex.as("a").join(ex.as("b"),
-            col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .agg(count(lit(1)).as("inter"))
-          .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sz1")), "d1")
-          .join(sizes.select(col("doc_id").as("d2"), col("sz").as("sz2")), "d2")
-          .select(col("d1"), col("d2"), col("inter"),
-            (col("sz1") + col("sz2") - col("inter")).as("un"))
-          .filter(col("inter") * 5 >= col("un")) // j >= 0.2
-        // portable minhash signature: 8 md5-derived 48-bit hash mins
-        // native one-pass kernel (PortableMinHash) — bit-identical to
-        // the HOF spelling transform(sequence(0,7), p -> array_min(
-        // transform(sh, g -> conv(substr(md5('mh'||p||':'||g),1,12),
-        // 16,10)))) it replaced (PortableMinHashSpec), so the DuckDB
-        // oracle below is untouched; the interpreted HOF walked the
-        // shingle set once per hash function and dominated this query
-        val sig = shStr.select(col("doc_id"),
-          call_function("portable_minhash", col("sh"), lit(8)).as("mins"))
-          .localCheckpoint() // one signature pass feeds both join sides
-        val banded = sig.select(col("doc_id"),
-          posexplode(transform(sequence(lit(0), lit(3)), b =>
-            struct(element_at(col("mins"), b * 2 + 1).as("k1"),
-              element_at(col("mins"), b * 2 + 2).as("k2"))))
-            .as(Seq("band", "k")))
-        val cand = banded.as("a").join(banded.as("b"),
-            col("a.band") === col("b.band") && col("a.k") === col("b.k") &&
-            col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .dropDuplicates("d1", "d2")
-          .withColumn("rec", lit(1L))
+        // the twin corpus, exact truth and portable candidates are
+        // lshRecallBase's; q192 never builds q200's production leg
+        val (_, exact, candPort) = lshRecallBase(s, d)
+        val cand = candPort.withColumn("rec", lit(1L))
         exact.join(cand, Seq("d1", "d2"), "left")
           .select(expr("CAST((inter * 10) DIV un AS BIGINT)").as("band"),
             coalesce(col("rec"), lit(0L)).as("rec"))
@@ -963,7 +918,8 @@ object Dedup extends Catalog {
       fn = (s, d) => {
         val K = 8
         val W = 12
-        val dd = docs(s, d).select(col("doc_id"), lower(col("text")).as("t"))
+        val dd = Tables.documents(s, d)
+          .select(col("doc_id"), lower(col("text")).as("t"))
         val tw = dd.filter(col("doc_id") % 13 === 5)
           .select(col("doc_id"),
             expr("repeat(concat('m', CAST(doc_id AS STRING), 'q'), 8)")
@@ -978,26 +934,14 @@ object Dedup extends Catalog {
           .unionByName(tw.select((col("doc_id") + 30000000L).as("doc_id"),
             concat(col("marker"), lit(" "),
               array_join(slice(col("ws"), -10, 10), " ")).as("t")))
-          // repartition BEFORE the per-position md5 explode (r17, guide
-          // §2.5 "one huge unsplittable file → repartition right after
-          // the read"): the corpus parquet is a single row group, so
-          // without this the ~|chars| md5 evaluations all run in ONE
-          // scan task; hashing by doc_id both spreads the hot map 32
-          // ways AND pre-satisfies the winnowing window's (and the
-          // fp-distinct's) required distribution, so the exchange that
-          // used to carry the EXPLODED (doc, pos, hash) rows now moves
-          // whole documents instead — strictly fewer shuffled bytes
-          // (guide §2.3 "project before the exchange"). Measured r17:
-          // 4.36 → 1.99 s (sf0.1 bench methodology), oracle green.
-          // The count is
-          // EXPLICIT (q250's REPARTITION_BY_NUM stance): AQE sizes a
-          // keyed repartition by its INPUT bytes (~3 MB of text → 1
-          // partition) and cannot see the ~200× row fanout the explode
-          // applies after it.
-          .repartition(
-            s.conf.get("spark.sql.shuffle.partitions").toInt,
-            col("doc_id"))
-        val pos = corpus
+        // spread BEFORE the per-position md5 explode (r17, ~200× row
+        // fan-out): hashing by doc_id also pre-satisfies the winnowing
+        // window's (and the fp-distinct's) required distribution, so
+        // the exchange that used to carry the EXPLODED (doc, pos, hash)
+        // rows now moves whole documents instead — strictly fewer
+        // shuffled bytes (guide §2.3 "project before the exchange").
+        // Measured r17: 4.36 → 1.99 s (sf0.1 bench methodology).
+        val pos = Tables.spread(corpus, col("doc_id"))
           .filter(length(col("t")) >= K)
           .select(col("doc_id"),
             posexplode(transform(sequence(lit(1), length(col("t")) - (K - 1)),
@@ -1071,7 +1015,7 @@ object Dedup extends Catalog {
         // The xxh64 variant (SimHash64, ~2-3× faster/token) stays
         // registered for production paths that don't need the witness;
         // SimHash64Spec proves both against reference bit-walks.
-        docs(s, d)
+        Tables.documents(s, d)
           .filter(length(col("text")) > 0)
           .select(col("doc_id"),
             call_function("simhash64_md5", words).as("simhash")),
@@ -1139,7 +1083,7 @@ object Dedup extends Catalog {
         // 8-byte chunk hashes → pairs by shared-chunk count. The
         // long-document near-dup signal: robust to insertions because
         // chunk boundaries resynchronize after an edit.
-        val ch = docs(s, d)
+        val ch = Tables.documents(s, d)
           .filter(length(col("text")) > 0)
           .select(col("doc_id"),
             array_distinct(call_function("cdc_chunks", col("text"))).as("chunks"))
@@ -1187,35 +1131,11 @@ object Dedup extends Catalog {
         // near-dups at scale). Output: every doc, its group
         // representative (min doc_id), group size, and the keep-one
         // verdict.
-        val pairs = jaccardPairs(s, d)
-          .select(col("doc1").as("u"), col("doc2").as("v"))
-        val labels = ConnectedComponents.run(pairs)
-        val ids = docs(s, d).select(col("doc_id"))
-        val grouped = ids
-          .join(labels, ids("doc_id") === labels("node"), "left")
-          .select(col("doc_id"),
-            coalesce(col("label"), col("doc_id")).as("group_id"))
-        val sizes = grouped.groupBy(col("group_id"))
-          .agg(count(lit(1)).as("group_sz"))
-        grouped.join(sizes, "group_id")
+        sizedDupGroups(s, d)
           .select(col("doc_id"), col("group_id"), col("group_sz"),
             (col("doc_id") === col("group_id")).cast("int").as("kept"))
       },
-      sql = Some(s"""
-        WITH RECURSIVE
-        s AS (SELECT doc_id, $sqlShingles AS sh FROM documents),
-        pairs AS (
-          SELECT a.doc_id AS u, b.doc_id AS v
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE len(a.sh) > 0 AND len(b.sh) > 0
-            AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-                  (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= $JaccardTau),
-        edges AS (SELECT u, v FROM pairs UNION SELECT v AS u, u AS v FROM pairs),
-        reach AS (
-          SELECT doc_id AS node, doc_id AS label FROM documents
-          UNION
-          SELECT e.v AS node, r.label FROM reach r JOIN edges e ON e.u = r.node),
-        lab AS (SELECT node AS doc_id, min(label) AS group_id FROM reach GROUP BY node)
+      sql = Some(dupGroupsSql + """
         SELECT doc_id, group_id,
                count(*) OVER (PARTITION BY group_id) AS group_sz,
                CAST(doc_id = group_id AS INT) AS kept
@@ -1237,18 +1157,8 @@ object Dedup extends Catalog {
     // makes the result exact whatever side of the ulp f landed on.
     "q171_soft_dedup" -> Q(
       fn = (s, d) => {
-        val pairs = jaccardPairs(s, d)
-          .select(col("doc1").as("u"), col("doc2").as("v"))
-        val labels = ConnectedComponents.run(pairs)
-        val ids = docs(s, d).select(col("doc_id"))
-        val grouped = ids
-          .join(labels, ids("doc_id") === labels("node"), "left")
-          .select(col("doc_id"),
-            coalesce(col("label"), col("doc_id")).as("group_id"))
-        val sizes = grouped.groupBy(col("group_id"))
-          .agg(count(lit(1)).as("group_sz"))
         val f = floor(sqrt(col("group_sz").cast("double"))).cast("long")
-        grouped.join(sizes, "group_id")
+        sizedDupGroups(s, d)
           .withColumn("quota",
             when(f * f >= col("group_sz"), f).otherwise(f + 1L))
           .withColumn("rk", row_number().over(
@@ -1258,21 +1168,7 @@ object Dedup extends Catalog {
           .select(col("doc_id"), col("group_id"), col("group_sz"),
             col("quota"), (col("rk") <= col("quota")).cast("long").as("kept"))
       },
-      sql = Some(s"""
-        WITH RECURSIVE
-        s AS (SELECT doc_id, $sqlShingles AS sh FROM documents),
-        pairs AS (
-          SELECT a.doc_id AS u, b.doc_id AS v
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE len(a.sh) > 0 AND len(b.sh) > 0
-            AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-                  (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= $JaccardTau),
-        edges AS (SELECT u, v FROM pairs UNION SELECT v AS u, u AS v FROM pairs),
-        reach AS (
-          SELECT doc_id AS node, doc_id AS label FROM documents
-          UNION
-          SELECT e.v AS node, r.label FROM reach r JOIN edges e ON e.u = r.node),
-        lab AS (SELECT node AS doc_id, min(label) AS group_id FROM reach GROUP BY node),
+      sql = Some(dupGroupsSql + """,
         sz AS (SELECT doc_id, group_id,
                       count(*) OVER (PARTITION BY group_id) AS group_sz
                FROM lab),
@@ -1416,7 +1312,7 @@ object Dedup extends Catalog {
     "q89_chunk_dedup" -> Q(
       fn = (s, d) => {
         val ws = split(col("text"), " ")
-        val chunks = docs(s, d)
+        val chunks = Tables.documents(s, d)
           .select(col("doc_id"),
             transform(
               sequence(lit(0), ceil(size(ws) / lit(10.0)).cast("int") - 1),
@@ -1470,15 +1366,12 @@ object Dedup extends Catalog {
         // join; at scale the cap trades those pairs away deliberately
         // (recall over hot prefixes comes from extra blocking passes).
         val HotBlockCap = 256
-        val a = cappedBlocks(blockedFrame(s, d), HotBlockCap)
-          // explicit-count repartition before the barrier (r17, guide
-          // §2.5): the blocked frame is a broadcast-anti-join straight
-          // off the single-row-group corpus scan, so the checkpoint —
-          // and the levenshtein kernel probing it below — otherwise
-          // ran in ONE task; keyed on the blocking key the self-join
-          // uses
-          .repartition(
-            s.conf.get("spark.sql.shuffle.partitions").toInt, col("blk"))
+        // spread before the barrier (r17): the blocked frame is a
+        // broadcast anti-join straight off the corpus scan, so the
+        // checkpoint and the levenshtein kernel probing it ran in ONE
+        // task; keyed on the blocking key the self-join uses
+        val a = Tables.spread(
+            cappedBlocks(blockedFrame(s, d), HotBlockCap), col("blk"))
           .localCheckpoint() // barrier: cap once, not once per join side
         a.as("x").join(a.as("y"),
             col("x.blk") === col("y.blk") &&
@@ -1520,17 +1413,12 @@ object Dedup extends Catalog {
         // oracle sees the identical vocabulary.
         val DfCap = 1000
         val MinShared = 3
-        val base = docs(s, d)
-        val tf = base
-          // explicit-count repartition before the shingle explode
-          // (r17, guide §2.5): single-row-group corpus scan, so the
-          // tokenize + explode + xxhash64 map work otherwise ran in
-          // ONE task — and hash(doc_id) pre-satisfies the
-          // (doc_id, sh) tf-aggregation below, so the exchange that
-          // carried EXPLODED postings now moves whole documents
-          .repartition(
-            s.conf.get("spark.sql.shuffle.partitions").toInt,
-            col("doc_id"))
+        val base = Tables.documents(s, d)
+        // spread before the shingle explode (r17): hash(doc_id) also
+        // pre-satisfies the (doc_id, sh) tf-aggregation below, so the
+        // exchange that carried EXPLODED postings now moves whole
+        // documents
+        val tf = Tables.spread(base, col("doc_id"))
           .select(col("doc_id"), words.as("ws"))
           .filter(size(col("ws")) >= 3)
           .select(col("doc_id"),
@@ -1605,33 +1493,13 @@ object Dedup extends Catalog {
     // RNG state.
     "q116_groupwise_split" -> Q(
       fn = (s, d) => {
-        val pairs = jaccardPairs(s, d)
-          .select(col("doc1").as("u"), col("doc2").as("v"))
-        val labels = ConnectedComponents.run(pairs)
-        val ids = docs(s, d).select(col("doc_id"))
-        ids.join(labels, ids("doc_id") === labels("node"), "left")
-          .select(col("doc_id"),
-            coalesce(col("label"), col("doc_id")).as("group_id"))
+        dupGroups(s, d)
           .select(col("doc_id"), col("group_id"),
             when(substring(md5(concat(lit("g:"),
                 col("group_id").cast("string"))), 1, 2) < "cc",
               "train").otherwise("test").as("split"))
       },
-      sql = Some(s"""
-        WITH RECURSIVE
-        s AS (SELECT doc_id, $sqlShingles AS sh FROM documents),
-        pairs AS (
-          SELECT a.doc_id AS u, b.doc_id AS v
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE len(a.sh) > 0 AND len(b.sh) > 0
-            AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-                  (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= $JaccardTau),
-        edges AS (SELECT u, v FROM pairs UNION SELECT v AS u, u AS v FROM pairs),
-        reach AS (
-          SELECT doc_id AS node, doc_id AS label FROM documents
-          UNION
-          SELECT e.v AS node, r.label FROM reach r JOIN edges e ON e.u = r.node),
-        lab AS (SELECT node AS doc_id, min(label) AS group_id FROM reach GROUP BY node)
+      sql = Some(dupGroupsSql + """
         SELECT doc_id, group_id,
                CASE WHEN substr(md5('g:' || CAST(group_id AS VARCHAR)), 1, 2) < 'cc'
                     THEN 'train' ELSE 'test' END AS split
@@ -1655,7 +1523,7 @@ object Dedup extends Catalog {
     "q117_dup_ngram_coverage" -> Q(
       fn = (s, d) => {
         val N = 5
-        val base = docs(s, d)
+        val base = Tables.documents(s, d)
         val pos = base
           .select(col("doc_id"), words.as("ws"))
           .filter(size(col("ws")) >= N)
@@ -1709,16 +1577,13 @@ object Dedup extends Catalog {
     "q119_dup_span_removal" -> Q(
       fn = (s, d) => {
         val N = 5
-        val base = docs(s, d)
-        val toks = base.select(col("doc_id"), words.as("ws"))
-          // explicit-count repartition before the barrier (r17, guide
-          // §2.5): single-row-group corpus scan, so the per-position
-          // 5-gram xxhash64 explode and the token posexplode both ran
-          // in ONE task off a 1-partition checkpoint; hash(doc_id)
-          // also co-partitions the (doc_id, idx) anti-join's sides
-          .repartition(
-            s.conf.get("spark.sql.shuffle.partitions").toInt,
-            col("doc_id"))
+        val base = Tables.documents(s, d)
+        // spread before the barrier (r17): the per-position 5-gram
+        // xxhash64 explode and the token posexplode both ran in ONE
+        // task off a 1-partition checkpoint; hash(doc_id) also
+        // co-partitions the (doc_id, idx) anti-join's sides
+        val toks = Tables.spread(
+            base.select(col("doc_id"), words.as("ws")), col("doc_id"))
           .localCheckpoint() // one tokenize feeds positions AND the rebuild
         val pos = toks.filter(size(col("ws")) >= N)
           .select(col("doc_id"),

@@ -52,6 +52,28 @@ object Relational extends Catalog {
                  FROM lineitem l2 WHERE l2.l_partkey = p_partkey)
         GROUP BY p_brand"""
 
+  /** q04/q11's line items joined to their order, customer and
+    * (broadcast) nation */
+  private def nationLines(s: SparkSession, d: String): DataFrame = {
+    val li = t(s, d, "lineitem")
+    val o  = t(s, d, "orders")
+    val c  = t(s, d, "customer")
+    val n  = t(s, d, "nation")
+    li.join(o, col("l_orderkey") === col("o_orderkey"))
+      .join(c, col("o_custkey") === col("c_custkey"))
+      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+  }
+
+  /** q09/q74's shared oracle: q74 is q09 through BinnedRangeJoin, so
+    * both must return the same rows */
+  private val FollowEventsSql: String = """
+        SELECT e1.user_id, count(*) AS n_follow_events
+        FROM events e1 JOIN events e2
+          ON e1.user_id = e2.user_id
+         AND e2.ts > e1.ts
+         AND e2.ts <= e1.ts + INTERVAL 5 MINUTE
+        GROUP BY e1.user_id"""
+
   override def queries: Map[String, Q] = Map(
 
     // ----- E6: hash aggregate, multiple keys — TPC-H Q1 shape -------
@@ -123,13 +145,7 @@ object Relational extends Catalog {
     // ----- E4: multi-way inner join + broadcast dims ----------------
     "q04_join_revenue_by_nation" -> Q(
       fn = (s, d) => {
-        val li = t(s, d, "lineitem")
-        val o  = t(s, d, "orders")
-        val c  = t(s, d, "customer")
-        val n  = t(s, d, "nation")
-        li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .join(c, col("o_custkey") === col("c_custkey"))
-          .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+        nationLines(s, d)
           .groupBy(col("n_name"), year(col("o_orderdate")).cast("long").as("o_year"))
           .agg(sum(revenue).as("revenue"),
                count(lit(1)).as("n_items"))
@@ -307,45 +323,23 @@ object Relational extends Catalog {
     // subqueries into semi/anti joins keyed on l_orderkey with the
     // l_suppkey <> residual attached — never a per-row re-execution,
     // never a cartesian (PlanSpec-asserted).
-    "q187_tpch_q21_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "supplier").createOrReplaceTempView("q187_supplier")
-        t(s, d, "lineitem").createOrReplaceTempView("q187_lineitem")
-        t(s, d, "orders").createOrReplaceTempView("q187_orders")
-        t(s, d, "nation").createOrReplaceTempView("q187_nation")
-        s.sql("""
-          SELECT n_name, s_name, count(*) AS numwait
-          FROM q187_supplier, q187_lineitem l1, q187_orders, q187_nation
-          WHERE s_suppkey = l1.l_suppkey
-            AND o_orderkey = l1.l_orderkey
-            AND o_orderstatus = 'F'
-            AND l1.l_returnflag = 'R'
-            AND EXISTS (SELECT * FROM q187_lineitem l2
-                        WHERE l2.l_orderkey = l1.l_orderkey
-                          AND l2.l_suppkey <> l1.l_suppkey)
-            AND NOT EXISTS (SELECT * FROM q187_lineitem l3
-                            WHERE l3.l_orderkey = l1.l_orderkey
-                              AND l3.l_suppkey <> l1.l_suppkey
-                              AND l3.l_returnflag = 'R')
-            AND s_nationkey = n_nationkey
-          GROUP BY n_name, s_name""")
-      },
-      sql = Some("""
+    "q187_tpch_q21_shape" -> Q.onViews("q187", Seq("supplier", "lineitem", "orders", "nation"),
+      sql = tb => s"""
         SELECT n_name, s_name, count(*) AS numwait
-        FROM supplier, lineitem l1, orders, nation
+        FROM ${tb("supplier")}, ${tb("lineitem")} l1, ${tb("orders")}, ${tb("nation")}
         WHERE s_suppkey = l1.l_suppkey
           AND o_orderkey = l1.l_orderkey
           AND o_orderstatus = 'F'
           AND l1.l_returnflag = 'R'
-          AND EXISTS (SELECT * FROM lineitem l2
+          AND EXISTS (SELECT * FROM ${tb("lineitem")} l2
                       WHERE l2.l_orderkey = l1.l_orderkey
                         AND l2.l_suppkey <> l1.l_suppkey)
-          AND NOT EXISTS (SELECT * FROM lineitem l3
+          AND NOT EXISTS (SELECT * FROM ${tb("lineitem")} l3
                           WHERE l3.l_orderkey = l1.l_orderkey
                             AND l3.l_suppkey <> l1.l_suppkey
                             AND l3.l_returnflag = 'R')
           AND s_nationkey = n_nationkey
-        GROUP BY n_name, s_name"""),
+        GROUP BY n_name, s_name""",
       scaleNote = "decorrelation is the whole game: both EXISTS rewrite into ONE semi and ONE anti join each keyed on l_orderkey (the <> residual rides the equi key), so the fact joins itself twice on its natural key instead of re-running a subquery per row — three l_orderkey shuffles AQE can co-plan, nation broadcasts into supplier, the status/returnflag predicates push into the scans, and the aggregate is at most |suppliers| rows (grouped per nation — Q21's single-nation literal is a group key here so the query is non-empty at every test SF; at 100 TB add the nation predicate back and it prunes the broadcast side); the textbook worst-case correlated query runs as a linear join tree at any scale"),
 
     // ----- E4/SQL surface: the canonical TPC-H Q18 shape --------------
@@ -411,33 +405,17 @@ object Relational extends Catalog {
     // corpus SHAPE, not its size (both dimensions scale with SF):
     // 10/10 suppliers qualify at sf0.001, 59/100 at sf0.01, 63/1000
     // at sf0.1 — non-empty everywhere, selective where the gate runs.
-    "q202_tpch_q20_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "supplier").createOrReplaceTempView("q202_supplier")
-        t(s, d, "lineitem").createOrReplaceTempView("q202_lineitem")
-        t(s, d, "part").createOrReplaceTempView("q202_part")
-        t(s, d, "nation").createOrReplaceTempView("q202_nation")
-        s.sql("""
-          SELECT n_name, count(*) AS n_qualified
-          FROM q202_supplier JOIN q202_nation ON s_nationkey = n_nationkey
-          WHERE s_suppkey IN (
-            SELECT l_suppkey FROM q202_lineitem
-            WHERE l_partkey IN (SELECT p_partkey FROM q202_part
-                                WHERE p_type = 'PROMO' AND p_size > 25)
-            GROUP BY l_suppkey, l_partkey
-            HAVING sum(CAST(l_quantity AS BIGINT)) > 80)
-          GROUP BY n_name""")
-      },
-      sql = Some("""
+    "q202_tpch_q20_shape" -> Q.onViews("q202", Seq("supplier", "lineitem", "part", "nation"),
+      sql = tb => s"""
         SELECT n_name, count(*) AS n_qualified
-        FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        FROM ${tb("supplier")} JOIN ${tb("nation")} ON s_nationkey = n_nationkey
         WHERE s_suppkey IN (
-          SELECT l_suppkey FROM lineitem
-          WHERE l_partkey IN (SELECT p_partkey FROM part
+          SELECT l_suppkey FROM ${tb("lineitem")}
+          WHERE l_partkey IN (SELECT p_partkey FROM ${tb("part")}
                               WHERE p_type = 'PROMO' AND p_size > 25)
           GROUP BY l_suppkey, l_partkey
           HAVING sum(CAST(l_quantity AS BIGINT)) > 80)
-        GROUP BY n_name"""),
+        GROUP BY n_name""",
       scaleNote = "chained membership stays a LINEAR plan: the part predicate prunes the fact FIRST (a broadcast semi join — the filtered part-key set is dimension-sized), the per-(supplier, part) aggregate partial-aggregates map-side on the pruned fact, the HAVING cut shrinks it to the qualifying-supplier frame before the outer semi join touches supplier, and nation broadcasts for the final |nations|-row fold; nothing in the nesting depth adds a pass over the fact — the textbook risk (re-running the inner membership per outer row) is exactly what the decorrelation rewrite removes, and AQE can broadcast the shrunken semi sides at any corpus size"),
 
     // ----- E4/SQL surface: the canonical TPC-H Q22 shape (r13) --------
@@ -461,32 +439,12 @@ object Relational extends Catalog {
     // never compare against a double average — cross-multiply exact
     // integer cents, cents·n > total, via two scalar subqueries that
     // Catalyst plans as one-row subquery broadcasts.
-    "q209_tpch_q22_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "customer").createOrReplaceTempView("q209_customer")
-        t(s, d, "orders").createOrReplaceTempView("q209_orders")
-        s.sql("""
-          WITH cust AS (
-            SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS cntrycode,
-                   CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-            FROM q209_customer
-          )
-          SELECT cntrycode,
-                 CAST(count(*) AS BIGINT) AS numcust,
-                 CAST(sum(cents) AS BIGINT) AS totacctbal_cents
-          FROM cust
-          WHERE cents * (SELECT count(*) FROM cust WHERE cents > 0)
-                > (SELECT CAST(sum(cents) AS BIGINT) FROM cust
-                   WHERE cents > 0)
-            AND c_custkey NOT IN (SELECT o_custkey FROM q209_orders
-                                  WHERE o_orderpriority = '1-URGENT')
-          GROUP BY cntrycode""")
-      },
-      sql = Some("""
+    "q209_tpch_q22_shape" -> Q.onViews("q209", Seq("customer", "orders"),
+      sql = tb => s"""
         WITH cust AS (
           SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS cntrycode,
                  CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-          FROM customer
+          FROM ${tb("customer")}
         )
         SELECT cntrycode,
                CAST(count(*) AS BIGINT) AS numcust,
@@ -495,9 +453,9 @@ object Relational extends Catalog {
         WHERE cents * (SELECT count(*) FROM cust WHERE cents > 0)
               > (SELECT CAST(sum(cents) AS BIGINT) FROM cust
                  WHERE cents > 0)
-          AND c_custkey NOT IN (SELECT o_custkey FROM orders
+          AND c_custkey NOT IN (SELECT o_custkey FROM ${tb("orders")}
                                 WHERE o_orderpriority = '1-URGENT')
-        GROUP BY cntrycode"""),
+        GROUP BY cntrycode""",
       scaleNote = "the NOT IN plans as ONE null-aware anti join: the priority predicate pushes into the orders scan, the urgent-customer key set is dimension-sized (broadcastable at any corpus — it shrinks the fact to |urgent customers| before shipping), and the null-awareness costs one extra has-null flag on the broadcast side, not a second pass; the scalar AVG cut is two one-row subquery broadcasts over the same |customers| frame (exact integer cents, cross-multiplied — no double average crosses an engine boundary), and the final fold is |nations| rows; at 100 TB the build side must stay the SUBQUERY side — Spark refuses to shuffle a null-aware anti join, so a fact-sized NOT IN list is the one shape to avoid (rewrite to NOT EXISTS when the inner key is provably non-null, which IS a plain anti join — q187's path)"),
 
     // ----- E4/SQL surface: the canonical TPC-H Q17 shape (r13) --------
@@ -634,46 +592,22 @@ object Relational extends Catalog {
     // tie membership is engine-independent. DISTINCT collapses
     // repeated identical offers from the same supplier (one supplier
     // may quote the same min price on several lines).
-    "q221_tpch_q2_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "part").createOrReplaceTempView("q221_part")
-        t(s, d, "lineitem").createOrReplaceTempView("q221_lineitem")
-        t(s, d, "supplier").createOrReplaceTempView("q221_supplier")
-        t(s, d, "nation").createOrReplaceTempView("q221_nation")
-        t(s, d, "region").createOrReplaceTempView("q221_region")
-        s.sql("""
-          SELECT DISTINCT p_partkey, p_name, s_name, n_name,
-                 CAST(round(l_extendedprice * 100) AS BIGINT) AS cost_cents
-          FROM q221_part, q221_lineitem, q221_supplier, q221_nation,
-               q221_region
-          WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
-            AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-            AND r_name = 'EUROPE' AND p_size < 10
-            AND CAST(round(l_extendedprice * 100) AS BIGINT) = (
-              SELECT min(CAST(round(l2.l_extendedprice * 100) AS BIGINT))
-              FROM q221_lineitem l2, q221_supplier s2, q221_nation n2,
-                   q221_region r2
-              WHERE l2.l_partkey = p_partkey
-                AND s2.s_suppkey = l2.l_suppkey
-                AND s2.s_nationkey = n2.n_nationkey
-                AND n2.n_regionkey = r2.r_regionkey
-                AND r2.r_name = 'EUROPE')""")
-      },
-      sql = Some("""
+    "q221_tpch_q2_shape" -> Q.onViews("q221", Seq("part", "lineitem", "supplier", "nation", "region"),
+      sql = tb => s"""
         SELECT DISTINCT p_partkey, p_name, s_name, n_name,
                CAST(round(l_extendedprice * 100) AS BIGINT) AS cost_cents
-        FROM part, lineitem, supplier, nation, region
+        FROM ${tb("part")}, ${tb("lineitem")}, ${tb("supplier")}, ${tb("nation")}, ${tb("region")}
         WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
           AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
           AND r_name = 'EUROPE' AND p_size < 10
           AND CAST(round(l_extendedprice * 100) AS BIGINT) = (
             SELECT min(CAST(round(l2.l_extendedprice * 100) AS BIGINT))
-            FROM lineitem l2, supplier s2, nation n2, region r2
+            FROM ${tb("lineitem")} l2, ${tb("supplier")} s2, ${tb("nation")} n2, ${tb("region")} r2
             WHERE l2.l_partkey = p_partkey
               AND s2.s_suppkey = l2.l_suppkey
               AND s2.s_nationkey = n2.n_nationkey
               AND n2.n_regionkey = r2.r_regionkey
-              AND r2.r_name = 'EUROPE')"""),
+              AND r2.r_name = 'EUROPE')""",
       scaleNote = "decorrelation turns the per-row re-execution of a four-table join into ONE per-partkey min over the region-filtered offer tree, joined back on the very key the outer probe already shuffles on (PlanSpec pins exactly two fact scans — outer probe + decorrelated aggregate — and no cartesian); inside the aggregate the dimension chain (supplier ⋈ nation ⋈ region) broadcasts at any corpus size, the region predicate prunes suppliers BEFORE the fact join, and the min partial-aggregates map-side to |parts| rows; the arg-min equality is a row-local integer compare, so the only data-sized work is two passes over the offers — at 100 TB the region-filtered (partkey → min cost) frame is the natural materialization when many Q2-style lookups share a region, the same partial-reuse stance as q219"),
 
     // ----- E4/SQL surface: the canonical TPC-H Q19 shape (r14) --------
@@ -692,44 +626,14 @@ object Relational extends Catalog {
     // no p_container / l_shipmode); revenue is q219's exact
     // cents × (100 − discount-percent) discipline, folded per brand
     // so the gate checks membership of every band.
-    "q225_tpch_q19_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "part").createOrReplaceTempView("q225_part")
-        t(s, d, "lineitem").createOrReplaceTempView("q225_lineitem")
-        s.sql("""
-          SELECT p_brand,
-                 count(*) AS n_lines,
-                 CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                          * (100 - CAST(round(l_discount * 100) AS BIGINT)))
-                   AS BIGINT) AS revenue_e4
-          FROM q225_lineitem, q225_part
-          WHERE (p_partkey = l_partkey
-                 AND p_brand IN ('Brand#1', 'Brand#2', 'Brand#3',
-                                 'Brand#4', 'Brand#5')
-                 AND p_type = 'SMALL' AND p_size BETWEEN 1 AND 10
-                 AND l_quantity >= 1 AND l_quantity <= 15
-                 AND l_returnflag = 'N')
-             OR (p_partkey = l_partkey
-                 AND p_brand IN ('Brand#6', 'Brand#7', 'Brand#8',
-                                 'Brand#9', 'Brand#10')
-                 AND p_type = 'MEDIUM' AND p_size BETWEEN 1 AND 20
-                 AND l_quantity >= 10 AND l_quantity <= 25
-                 AND l_returnflag = 'N')
-             OR (p_partkey = l_partkey
-                 AND p_brand IN ('Brand#11', 'Brand#12', 'Brand#13',
-                                 'Brand#14', 'Brand#15')
-                 AND p_type = 'LARGE' AND p_size BETWEEN 1 AND 30
-                 AND l_quantity >= 20 AND l_quantity <= 35
-                 AND l_returnflag = 'N')
-          GROUP BY p_brand""")
-      },
-      sql = Some("""
+    "q225_tpch_q19_shape" -> Q.onViews("q225", Seq("part", "lineitem"),
+      sql = tb => s"""
         SELECT p_brand,
                count(*) AS n_lines,
                CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
                         * (100 - CAST(round(l_discount * 100) AS BIGINT)))
                  AS BIGINT) AS revenue_e4
-        FROM lineitem, part
+        FROM ${tb("lineitem")}, ${tb("part")}
         WHERE (p_partkey = l_partkey
                AND p_brand IN ('Brand#1', 'Brand#2', 'Brand#3',
                                'Brand#4', 'Brand#5')
@@ -748,7 +652,7 @@ object Relational extends Catalog {
                AND p_type = 'LARGE' AND p_size BETWEEN 1 AND 30
                AND l_quantity >= 20 AND l_quantity <= 35
                AND l_returnflag = 'N')
-        GROUP BY p_brand"""),
+        GROUP BY p_brand""",
       scaleNote = "the disjunction never reaches the join operator as its KEY: the common p_partkey = l_partkey conjunct factors out as the hash-join equality, each side's OR-of-local-bands pushes into its parquet scan (the part scan reads only the three brand/type/size bands, the lineitem scan only the quantity/flag bands — PushedFilters pinned by PlanSpec), and the residual OR evaluates row-locally on the join's survivors; at 100 TB the pushed lineitem disjunction is the whole game — row-group stats skip everything outside the quantity bands before a single join row materializes — and the filtered part side is dimension-sized, so AQE broadcasts it"),
 
     // ----- E4/SQL surface: the canonical TPC-H Q13 shape (r14) --------
@@ -770,29 +674,16 @@ object Relational extends Catalog {
     // non-empty at every SF (20/220/2053 customers at
     // sf0.001/0.01/0.1). Double aggregation: per-customer counts,
     // then the |distinct counts|-row distribution.
-    "q230_tpch_q13_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "customer").createOrReplaceTempView("q230_customer")
-        t(s, d, "orders").createOrReplaceTempView("q230_orders")
-        s.sql("""
-          SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-          FROM (
-            SELECT c_custkey,
-                   CAST(count(o_orderkey) AS BIGINT) AS c_count
-            FROM q230_customer LEFT OUTER JOIN q230_orders
-              ON c_custkey = o_custkey AND o_orderpriority = '5-LOW'
-            GROUP BY c_custkey) c_orders
-          GROUP BY c_count""")
-      },
-      sql = Some("""
+    "q230_tpch_q13_shape" -> Q.onViews("q230", Seq("customer", "orders"),
+      sql = tb => s"""
         SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
         FROM (
           SELECT c_custkey,
                  CAST(count(o_orderkey) AS BIGINT) AS c_count
-          FROM customer LEFT OUTER JOIN orders
+          FROM ${tb("customer")} LEFT OUTER JOIN ${tb("orders")}
             ON c_custkey = o_custkey AND o_orderpriority = '5-LOW'
           GROUP BY c_custkey) c_orders
-        GROUP BY c_count"""),
+        GROUP BY c_count""",
       scaleNote = "the ON-clause predicate filters the NULLABLE side, so it pushes all the way into the orders scan (row-group pruning on the priority dictionary) BEFORE the join — the outer join then ships only qualifying orders, and the per-customer count partial-aggregates map-side on the join's own c_custkey partitioning (AQE co-plans the exchange); the second aggregate folds |customers| rows to the |distinct counts|-sized histogram, so the only fact-sized work is the one pruned scan + one shuffle; at 100 TB the customer side stays unfiltered by design (every customer must reach the zero class), which is why the pushdown asymmetry — prune the nullable side, never the preserved side — is the whole plan",
     ),
 
@@ -812,46 +703,23 @@ object Relational extends Catalog {
     // revenue per (supp_nation, cust_nation, year) in q219's exact
     // cents × (100 − disc); both directions of the pair are non-empty
     // at every SF (NATION_3 ↔ NATION_8).
-    "q234_tpch_q7_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "lineitem").createOrReplaceTempView("q234_lineitem")
-        t(s, d, "orders").createOrReplaceTempView("q234_orders")
-        t(s, d, "customer").createOrReplaceTempView("q234_customer")
-        t(s, d, "supplier").createOrReplaceTempView("q234_supplier")
-        t(s, d, "nation").createOrReplaceTempView("q234_nation")
-        s.sql("""
-          SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                 CAST(year(l_shipdate) AS BIGINT) AS l_year,
-                 count(*) AS n_lines,
-                 CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                          * (100 - CAST(round(l_discount * 100) AS BIGINT)))
-                   AS BIGINT) AS revenue_e4
-          FROM q234_lineitem, q234_orders, q234_customer,
-               q234_supplier, q234_nation n1, q234_nation n2
-          WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
-            AND c_custkey = o_custkey
-            AND n1.n_nationkey = s_nationkey
-            AND n2.n_nationkey = c_nationkey
-            AND ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_8')
-              OR (n1.n_name = 'NATION_8' AND n2.n_name = 'NATION_3'))
-          GROUP BY n1.n_name, n2.n_name, year(l_shipdate)""")
-      },
-      sql = Some("""
+    "q234_tpch_q7_shape" -> Q.onViews("q234", Seq("lineitem", "orders", "customer", "supplier", "nation"),
+      sql = tb => s"""
         SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                CAST(year(l_shipdate) AS BIGINT) AS l_year,
                count(*) AS n_lines,
                CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
                         * (100 - CAST(round(l_discount * 100) AS BIGINT)))
                  AS BIGINT) AS revenue_e4
-        FROM lineitem, orders, customer, supplier,
-             nation n1, nation n2
+        FROM ${tb("lineitem")}, ${tb("orders")}, ${tb("customer")}, ${tb("supplier")},
+             ${tb("nation")} n1, ${tb("nation")} n2
         WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
           AND c_custkey = o_custkey
           AND n1.n_nationkey = s_nationkey
           AND n2.n_nationkey = c_nationkey
           AND ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_8')
             OR (n1.n_name = 'NATION_8' AND n2.n_name = 'NATION_3'))
-        GROUP BY n1.n_name, n2.n_name, year(l_shipdate)"""),
+        GROUP BY n1.n_name, n2.n_name, year(l_shipdate)""",
       scaleNote = "the derived per-scan disjunctions are the whole plan at 100 TB: each nation scan prunes to the TWO named nations (pushed Or-filter, plan-pinned), which shrinks supplier and customer to the pair's members BEFORE the fact joins — so the fact shuffles only pair-member lines while the un-derivable cross-dimension OR evaluates row-locally on the survivors (a residual over an already-pair-pruned frame, nearly free); the dims broadcast at any corpus size, the fact keys ride l_suppkey/l_orderkey/o_custkey with AQE co-planning, and the fold is |2 directions × years| rows; the anti-pattern this gates against is planning the OR as a post-join filter WITHOUT the derived scans — correct but scanning every nation's lines through three joins first",
     ),
 
@@ -1028,40 +896,13 @@ object Relational extends Catalog {
     // exact integer cast, so the profit fold never crosses an engine
     // boundary as a double. The '%widget%' cut is Q9's '%green%' on
     // this corpus's p_name vocabulary (27/190 parts at sf0.001).
-    "q238_tpch_q9_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "lineitem").createOrReplaceTempView("q238_lineitem")
-        t(s, d, "orders").createOrReplaceTempView("q238_orders")
-        t(s, d, "supplier").createOrReplaceTempView("q238_supplier")
-        t(s, d, "nation").createOrReplaceTempView("q238_nation")
-        t(s, d, "part").createOrReplaceTempView("q238_part")
-        s.sql("""
-          WITH cost AS (
-            SELECT l_partkey AS ck_part, l_suppkey AS ck_supp,
-                   min(CAST(round(l_extendedprice * 100) AS BIGINT))
-                     AS cost_cents
-            FROM q238_lineitem GROUP BY 1, 2)
-          SELECT n_name AS nation,
-                 CAST(year(o_orderdate) AS BIGINT) AS o_year,
-                 count(*) AS n_lines,
-                 CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                          * (100 - CAST(round(l_discount * 100) AS BIGINT))
-                          - cost_cents * CAST(l_quantity AS BIGINT) * 100)
-                   AS BIGINT) AS profit_e4
-          FROM q238_lineitem, q238_orders, q238_supplier, q238_nation,
-               q238_part, cost
-          WHERE o_orderkey = l_orderkey AND s_suppkey = l_suppkey
-            AND s_nationkey = n_nationkey AND p_partkey = l_partkey
-            AND ck_part = l_partkey AND ck_supp = l_suppkey
-            AND p_name LIKE '%widget%'
-          GROUP BY 1, 2""")
-      },
-      sql = Some("""
+    "q238_tpch_q9_shape" -> Q.onViews("q238", Seq("lineitem", "orders", "supplier", "nation", "part"),
+      sql = tb => s"""
         WITH cost AS (
           SELECT l_partkey AS ck_part, l_suppkey AS ck_supp,
                  min(CAST(round(l_extendedprice * 100) AS BIGINT))
                    AS cost_cents
-          FROM lineitem GROUP BY 1, 2)
+          FROM ${tb("lineitem")} GROUP BY 1, 2)
         SELECT n_name AS nation,
                CAST(year(o_orderdate) AS BIGINT) AS o_year,
                count(*) AS n_lines,
@@ -1069,12 +910,12 @@ object Relational extends Catalog {
                         * (100 - CAST(round(l_discount * 100) AS BIGINT))
                         - cost_cents * CAST(l_quantity AS BIGINT) * 100)
                  AS BIGINT) AS profit_e4
-        FROM lineitem, orders, supplier, nation, part, cost
+        FROM ${tb("lineitem")}, ${tb("orders")}, ${tb("supplier")}, ${tb("nation")}, ${tb("part")}, cost
         WHERE o_orderkey = l_orderkey AND s_suppkey = l_suppkey
           AND s_nationkey = n_nationkey AND p_partkey = l_partkey
           AND ck_part = l_partkey AND ck_supp = l_suppkey
           AND p_name LIKE '%widget%'
-        GROUP BY 1, 2"""),
+        GROUP BY 1, 2""",
       scaleNote = "the measure join is the plan's center of gravity and it is already optimal: the cost source partial-aggregates map-side to |(part, supp)| rows and joins the probe on the SAME (l_partkey, l_suppkey) composite both sides shuffle on (PlanSpec pins exactly two fact scans — probe + cost fold — no cartesian, dims broadcast), so the second measure costs one extra pass + one co-keyed exchange, never a re-execution per row; the '%widget%' cut broadcasts through the part join and prunes the PROBE before its shuffle but deliberately NOT the cost fold (supplycost exists for every part, Q9's semantics) — at 100 TB the cost frame is partsupp-sized (|parts|×|supps per part|, ~1e4 smaller than the fact) and is the natural materialization when many Q9-style reports share it, q219/q221's partial-reuse stance; the (nation, year) rollup is |nations|×|years| rows off a map-side partial"),
 
     // ----- E4/SQL surface: the canonical TPC-H Q3 shape (r15) ---------
@@ -1137,33 +978,13 @@ object Relational extends Catalog {
     // sort actually hurts (sorting every customer group to read 20),
     // and where the group-by carries descriptive columns (c_name,
     // n_name) that must ride the aggregate key, not a post-join.
-    "q240_tpch_q10_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "customer").createOrReplaceTempView("q240_customer")
-        t(s, d, "orders").createOrReplaceTempView("q240_orders")
-        t(s, d, "lineitem").createOrReplaceTempView("q240_lineitem")
-        t(s, d, "nation").createOrReplaceTempView("q240_nation")
-        s.sql("""
-          SELECT c_custkey, c_name, n_name,
-                 CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                          * (100 - CAST(round(l_discount * 100) AS BIGINT)))
-                   AS BIGINT) AS revenue_e4
-          FROM q240_customer, q240_orders, q240_lineitem, q240_nation
-          WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-            AND c_nationkey = n_nationkey
-            AND l_returnflag = 'R'
-            AND o_orderdate >= TIMESTAMP '1999-01-01'
-            AND o_orderdate < TIMESTAMP '1999-04-01'
-          GROUP BY 1, 2, 3
-          ORDER BY revenue_e4 DESC, c_custkey
-          LIMIT 20""")
-      },
-      sql = Some("""
+    "q240_tpch_q10_shape" -> Q.onViews("q240", Seq("customer", "orders", "lineitem", "nation"),
+      sql = tb => s"""
         SELECT c_custkey, c_name, n_name,
                CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
                         * (100 - CAST(round(l_discount * 100) AS BIGINT)))
                  AS BIGINT) AS revenue_e4
-        FROM customer, orders, lineitem, nation
+        FROM ${tb("customer")}, ${tb("orders")}, ${tb("lineitem")}, ${tb("nation")}
         WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
           AND c_nationkey = n_nationkey
           AND l_returnflag = 'R'
@@ -1171,7 +992,7 @@ object Relational extends Catalog {
           AND o_orderdate < TIMESTAMP '1999-04-01'
         GROUP BY 1, 2, 3
         ORDER BY revenue_e4 DESC, c_custkey
-        LIMIT 20"""),
+        LIMIT 20""",
       scaleNote = "same heap-above-aggregate contract as q239 (TakeOrderedAndProject over the final HashAggregate, PlanSpec-pinned) but at the grain where it matters most: the group frame is |active customers| — far too big to single-task sort, trivially cheap to heap — and the half-open quarter reaches the orders scan as row-group min/max pruning so the fact pass touches one quarter's rows; the descriptive columns (c_name, n_name) ride the group key (functionally dependent on c_custkey — zero extra groups, saves the post-limit join a 100 TB plan would otherwise re-shuffle for), nation broadcasts, and the returnflag cut prunes lineitem at its scan"),
 
     // ----- E4/SQL surface: the canonical TPC-H Q4 shape (r15) ---------
@@ -1184,31 +1005,17 @@ object Relational extends Catalog {
     // commitdate < receiptdate) rides the semi join as a residual,
     // never a re-executed subquery. 43/60 quarter orders qualify at
     // sf0.001 — selective, not vacuous.
-    "q244_tpch_q4_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("q244_orders")
-        t(s, d, "lineitem").createOrReplaceTempView("q244_lineitem")
-        s.sql("""
-          SELECT o_orderpriority, count(*) AS order_count
-          FROM q244_orders
-          WHERE o_orderdate >= TIMESTAMP '1999-07-01'
-            AND o_orderdate < TIMESTAMP '1999-10-01'
-            AND EXISTS (
-              SELECT 1 FROM q244_lineitem
-              WHERE l_orderkey = o_orderkey
-                AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-          GROUP BY 1""")
-      },
-      sql = Some("""
+    "q244_tpch_q4_shape" -> Q.onViews("q244", Seq("orders", "lineitem"),
+      sql = tb => s"""
         SELECT o_orderpriority, count(*) AS order_count
-        FROM orders
+        FROM ${tb("orders")}
         WHERE o_orderdate >= TIMESTAMP '1999-07-01'
           AND o_orderdate < TIMESTAMP '1999-10-01'
           AND EXISTS (
-            SELECT 1 FROM lineitem
+            SELECT 1 FROM ${tb("lineitem")}
             WHERE l_orderkey = o_orderkey
               AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        GROUP BY 1"""),
+        GROUP BY 1""",
       scaleNote = "the EXISTS decorrelates to ONE LeftSemi hash join on o_orderkey with the 60-day lateness test as the join's residual condition (plan-pinned: semi join present, no cartesian, no per-row re-execution), so the whole query is quarter-pruned orders ⋈ semi lineitem + a 5-row priority fold; at 100 TB the quarter cut reaches the orders scan as row-group pruning and the semi join's build side is the quarter's orders — the lineitem side streams, keeps nothing, and the aggregate is a map-side partial over ≤5 groups"),
 
     // ----- E4/SQL surface: the canonical TPC-H Q6 shape (r15) ---------
@@ -1220,30 +1027,17 @@ object Relational extends Catalog {
     // e4 integers. The discount band compares INTEGER percent
     // (round(l_discount·100) BETWEEN 5 AND 7) — never a double
     // BETWEEN across an engine boundary.
-    "q245_tpch_q6_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "lineitem").createOrReplaceTempView("q245_lineitem")
-        s.sql("""
-          SELECT count(*) AS n_lines,
-                 CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                          * CAST(round(l_discount * 100) AS BIGINT))
-                   AS BIGINT) AS revenue_e4
-          FROM q245_lineitem
-          WHERE l_shipdate >= TIMESTAMP '1999-01-01'
-            AND l_shipdate < TIMESTAMP '2000-01-01'
-            AND CAST(round(l_discount * 100) AS BIGINT) BETWEEN 5 AND 7
-            AND l_quantity < 24""")
-      },
-      sql = Some("""
+    "q245_tpch_q6_shape" -> Q.onViews("q245", Seq("lineitem"),
+      sql = tb => s"""
         SELECT count(*) AS n_lines,
                CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
                         * CAST(round(l_discount * 100) AS BIGINT))
                  AS BIGINT) AS revenue_e4
-        FROM lineitem
+        FROM ${tb("lineitem")}
         WHERE l_shipdate >= TIMESTAMP '1999-01-01'
           AND l_shipdate < TIMESTAMP '2000-01-01'
           AND CAST(round(l_discount * 100) AS BIGINT) BETWEEN 5 AND 7
-          AND l_quantity < 24"""),
+          AND l_quantity < 24""",
       scaleNote = "the canonical scan-bound query: the date range and quantity cap push into the parquet scan as row-group min/max pruning (plan-pinned) and the whole answer is a 1-row map-side partial — zero shuffles of data, one of partials; the discount band is computed (round ×100) so it stays a post-scan codegen filter, the documented cost of exact integer semantics — at 100 TB the date predicate is the lever (a year of a decade-long table is ~10% of row groups) and this query IS the yardstick for scan throughput every engine bench leads with"),
 
     // ----- E4/SQL surface: the canonical TPC-H Q12 shape (r15) --------
@@ -1254,26 +1048,8 @@ object Relational extends Catalog {
     // row, and both branches fold in the single pass (never two
     // priority-filtered scans). l_returnflag ∈ (R, N) stands in for
     // Q12's two ship modes (this corpus has no l_shipmode).
-    "q246_tpch_q12_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "orders").createOrReplaceTempView("q246_orders")
-        t(s, d, "lineitem").createOrReplaceTempView("q246_lineitem")
-        s.sql("""
-          SELECT l_returnflag,
-                 CAST(sum(CASE WHEN o_orderpriority IN
-                     ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT)
-                   AS high_line_count,
-                 CAST(sum(CASE WHEN o_orderpriority NOT IN
-                     ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT)
-                   AS low_line_count
-          FROM q246_orders, q246_lineitem
-          WHERE o_orderkey = l_orderkey
-            AND l_returnflag IN ('R', 'N')
-            AND l_shipdate >= TIMESTAMP '1999-01-01'
-            AND l_shipdate < TIMESTAMP '2000-01-01'
-          GROUP BY 1""")
-      },
-      sql = Some("""
+    "q246_tpch_q12_shape" -> Q.onViews("q246", Seq("orders", "lineitem"),
+      sql = tb => s"""
         SELECT l_returnflag,
                CAST(sum(CASE WHEN o_orderpriority IN
                    ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT)
@@ -1281,12 +1057,12 @@ object Relational extends Catalog {
                CAST(sum(CASE WHEN o_orderpriority NOT IN
                    ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT)
                  AS low_line_count
-        FROM orders, lineitem
+        FROM ${tb("orders")}, ${tb("lineitem")}
         WHERE o_orderkey = l_orderkey
           AND l_returnflag IN ('R', 'N')
           AND l_shipdate >= TIMESTAMP '1999-01-01'
           AND l_shipdate < TIMESTAMP '2000-01-01'
-        GROUP BY 1"""),
+        GROUP BY 1""",
       scaleNote = "one pass, one join: the returnflag IN and the year range prune lineitem AT ITS SCAN before the o_orderkey shuffle, both priority branches are CASE columns of the same two-phase aggregate (a priority-filtered double-scan would pay the join twice), and the group frame is 2 rows; at 100 TB the join is the bill — co-locate it by bucketing both tables on the order key (q170's layout) and the query degenerates to a zipper merge + map-side fold with zero exchanges"),
 
     // ----- E4/SQL surface: the canonical TPC-H Q14 shape (r15) --------
@@ -1354,33 +1130,17 @@ object Relational extends Catalog {
     // blacklist subquery is non-nullable (s_suppkey), so Catalyst
     // plans a plain LeftAnti (q209 covered the null-aware trap);
     // supplier offers derive from lineitem the q221 way (no partsupp).
-    "q248_tpch_q16_shape" -> Q(
-      fn = (s, d) => {
-        t(s, d, "part").createOrReplaceTempView("q248_part")
-        t(s, d, "lineitem").createOrReplaceTempView("q248_lineitem")
-        t(s, d, "supplier").createOrReplaceTempView("q248_supplier")
-        s.sql("""
-          SELECT p_brand, p_type, p_size,
-                 CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-          FROM q248_part, q248_lineitem
-          WHERE p_partkey = l_partkey
-            AND p_brand <> 'Brand#7'
-            AND p_size IN (1, 4, 9, 16, 25, 36, 49)
-            AND l_suppkey NOT IN (
-              SELECT s_suppkey FROM q248_supplier
-              WHERE s_name LIKE '%7')
-          GROUP BY 1, 2, 3""")
-      },
-      sql = Some("""
+    "q248_tpch_q16_shape" -> Q.onViews("q248", Seq("part", "lineitem", "supplier"),
+      sql = tb => s"""
         SELECT p_brand, p_type, p_size,
                CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        FROM part, lineitem
+        FROM ${tb("part")}, ${tb("lineitem")}
         WHERE p_partkey = l_partkey
           AND p_brand <> 'Brand#7'
           AND p_size IN (1, 4, 9, 16, 25, 36, 49)
           AND l_suppkey NOT IN (
-            SELECT s_suppkey FROM supplier WHERE s_name LIKE '%7')
-        GROUP BY 1, 2, 3"""),
+            SELECT s_suppkey FROM ${tb("supplier")} WHERE s_name LIKE '%7')
+        GROUP BY 1, 2, 3""",
       scaleNote = "the brand/size cuts prune PART at its scan and broadcast into the fact, the blacklist is a broadcast anti join (|suppliers|-row build — plan-pinned no cartesian), and the distinct-count runs as the standard two-exchange expand-free plan: partial distinct on (attrs, suppkey) collapses duplicate offers map-side BEFORE the attrs shuffle, then the final fold counts survivors — at 100 TB that first partial is what keeps the exchange offer-sized rather than fact-sized, and swapping count(DISTINCT) for approx_count_distinct (q43's HLL) makes the whole report one pass when ±2% suffices, the q203→q210 stance"),
 
     // ----- E5: range (theta) join — events self-join ------------------
@@ -1396,13 +1156,7 @@ object Relational extends Catalog {
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_follow_events"))
       },
-      sql = Some("""
-        SELECT e1.user_id, count(*) AS n_follow_events
-        FROM events e1 JOIN events e2
-          ON e1.user_id = e2.user_id
-         AND e2.ts > e1.ts
-         AND e2.ts <= e1.ts + INTERVAL 5 MINUTE
-        GROUP BY e1.user_id"""),
+      sql = Some(FollowEventsSql),
       scaleNote = "equi-key user_id makes this a hash/SMJ join with the range as residual — never a cartesian; at 100 TB add a coarse time-bucket key to bound per-key fan-out"),
 
     // ----- E5: the time-bucket scale path q09's note promises ---------
@@ -1425,13 +1179,7 @@ object Relational extends Catalog {
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_follow_events"))
       },
-      sql = Some("""
-        SELECT e1.user_id, count(*) AS n_follow_events
-        FROM events e1 JOIN events e2
-          ON e1.user_id = e2.user_id
-         AND e2.ts > e1.ts
-         AND e2.ts <= e1.ts + INTERVAL 5 MINUTE
-        GROUP BY e1.user_id"""),
+      sql = Some(FollowEventsSql),
       scaleNote = "each interval replicates into ≤2 bins (bin = interval length); the join shuffles once on (user_id, bin) with bounded groups — no per-key quadratic blowup, no nested loop, and identical output to q09 (same oracle row)"),
 
     // ----- E6: exact count distinct -----------------------------------
@@ -1454,13 +1202,7 @@ object Relational extends Catalog {
     // ----- E7: rollup ---------------------------------------------------
     "q11_rollup_revenue" -> Q(
       fn = (s, d) => {
-        val li = t(s, d, "lineitem")
-        val o  = t(s, d, "orders")
-        val c  = t(s, d, "customer")
-        val n  = t(s, d, "nation")
-        li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .join(c, col("o_custkey") === col("c_custkey"))
-          .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+        nationLines(s, d)
           .withColumn("o_year", year(col("o_orderdate")).cast("long"))
           .rollup(col("n_name"), col("o_year"))
           .agg(sum(revenue).as("revenue"))
@@ -2237,17 +1979,22 @@ object Relational extends Catalog {
         SELECT grp, CAST(count(*) AS BIGINT) AS n, sum(l_quantity) AS qty
         FROM fact JOIN dim USING (k) GROUP BY grp"""
 
+  /** the skew fixture's fact side (k, l_quantity): half the line
+    * items collapse onto the hot key k = 0 */
+  private def skewFact(s: SparkSession, d: String): DataFrame =
+    t(s, d, "lineitem")
+      .select(
+        when(col("l_orderkey") % 10 < 5, lit(0L))
+          .otherwise(col("l_orderkey")).as("k"),
+        col("l_quantity"))
+
   /** q129's plan, shared with PlanSpec (which asserts the salt reaches
     * the exchange). Skew is planted: keys ≡ 0–4 (mod 10) all collapse
     * to key 0 — ~half the fact on one key.
     */
   private[queries] def skewJoinPlan(
       s: SparkSession, d: String): DataFrame = {
-    val fact = t(s, d, "lineitem")
-      .select(
-        when(col("l_orderkey") % 10 < 5, lit(0L))
-          .otherwise(col("l_orderkey")).as("k"),
-        col("l_quantity"))
+    val fact = skewFact(s, d)
     val dim = fact.select(col("k")).distinct()
       .withColumn("grp", pmod(col("k"), lit(7L)))
       // the at-scale premise: the dim CANNOT broadcast — force the
@@ -2278,11 +2025,7 @@ object Relational extends Catalog {
     */
   private[queries] def skewJoinPlanAqe(
       s: SparkSession, d: String): DataFrame = {
-    val fact = t(s, d, "lineitem")
-      .select(
-        when(col("l_orderkey") % 10 < 5, lit(0L))
-          .otherwise(col("l_orderkey")).as("k"),
-        col("l_quantity"))
+    val fact = skewFact(s, d)
       // fixture physics, NOT part of the operator: AQE splits a skewed
       // reduce partition at MAP-output boundaries, so the hot
       // partition is only splittable if its bytes arrive from several

@@ -43,16 +43,9 @@ object Similarity extends Catalog {
     * hashes per source (the q133/q146 portable-hash family).
     */
   private[graft] def kmvShingles(docs: DataFrame): DataFrame =
-    docs
-      // explicit-count repartition before the per-shingle md5 explode
-      // (r17, guide §2.5): the corpus parquet is one unsplittable row
-      // group, so the ~|shingles| md5+conv evaluations otherwise run
-      // in ONE scan task; explicit count so AQE cannot coalesce the
-      // ~3 MB of pre-explode text back to a single partition
-      // (keyed on text — unique per row, and the one column every
-      // caller's frame is guaranteed to carry)
-      .repartition(docs.sparkSession.conf
-        .get("spark.sql.shuffle.partitions").toInt, col("text"))
+    // spread before the per-shingle md5 explode (r17); keyed on text,
+    // the one column every caller's frame is guaranteed to carry
+    Tables.spread(docs, col("text"))
       .select(col("source"), split(lower(col("text")), " ").as("ws"))
       .filter(size(col("ws")) >= 3)
       .select(col("source"),
@@ -126,43 +119,28 @@ object Similarity extends Catalog {
     * two sides share ONE signature computation (mirrors Dedup q27).
     */
   private def buckets(e: DataFrame): DataFrame = {
-    // SIZE-GATED explicit-count repartition before the signature
-    // kernel (r18, guide §2.5 + §2.1 scale-adaptive partitioning): the
-    // embeddings parquet is one unsplittable row group, so the
-    // per-vector plane-dot lsh_sigs evaluations — the expensive
-    // per-row work of every LSH consumer — otherwise run in ONE scan
-    // task, and the checkpoint below then feeds every candidate join
-    // from a single partition. Measured: at the 10× blowup the spread
-    // cuts q49 29.2 → 3.5 s, while at sf0.1 the corpus is so small the
-    // added exchange only costs (+0.1–0.3 s/consumer) — so the spread
-    // derives its partition count from the OPTIMIZER'S SIZE ESTIMATE
-    // (≈ parquet bytes: sf0.1 ≈ 0.8 MB, 10× ≈ 5.2 MB), engages above
-    // SpreadMinBytes, and caps at the session's shuffle-partition conf
-    // — the scale knob a cluster deployment actually sets. The
-    // checkpoint itself stays (r17 measured its removal as
+    // SIZE-GATED spread before the signature kernel (r18): the
+    // per-vector plane-dot lsh_sigs evaluations are the expensive
+    // per-row work of every LSH consumer, and the checkpoint below
+    // feeds every candidate join. Measured: at the 10× blowup the
+    // spread cuts q49 29.2 → 3.5 s, while at sf0.1 the corpus is so
+    // small the added exchange only costs (+0.1–0.3 s/consumer) — so
+    // it engages only when the OPTIMIZER'S SIZE ESTIMATE of this frame
+    // (1.04 MB at sf0.1; r18 read ≈ 5.2 MB at the 10× blowup) reaches
+    // BucketsSpreadMinBytes (≈ 20k+ vectors). The estimate is a BigInt
+    // and is compared as one. The checkpoint itself stays (r17 measured its removal as
     // unstable-negative); only the map work above it spreads.
     val est = e.queryExecution.optimizedPlan.stats.sizeInBytes
     val spread =
-      if (est < BucketsSpreadMinBytes) e
-      else e.repartition(
-        math.min(
-          e.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong,
-          (est / BucketsSpreadTargetBytes).toLong).toInt,
-        col("vec_id"))
+      if (est < BigInt(BucketsSpreadMinBytes)) e
+      else Tables.spread(e, col("vec_id"))
     spread.select(col("vec_id"),
       posexplode(call_function("lsh_sigs", col("v"),
         lit(LshTables), lit(BitsPerTable))).as(Seq("t", "sig")))
       .localCheckpoint()
   }
 
-  /** buckets()'s spread gate: engage only when the estimated input is
-    * big enough that single-task signature hashing dominates the added
-    * exchange (≈2 MB ≈ 20k+ vectors), and size partitions to ~128 KB
-    * of estimate each (the measured-win geometry at the 10× blowup:
-    * 5.2 MB / 128 KB = 40 → capped at the 32 conf partitions).
-    */
   private val BucketsSpreadMinBytes = 2L * 1024 * 1024
-  private val BucketsSpreadTargetBytes = 128L * 1024
 
   // ---- DuckDB mirror of the lsh_sigs kernel ------------------------
   // The oracle computes the SAME signatures from the same ±1 plane
@@ -185,6 +163,24 @@ object Similarity extends Catalog {
   private def sqlSigCase: String =
     (0 until LshTables).map(t => s"WHEN $t THEN ${sqlSigExpr(t)}")
       .mkString("CASE t ", " ", " END")
+
+  /** buckets()' DuckDB twin as the opening CTEs `e` (vec_id, v, nrm)
+    * and `b` (vec_id, t, sig), shared by the q31/q49/q166 oracles */
+  private def sqlBucketCtes: String = s"""
+        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
+                          sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+                   FROM embeddings),
+        b AS (SELECT vec_id, t, $sqlSigCase AS sig
+              FROM e CROSS JOIN (SELECT unnest(generate_series(0, ${LshTables - 1})) AS t))"""
+
+  /** the q31/q51 oracles' closing SELECT: rerankTopK's cut over a
+    * `scored` (query_id, neighbor_id, cosine) CTE */
+  private def sqlTopKScored: String = s"""SELECT query_id, neighbor_id, cosine, rnk FROM (
+          SELECT scored.*,
+                 row_number() OVER (PARTITION BY query_id
+                   ORDER BY cosine DESC, neighbor_id) AS rnk
+          FROM scored)
+        WHERE rnk <= $K"""
 
   /** IVF-style ANN: a coarse quantizer assigns every corpus vector to
     * its nearest codebook centroid (inverted lists); each query probes
@@ -261,11 +257,16 @@ object Similarity extends Catalog {
   }
 
   private[queries] def ivfKnn(s: SparkSession, d: String, nprobe: Int): DataFrame = {
-    val e = embeddings(s, d)
     // candidates = inverted lists of the probed cells; exact rerank
+    rerankTopK(ivfCandidates(s, d, nprobe), embeddings(s, d))
+  }
+
+  /** exact-cosine top-K of (query_id, vec_id) candidates over `e`'s
+    * vectors, the first NumQueries vectors being the queries */
+  private def rerankTopK(cand: DataFrame, e: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
-    ivfCandidates(s, d, nprobe)
+    cand
       .join(e.select(col("vec_id"), col("v"), col("norm")), "vec_id")
       .join(broadcast(e.filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -850,12 +851,7 @@ object Similarity extends Catalog {
                         JOIN e x ON x.vec_id = a.vec_id
                         JOIN e q ON q.vec_id = p.query_id
                    WHERE a.vec_id <> p.query_id)
-        SELECT query_id, neighbor_id, cosine, rnk FROM (
-          SELECT scored.*,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY cosine DESC, neighbor_id) AS rnk
-          FROM scored)
-        WHERE rnk <= $K"""),
+        $sqlTopKScored"""),
       // (the nprobe=3 contract: subset of corpus, true cosines, rank order)
       scaleNote = "inverted-list ANN: corpus scored once against a broadcast codebook (skinny argmax shuffle), queries touch only nprobe cells — candidate count scales with cell occupancy; at 100 TB the inverted lists are the partitioning"),
 
@@ -959,18 +955,7 @@ object Similarity extends Catalog {
           .filter(col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id"))
           .dropDuplicates("query_id", "vec_id")
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("vec_id"))
-        cand
-          .join(e.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-          .join(broadcast(e.filter(col("vec_id") < NumQueries)
-            .select(col("vec_id").as("query_id"), col("v").as("qv"),
-              col("norm").as("qnorm"))), "query_id")
-          .withColumn("cosine", cosine(col("v"), col("qv"), col("norm"), col("qnorm")))
-          .withColumn("rnk", row_number().over(w).cast("long"))
-          .filter(col("rnk") <= K)
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            col("cosine"), col("rnk"))
+        rerankTopK(cand, e)
       },
       // Mirror-oracled like q49: the twin computes the SAME plane
       // signatures (literal ±1 matrix), the same bucket equi-join for
@@ -979,12 +964,7 @@ object Similarity extends Catalog {
       // the LSH-kNN ALGORITHM end-to-end, not a recall bound. Cosines
       // are unrounded: vec_dot ≡ list_dot_product sequentially
       // (q29/q49's proven stance), so ranks can't diverge either.
-      sql = Some(s"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-                          sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-                   FROM embeddings),
-        b AS (SELECT vec_id, t, $sqlSigCase AS sig
-              FROM e CROSS JOIN (SELECT unnest(generate_series(0, ${LshTables - 1})) AS t)),
+      sql = Some(s"""$sqlBucketCtes,
         qb AS (SELECT vec_id AS query_id, t, sig FROM b
                WHERE vec_id < $NumQueries),
         cand AS (SELECT DISTINCT qb.query_id, b.vec_id
@@ -994,12 +974,7 @@ object Similarity extends Catalog {
                           list_dot_product(x.v, q.v) / (x.nrm * q.nrm) AS cosine
                    FROM cand JOIN e x ON x.vec_id = cand.vec_id
                              JOIN e q ON q.vec_id = cand.query_id)
-        SELECT query_id, neighbor_id, cosine, rnk FROM (
-          SELECT scored.*,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY cosine DESC, neighbor_id) AS rnk
-          FROM scored)
-        WHERE rnk <= $K"""),
+        $sqlTopKScored"""),
       scaleNote = "replaces the cross join with a (table,signature) bucket equi-join over skinny 20-byte postings; signature is one native codegen'd pass; vectors join back only for candidates"),
 
     // ----- LSH-bucketed near-dup pairs (scale path for q29) ---------
@@ -1029,12 +1004,7 @@ object Similarity extends Catalog {
           .filter(col("cosine") >= 0.4)
           .select(col("vec1"), col("vec2"), col("cosine"))
       },
-      sql = Some(s"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-                          sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-                   FROM embeddings),
-        b AS (SELECT vec_id, t, $sqlSigCase AS sig
-              FROM e CROSS JOIN (SELECT unnest(generate_series(0, ${LshTables - 1})) AS t)),
+      sql = Some(s"""$sqlBucketCtes,
         cand AS (SELECT DISTINCT a.vec_id AS vec1, c.vec_id AS vec2
                  FROM b a JOIN b c ON a.t = c.t AND a.sig = c.sig AND a.vec_id < c.vec_id)
         SELECT cand.vec1, cand.vec2,
@@ -1444,14 +1414,7 @@ object Similarity extends Catalog {
             coalesce((col("cosine") >= 0.9).cast("long"), lit(0L))
               .as("flagged"))
       },
-      sql = Some(s"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-                          sqrt(list_dot_product(embedding::DOUBLE[],
-                                                embedding::DOUBLE[])) AS nrm
-                   FROM embeddings),
-        b AS (SELECT vec_id, t, $sqlSigCase AS sig
-              FROM e CROSS JOIN
-                (SELECT unnest(generate_series(0, ${LshTables - 1})) AS t)),
+      sql = Some(s"""$sqlBucketCtes,
         cand AS (SELECT DISTINCT ev.vec_id AS eval_id, tr.vec_id AS train_id
                  FROM b ev JOIN b tr ON ev.t = tr.t AND ev.sig = tr.sig
                  WHERE ev.vec_id % 20 = 0 AND tr.vec_id % 20 <> 0),
@@ -1575,14 +1538,10 @@ object Similarity extends Catalog {
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
         val gtFut = Future {
-          // explicit-count repartition before the ×|queries| fanout
-          // (r18, guide §2.5): the embeddings parquet is one
-          // unsplittable row group, so the |corpus|×|queries| vec_dot
-          // NLJ probe otherwise runs in ONE scan task — the most
-          // expensive per-row work in the whole query
-          e.repartition(
-              s.conf.get("spark.sql.shuffle.partitions").toInt,
-              col("vec_id"))
+          // spread before the ×|queries| fanout (r18): the
+          // |corpus|×|queries| vec_dot NLJ probe is the most expensive
+          // per-row work in the whole query
+          Tables.spread(e, col("vec_id"))
             .join(broadcast(qf), col("vec_id") =!= col("query_id"))
             .withColumn("cos",
               cosine(col("v"), col("qv"), col("norm"), col("qnorm")))

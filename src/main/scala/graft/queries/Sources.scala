@@ -306,6 +306,25 @@ object Sources extends Catalog {
     dir
   }
 
+  /** documents as the reference's {id, texts: {content}, images: []}
+    * records, the input of every enrich-pipeline query */
+  private def docRecords(s: SparkSession, d: String): DataFrame =
+    Tables.load(s, d, "documents")
+      .select(col("doc_id").cast("string").as("id"),
+        map(lit("content"), col("text")).as("texts"),
+        array().cast("array<string>").as("images"))
+
+  /** the synthetic media corpus size per scale factor — an explicit
+    * per-SF choice (test runtime), so an unknown data dir fails loudly */
+  private def mediaCorpusSize(q: String, d: String): Int =
+    new java.io.File(d).getName match {
+      case "sf0.001"          => 90
+      case "sf0.01" | "sf0.1" => 600
+      case other => throw new IllegalArgumentException(
+        s"$q media corpus size not defined for data dir '$other' — " +
+          "add the scale factor explicitly")
+    }
+
   override def queries: Map[String, Q] = Map(
 
     // ----- E1: CSV scan (with quoting-sensitive text columns) -------
@@ -506,10 +525,7 @@ object Sources extends Catalog {
     // the bar. Exercises enrich -> JSON parse -> filter as ONE plan.
     "q77_llm_judge_filter" -> Q(
       fn = (s, d) => {
-        val records = Tables.load(s, d, "documents")
-          .select(col("doc_id").cast("string").as("id"),
-            map(lit("content"), col("text")).as("texts"),
-            array().cast("array<string>").as("images"))
+        val records = docRecords(s, d)
         val cfg = graft.core.JobConfig(
           id = "judge",
           erbTemplate = "rate the quality of: <%= texts[:content] %>",
@@ -685,10 +701,7 @@ object Sources extends Catalog {
         // <think> strip, label append) on the deterministic fake
         // backend — benchmarks ENGINE overhead, the reference's
         // comparison point is 1 sequential request at a time
-        val records = Tables.load(s, d, "documents")
-          .select(col("doc_id").cast("string").as("id"),
-            map(lit("content"), col("text")).as("texts"),
-            array().cast("array<string>").as("images"))
+        val records = docRecords(s, d)
         val cfg = graft.core.JobConfig(
           id = "bench-enrich",
           erbTemplate = "summarize: <%= texts[:content] %>",
@@ -728,10 +741,7 @@ object Sources extends Catalog {
       fn = (s, d) => {
         import graft.pipeline.SchemaValidate
         import graft.pipeline.SchemaValidate._
-        val records = Tables.load(s, d, "documents")
-          .select(col("doc_id").cast("string").as("id"),
-            map(lit("content"), col("text")).as("texts"),
-            array().cast("array<string>").as("images"))
+        val records = docRecords(s, d)
         val cfg = graft.core.JobConfig(
           id = "schema-validate",
           erbTemplate = "<%= id %>|<%= texts[:content] %>",
@@ -948,12 +958,7 @@ object Sources extends Catalog {
         val enriched = complexEnriched(s, d, "schema-validate-compiled")
         val constraints = SchemaValidate.fromSchema(
           new org.yaml.snakeyaml.Yaml().load[Any](ComplexSchemaYaml))
-        val checked = SchemaValidate.verdicts(enriched, "j", constraints)
-        checked.select(
-          (Seq(col("id")) ++
-            (Seq("ok_parse") ++ constraints.map(_._1) ++ Seq("valid"))
-              .map(c => col(c).cast("long").as(c)) :+
-            col("reason")): _*)
+        compiledVerdicts(enriched, constraints)
       },
       sql = Some(CompiledGateOracleSql),
       scaleNote = "schema file in, verdict frame out — the production json_schema_filepath path with zero hand-written constraints: fromSchema folds the YAML once on the driver, the compiled projection is the same single codegen'd pass as q252 (three more never-false columns on this corpus), and swapping the schema file re-plans the projection without touching code; the structural extras (required on the union members, objtype on optional objects) are exactly what a compiled gate adds over a hand list — the checks a human skips because 'it can't happen' until a model makes it happen"),
@@ -984,10 +989,7 @@ object Sources extends Catalog {
             s"json_schema_filepath must load as JsonSchema, got $other")
         }
         val constraints = SchemaValidate.fromSchema(schema)
-        val records = Tables.load(s, d, "documents")
-          .select(col("doc_id").cast("string").as("id"),
-            map(lit("content"), col("text")).as("texts"),
-            array().cast("array<string>").as("images"))
+        val records = docRecords(s, d)
         val enriched = graft.pipeline.EnrichJob
           .run(records, cfg,
             new graft.llm.FakeSchemaClient(p =>
@@ -996,12 +998,7 @@ object Sources extends Catalog {
           .good
           .select(col("id").cast("long").as("id"),
             element_at(col("texts"), cfg.outputLabel).as("j"))
-        val checked = SchemaValidate.verdicts(enriched, "j", constraints)
-        checked.select(
-          (Seq(col("id")) ++
-            (Seq("ok_parse") ++ constraints.map(_._1) ++ Seq("valid"))
-              .map(c => col(c).cast("long").as(c)) :+
-            col("reason")): _*)
+        compiledVerdicts(enriched, constraints)
       },
       sql = Some(CompiledGateOracleSql),
       scaleNote = "closes the last seam in the schema story: the file is read ONCE on the driver (JobConfig.load — unlike the reference, which re-reads templates per record), the compiled constraint list is a driver-side fold, and both artifacts ship to executors as plain broadcast values, so the loop costs nothing per row at any corpus size; operationally this is the drift killer — request-side schema (what the model is ASKED to produce) and gate-side constraints (what the pipeline ACCEPTS) cannot diverge because both are projections of one loaded object, and swapping the schema file re-plans both sides with zero code changes; the request-structure contract sits INSIDE the driver hash via the re-parsing fake, the same move that oracled the multimodal branch (q251)"),
@@ -1023,10 +1020,7 @@ object Sources extends Catalog {
     // subset (zero backend calls for already-good records).
     "q262_llm_deadletter_replay" -> Q(
       fn = (s, d) => {
-        val records = Tables.load(s, d, "documents")
-          .select(col("doc_id").cast("string").as("id"),
-            map(lit("content"), col("text")).as("texts"),
-            array().cast("array<string>").as("images"))
+        val records = docRecords(s, d)
         val cfg = graft.core.JobConfig(
           id = "deadletter-replay",
           erbTemplate = "<%= id %>|<%= texts[:content] %>",
@@ -1344,13 +1338,7 @@ object Sources extends Catalog {
         // choice (test runtime), not a path-suffix sniff — an
         // unrecognized dir fails loudly instead of silently picking a
         // size
-        val n = new java.io.File(d).getName match {
-          case "sf0.001"           => 90
-          case "sf0.01" | "sf0.1"  => 600
-          case other => throw new IllegalArgumentException(
-            s"q58 media corpus size not defined for data dir '$other' — " +
-              "add the scale factor explicitly")
-        }
+        val n = mediaCorpusSize("q58", d)
         val base = graft.multimodal.Media.syntheticEncoded(s, n)
         val planted = base.union(
           base.filter(r => r.kind == "image" && r.media_id % 7 == 0)
@@ -1399,13 +1387,7 @@ object Sources extends Catalog {
     "q237_binaryfile_ingest" -> Q(
       fn = (s, d) => {
         import s.implicits._
-        val n = new java.io.File(d).getName match {
-          case "sf0.001"          => 90
-          case "sf0.01" | "sf0.1" => 600
-          case other => throw new IllegalArgumentException(
-            s"q237 media corpus size not defined for data dir '$other' — " +
-              "add the scale factor explicitly")
-        }
+        val n = mediaCorpusSize("q237", d)
         val base = graft.multimodal.Media.syntheticEncoded(s, n)
         val planted = base.union(
           base.filter(r => r.kind == "image" && r.media_id % 7 == 0)
@@ -1487,13 +1469,7 @@ object Sources extends Catalog {
     "q181_audio_neardup" -> Q(
       fn = (s, d) => {
         import s.implicits._
-        val n = new java.io.File(d).getName match {
-          case "sf0.001"          => 90
-          case "sf0.01" | "sf0.1" => 600
-          case other => throw new IllegalArgumentException(
-            s"q181 media corpus size not defined for data dir '$other' — " +
-              "add the scale factor explicitly")
-        }
+        val n = mediaCorpusSize("q181", d)
         val base = graft.multimodal.Media.syntheticEncoded(s, n)
         val planted = base.union(
           base.filter(r => r.kind == "audio" && r.media_id % 21 == 1)
@@ -1571,13 +1547,7 @@ object Sources extends Catalog {
     "q189_video_neardup" -> Q(
       fn = (s, d) => {
         import s.implicits._
-        val n = new java.io.File(d).getName match {
-          case "sf0.001"          => 90
-          case "sf0.01" | "sf0.1" => 600
-          case other => throw new IllegalArgumentException(
-            s"q189 media corpus size not defined for data dir '$other' — " +
-              "add the scale factor explicitly")
-        }
+        val n = mediaCorpusSize("q189", d)
         val base = graft.multimodal.Media.syntheticEncoded(s, n)
         val planted = base.union(
           base.filter(r => r.kind == "video" && r.media_id % 7 == 0)
@@ -1621,13 +1591,7 @@ object Sources extends Catalog {
     "q204_video_scene_cuts" -> Q(
       fn = (s, d) => {
         import s.implicits._
-        val n = new java.io.File(d).getName match {
-          case "sf0.001"          => 90
-          case "sf0.01" | "sf0.1" => 600
-          case other => throw new IllegalArgumentException(
-            s"q204 media corpus size not defined for data dir '$other' — " +
-              "add the scale factor explicitly")
-        }
+        val n = mediaCorpusSize("q204", d)
         val base = graft.multimodal.Media.syntheticEncoded(s, n)
         val planted = base
           .filter(r => r.kind == "video" && r.media_id % 5 == 1)
@@ -2306,10 +2270,7 @@ object Sources extends Catalog {
     */
   private def complexEnriched(
       s: SparkSession, d: String, jobId: String): DataFrame = {
-    val records = Tables.load(s, d, "documents")
-      .select(col("doc_id").cast("string").as("id"),
-        map(lit("content"), col("text")).as("texts"),
-        array().cast("array<string>").as("images"))
+    val records = docRecords(s, d)
     val cfg = graft.core.JobConfig(
       id = jobId,
       erbTemplate = "<%= id %>",
@@ -2411,6 +2372,16 @@ object Sources extends Catalog {
                  doc_id % 43 = 0 AS datebad,
                  doc_id % 47 = 0 AS emailbad
           FROM documents)"""
+
+  /** q258/q259's verdict report over compiled constraints: id, one
+    * long per check (ok_parse, each constraint, valid), and the reason */
+  private def compiledVerdicts(enriched: DataFrame,
+      constraints: Seq[(String, graft.pipeline.SchemaValidate.Constraint)]): DataFrame =
+    graft.pipeline.SchemaValidate.verdicts(enriched, "j", constraints).select(
+      (Seq(col("id")) ++
+        (Seq("ok_parse") ++ constraints.map(_._1) ++ Seq("valid"))
+          .map(c => col(c).cast("long").as(c)) :+
+        col("reason")): _*)
 
   /** q258's oracle, shared VERBATIM with q259 (the q153→q256 oracle-
     * reuse discipline): both queries validate the same fixture with
@@ -2590,10 +2561,7 @@ object Sources extends Catalog {
     * and q227 (the per-reason dashboard fold of the same frame)
     */
   private def validateRepairReport(s: SparkSession, d: String): DataFrame = {
-    val records = Tables.load(s, d, "documents")
-      .select(col("doc_id").cast("string").as("id"),
-        map(lit("content"), col("text")).as("texts"),
-        array().cast("array<string>").as("images"))
+    val records = docRecords(s, d)
     val cfg = graft.core.JobConfig(
       id = "validate-repair",
       erbTemplate = "<%= id %>|<%= texts[:content] %>",

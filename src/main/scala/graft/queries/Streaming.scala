@@ -172,6 +172,16 @@ object Streaming extends Catalog {
         "changelogCheckpointing.enabled", "true")
     }
 
+  /** q242/q256's emitted attribution rows, the sentinel user's
+    * flush row dropped */
+  private def attributionRows(sentinelUser: Long)(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, round}
+    df.filter(col("user_id") =!= sentinelUser)
+      .select(col("user_id"), col("s_start"), col("first_click_id"),
+        col("n_purchases"),
+        round(col("attributed_value"), 6).as("attributed_value"))
+  }
+
   override def queries: Map[String, Q] = Map(
 
     // ----- session-scoped first-touch attribution -------------------
@@ -421,16 +431,7 @@ object Streaming extends Catalog {
         }
         import s.implicits._
         // q194's plan, verbatim, up to the detector input
-        val ev = events(s, d).select(col("event_type"),
-          unix_micros(date_trunc("day", col("ts"))).as("d"))
-        val span = ev.agg(expr("(min(d) + max(d)) DIV 2").as("cut"))
-        val daily = ev.groupBy(col("event_type"), col("d"))
-          .agg(count(lit(1)).as("x"))
-          .crossJoin(broadcast(span))
-          .select(col("event_type"), col("d"), col("cut"),
-            when(col("event_type") === "click" && col("d") >= col("cut"),
-              col("x") * 2).otherwise(col("x")).as("x"))
-          .localCheckpoint() // one daily frame feeds the reference AND the feed
+        val daily = Analytics.driftDaily(s, d)
         val ref = daily.filter(col("d") < col("cut"))
           .groupBy(col("event_type"))
           .agg(expr("sum(x) DIV count(1)").as("mu"))
@@ -480,16 +481,7 @@ object Streaming extends Catalog {
         val s = rocksDbChild(s0)
         import s.implicits._
         // q207's plan, verbatim, up to the chart input
-        val ev = Tables.load(s, d, "events").select(col("event_type"),
-          unix_micros(date_trunc("day", col("ts"))).as("d"))
-        val span = ev.agg(expr("(min(d) + max(d)) DIV 2").as("cut"))
-        val daily = ev.groupBy(col("event_type"), col("d"))
-          .agg(count(lit(1)).as("x"))
-          .crossJoin(broadcast(span))
-          .select(col("event_type"), col("d"), col("cut"),
-            when(col("event_type") === "click" && col("d") >= col("cut"),
-              col("x") * 2).otherwise(col("x")).as("x"))
-          .localCheckpoint() // one daily frame feeds the reference AND the feed
+        val daily = Analytics.driftDaily(s, d)
         val ref = daily.filter(col("d") < col("cut"))
           .groupBy(col("event_type"))
           .agg(expr("sum(x) DIV count(1)").as("mu"),
@@ -730,10 +722,7 @@ object Streaming extends Catalog {
         replayChunks(s, chunks.init :+ (chunks.last :+ sentinel),
             "q242_attr", "append")(
             EventStreams.sessionAttributionPerUser(_))
-          .filter(col("user_id") =!= sentinelUser)
-          .select(col("user_id"), col("s_start"), col("first_click_id"),
-            col("n_purchases"),
-            round(col("attributed_value"), 6).as("attributed_value"))
+          .transform(attributionRows(sentinelUser))
       },
       sql = Some(SessionAttributionOracleSql),
       scaleNote = "attribution state is ONE struct per live user (7 fields — start, last (us,id), first click, purchase fold), retired the moment its session closes, so the RocksDB store holds O(|users active within one gap+watermark|), zero history; session close is push-based (a later event or the watermark timer), which means attribution rows land in the sink within one watermark delay of the session's true end — the marketing-attribution SLA a batch nightly job can't offer — and every emission is final (append mode, no retraction), so the downstream join to spend data is insert-only; ORDERING CONTRACT (narrowed, ADVICE r15): the at-or-before-last drop guard conflates redelivery with disorder, so batch equivalence under this oracle holds for IN-ORDER-PER-KEY delivery (the registered replay feeds a sorted fixture), with the watermark serving timer advance, not disorder tolerance — a 1s-out-of-order event inside the watermark is dropped here where batch q153 folds it; q256 is the disorder-tolerant sibling (watermark-frontier buffering, O(events-in-watermark) state) for feeds that cannot promise per-key order, and the redelivery-drop guard still means at-least-once delivery never double-credits a purchase"),
@@ -770,10 +759,7 @@ object Streaming extends Catalog {
         replayChunks(s, chunks.init :+ (chunks.last :+ feed.last),
             "q256_attr", "append")(
             EventStreams.sessionAttributionUnordered(_))
-          .filter(col("user_id") =!= sentinelUser)
-          .select(col("user_id"), col("s_start"), col("first_click_id"),
-            col("n_purchases"),
-            round(col("attributed_value"), 6).as("attributed_value"))
+          .transform(attributionRows(sentinelUser))
       },
       sql = Some(SessionAttributionOracleSql),
       scaleNote = "disorder tolerance is a state-size trade, made explicit: the buffer holds each key's events younger than the watermark (bounded by rate × watermark delay, NOT by history) and every watermark advance folds the frozen prefix in exact (ts, id) order, so the output is the batch answer regardless of arrival order — the property q242 only gets from an ordered transport like a partitioned log; at 100 TB pick per key: ordered ingest (Kafka key-partitioning) → q242's O(1) struct, disordered ingest (multi-region collectors, mobile flushes) → this buffer, same oracle either way; the exact-identity redelivery dedupe composes with both, and lateness beyond the watermark drops by the same contract every watermark operator already signs — with one documented sharpening (r17): the admit bound is the CURRENT batch's eviction watermark, one batch stricter than Spark's late-event filter (required by the frozen-prefix proof), so the effective tolerance is watermark-minus-one-batch and a feed's disorder span must sit strictly inside it (this fixture: 8 min of 10)"),

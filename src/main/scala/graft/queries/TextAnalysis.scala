@@ -16,9 +16,6 @@ import graft.core.Tables
   */
 object TextAnalysis extends Catalog {
 
-  private def docs(s: SparkSession, d: String): DataFrame =
-    Tables.load(s, d, "documents")
-
   private val words: Column = split(lower(col("text")), " ")
 
   /** tiny per-language stopword lists (shared with the oracle SQL) */
@@ -105,7 +102,7 @@ object TextAnalysis extends Catalog {
   private val BpeRounds = 6
 
   private def bpeVocab(s: SparkSession, d: String): DataFrame =
-    docs(s, d)
+    Tables.documents(s, d)
       .select(explode(words).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
@@ -277,57 +274,41 @@ object TextAnalysis extends Catalog {
     sb.toString
   }
 
-  override def queries: Map[String, Q] = Map(
+  /** q137's BM25 (k1 = 1.2, b = 0.75) over the fixed three-term query
+    * (table, hash, merge), shared with q173's lexical leg: per-doc tf
+    * map-side by a filter HOF, one broadcast stats row (N, Σdl, per-term
+    * df), and the score rounded to 6 places in the column named by
+    * `score` — unsorted, every doc with at least one term.
+    */
+  private def bm25Scores(s: SparkSession, d: String, score: String): DataFrame = {
+    val terms = Seq("table", "hash", "merge")
+    val base = Tables.documents(s, d).select(
+      col("doc_id") +: size(words).cast("long").as("dl") +:
+        terms.zipWithIndex.map { case (t, i) =>
+          size(filter(words, w => w === lit(t))).cast("long").as(s"tf$i")
+        }: _*)
+    val stats = base.agg(
+      count(lit(1)).as("n"),
+      sum(col("dl")).as("sdl") +:
+        terms.indices.map(i =>
+          sum((col(s"tf$i") > 0).cast("long")).as(s"df$i")): _*)
+    def partScore(i: Int) = {
+      val tf = col(s"tf$i"); val df = col(s"df$i")
+      log(lit(1.0) + (col("n") - df + lit(0.5)) / (df + lit(0.5))) *
+        ((tf * lit(2.2)) /
+          (tf + lit(1.2) * (lit(0.25) +
+            lit(0.75) * (col("dl") / (col("sdl") / col("n"))))))
+    }
+    base.crossJoin(broadcast(stats))
+      .filter(col("tf0") + col("tf1") + col("tf2") > 0)
+      .select(col("doc_id"),
+        round(partScore(0) + partScore(1) + partScore(2), 6).as(score))
+  }
 
-    // ----- BM25 scored retrieval (lexical top-k search) -------------
-    // The retrieval modality the embedding-ANN family (q30/q31/q51)
-    // doesn't cover: exact lexical top-k by Okapi BM25 (k1 = 1.2,
-    // b = 0.75) for a fixed multi-term query. Per-term tf is computed
-    // MAP-SIDE with a filter HOF — no posting explode, no shuffle on
-    // the corpus at all; the stats the score needs (N, Σdl, per-term
-    // df) are ONE aggregate row broadcast back; the ranking is a
-    // global top-k (TakeOrdered — never a full sort). The idf is the
-    // Lucene/ATIRE form ln(1 + (N - df + 0.5)/(df + 0.5)) — the log
-    // CANNOT be dropped for a multi-term query (monotonicity does not
-    // commute with the sum over terms), and the +1 keeps idf positive
-    // for df > N/2. Arithmetic follows q79's mirror stance (identical
-    // parsed doubles, identical op order; the oracle casts every
-    // non-exact literal to DOUBLE so DuckDB can't route through
-    // DECIMAL), with ln() the one ~1-ulp op — absorbed by round(,6)
-    // on the emitted score (the q110 ln discipline); the order-by
-    // uses the SAME rounded value on both sides so the cut is
-    // well-defined.
-    "q137_bm25_topk" -> Q(
-      fn = (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val terms = Seq("table", "hash", "merge")
-        val base = docs(s, d).select(
-          col("doc_id") +: size(words).cast("long").as("dl") +:
-            terms.zipWithIndex.map { case (t, i) =>
-              size(filter(words, w => w === lit(t))).cast("long").as(s"tf$i")
-            }: _*)
-        val stats = base.agg(
-          count(lit(1)).as("n"),
-          sum(col("dl")).as("sdl") +:
-            terms.indices.map(i =>
-              sum((col(s"tf$i") > 0).cast("long")).as(s"df$i")): _*)
-        def partScore(i: Int) = {
-          val tf = col(s"tf$i"); val df = col(s"df$i")
-          log(lit(1.0) + (col("n") - df + lit(0.5)) / (df + lit(0.5))) *
-            ((tf * lit(2.2)) /
-              (tf + lit(1.2) * (lit(0.25) +
-                lit(0.75) * (col("dl") / (col("sdl") / col("n"))))))
-        }
-        base.crossJoin(broadcast(stats))
-          .filter(col("tf0") + col("tf1") + col("tf2") > 0)
-          .select(col("doc_id"),
-            round(partScore(0) + partScore(1) + partScore(2), 6).as("score"))
-          .orderBy(col("score").desc, col("doc_id"))
-          .limit(20)
-          .withColumn("rank", row_number()
-            .over(Window.orderBy(col("score").desc, col("doc_id"))).cast("int"))
-      },
-      sql = Some("""
+  /** bm25Scores' DuckDB mirror: the base/stats/sc CTEs, the score
+    * column named by `score`; the caller appends its CTEs and SELECT.
+    */
+  private def bm25Sql(score: String): String = s"""
         WITH base AS (
           SELECT doc_id,
                  CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS dl,
@@ -357,9 +338,39 @@ object TextAnalysis extends Catalog {
             + ln(1.0 + CAST(n - df2 + 0.5 AS DOUBLE) / CAST(df2 + 0.5 AS DOUBLE)) *
                 ((tf2 * CAST(2.2 AS DOUBLE)) /
                  (tf2 + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) +
-                   CAST(0.75 AS DOUBLE) * (dl / (sdl / n))))), 6) AS score
+                   CAST(0.75 AS DOUBLE) * (dl / (sdl / n))))), 6) AS $score
           FROM base CROSS JOIN stats
-          WHERE tf0 + tf1 + tf2 > 0),
+          WHERE tf0 + tf1 + tf2 > 0),"""
+
+  override def queries: Map[String, Q] = Map(
+
+    // ----- BM25 scored retrieval (lexical top-k search) -------------
+    // The retrieval modality the embedding-ANN family (q30/q31/q51)
+    // doesn't cover: exact lexical top-k by Okapi BM25 (k1 = 1.2,
+    // b = 0.75) for a fixed multi-term query. Per-term tf is computed
+    // MAP-SIDE with a filter HOF — no posting explode, no shuffle on
+    // the corpus at all; the stats the score needs (N, Σdl, per-term
+    // df) are ONE aggregate row broadcast back; the ranking is a
+    // global top-k (TakeOrdered — never a full sort). The idf is the
+    // Lucene/ATIRE form ln(1 + (N - df + 0.5)/(df + 0.5)) — the log
+    // CANNOT be dropped for a multi-term query (monotonicity does not
+    // commute with the sum over terms), and the +1 keeps idf positive
+    // for df > N/2. Arithmetic follows q79's mirror stance (identical
+    // parsed doubles, identical op order; the oracle casts every
+    // non-exact literal to DOUBLE so DuckDB can't route through
+    // DECIMAL), with ln() the one ~1-ulp op — absorbed by round(,6)
+    // on the emitted score (the q110 ln discipline); the order-by
+    // uses the SAME rounded value on both sides so the cut is
+    // well-defined.
+    "q137_bm25_topk" -> Q(
+      fn = (s, d) => {
+        bm25Scores(s, d, "score")
+          .orderBy(col("score").desc, col("doc_id"))
+          .limit(20)
+          .withColumn("rank", row_number()
+            .over(Window.orderBy(col("score").desc, col("doc_id"))).cast("int"))
+      },
+      sql = Some(bm25Sql("score") + """
         top AS (SELECT doc_id, score FROM sc ORDER BY score DESC, doc_id LIMIT 20)
         SELECT doc_id, score,
                CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS rank
@@ -397,7 +408,7 @@ object TextAnalysis extends Catalog {
         val (_, enc) = bpeLearnCached(s, d)
         val dict = enc.groupBy(col("word"))
           .agg(count(lit(1)).as("n_tokens"))
-        docs(s, d)
+        Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), explode(words).as("word"))
           .filter(length(col("word")) > 0)
           .join(broadcast(dict), "word")
@@ -423,7 +434,7 @@ object TextAnalysis extends Catalog {
     // ----- language ID via stopword-ratio argmax --------------------
     "q33_lang_id" -> Q(
       fn = (s, d) =>
-        withStopScores(docs(s, d).filter(length(col("text")) > 0))
+        withStopScores(Tables.documents(s, d).filter(length(col("text")) > 0))
           .withColumn("pred_lang", predLang)
           .groupBy(col("lang"), col("pred_lang"))
           .agg(count(lit(1)).as("n")),
@@ -443,7 +454,7 @@ object TextAnalysis extends Catalog {
           (nTokens - 1.0)) / nTokens
         val alphaRatio =
           size(filter(words, w => w.rlike("^[a-z]+$"))).cast("double") / nTokens
-        docs(s, d)
+        Tables.documents(s, d)
           .filter(length(col("text")) > 0)
           .select(
             col("doc_id"),
@@ -474,7 +485,7 @@ object TextAnalysis extends Catalog {
         // regexp_extract_all + two array walks — same semantics,
         // measured ~10× cheaper per row; the struct's consumers CSE
         // into a single evaluation inside whole-stage codegen
-        docs(s, d)
+        Tables.documents(s, d)
           .filter(length(col("text")) > 0)
           .select(col("doc_id"),
             call_function("token_stats", lower(col("text"))).as("t"))
@@ -498,7 +509,7 @@ object TextAnalysis extends Catalog {
     // ----- document fingerprinting ----------------------------------
     "q36_fingerprint" -> Q(
       fn = (s, d) =>
-        docs(s, d)
+        Tables.documents(s, d)
           .filter(length(col("text")) > 0)
           .select(
             col("doc_id"),
@@ -529,7 +540,7 @@ object TextAnalysis extends Catalog {
         // and split decisions.
         val sampleH = substring(md5(concat(lit("s:"), col("doc_id").cast("string"))), 1, 2)
         val splitH = substring(md5(concat(lit("t:"), col("doc_id").cast("string"))), 1, 2)
-        docs(s, d)
+        Tables.documents(s, d)
           .filter(sampleH < when(col("lang") === "en", "80").otherwise("33"))
           .select(col("doc_id"), col("lang"),
             when(splitH < "cc", "train").otherwise("test").as("split"))
@@ -546,7 +557,7 @@ object TextAnalysis extends Catalog {
     // ----- E16: map construction / map_keys / map_values / explode --
     "q45_map_funcs" -> Q(
       fn = (s, d) =>
-        docs(s, d)
+        Tables.documents(s, d)
           .select(col("doc_id"),
             map(lit("lang"), col("lang"), lit("source"), col("source")).as("m"))
           .select(col("doc_id"),
@@ -569,7 +580,7 @@ object TextAnalysis extends Catalog {
     // of a float share: exact in both engines at any scale.
     "q75_vocab_topk" -> Q(
       fn = (s, d) => {
-        val tok = docs(s, d)
+        val tok = Tables.documents(s, d)
           .select(explode(split(lower(col("text")), " ")).as("token"))
         val counts = tok.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
         val total = counts.agg(sum(col("cnt")).as("total"))
@@ -607,7 +618,7 @@ object TextAnalysis extends Catalog {
             i => struct(element_at(w, i).as("w1"),
               element_at(w, i + off).as("w2"), lit(off).as("dist"))))
             .otherwise(emptyPairs)
-        docs(s, d)
+        Tables.documents(s, d)
           .select(split(lower(col("text")), " ").as("w"))
           .select(explode(concat(pairsAt(1), pairsAt(2))).as("p"))
           .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"),
@@ -650,7 +661,7 @@ object TextAnalysis extends Catalog {
             i => struct(element_at(w, i).as("w1"),
               element_at(w, i + off).as("w2"))))
             .otherwise(emptyPairs)
-        val co = docs(s, d)
+        val co = Tables.documents(s, d)
           .select(col("lang"), split(lower(col("text")), " ").as("w"))
           .select(col("lang"), explode(concat(pairsAt(1), pairsAt(2))).as("p"))
           .select(col("lang"), col("p.w1").as("w1"), col("p.w2").as("w2"))
@@ -764,7 +775,7 @@ object TextAnalysis extends Catalog {
         // (e + U+0301, OHM SIGN, ffi ligature) — a raw literal would be
         // one editor NFC-pass away from silently precomposing it
         val raw = concat(col("text"), lit(" cafe\u0301 \u2126 \uFB03"))
-        docs(s, d)
+        Tables.documents(s, d)
           .select(col("doc_id"), raw.as("raw"))
           .select(col("doc_id"),
             call_function("nfc_normalize", col("raw")).as("norm"),
@@ -803,7 +814,8 @@ object TextAnalysis extends Catalog {
         val MinPairCount = 5
         val w = col("w")
         val emptyPairs = array().cast("array<struct<w1:string,w2:string>>")
-        val toks = docs(s, d).select(split(lower(col("text")), " ").as("w"))
+        val toks = Tables.documents(s, d)
+          .select(split(lower(col("text")), " ").as("w"))
           .localCheckpoint() // bigram + unigram branches share one tokenize
         val bigrams = toks
           .select(explode(
@@ -866,7 +878,7 @@ object TextAnalysis extends Catalog {
     // fan-out stage is O(vocab · word_len) however big the corpus is.
     "q111_bpe_pair_counts" -> Q(
       fn = (s, d) => {
-        val wc = docs(s, d)
+        val wc = Tables.documents(s, d)
           .select(explode(split(lower(col("text")), " ")).as("w"))
           .filter(length(col("w")) >= 2)
           .groupBy(col("w")).agg(count(lit(1)).as("wc"))
@@ -899,7 +911,7 @@ object TextAnalysis extends Catalog {
     // grain.
     "q96_source_vocab_overlap" -> Q(
       fn = (s, d) => {
-        val words = docs(s, d)
+        val words = Tables.documents(s, d)
           .select(col("source"), explode(split(lower(col("text")), " ")).as("word"))
           .filter(length(col("word")) > 0)
           .distinct()
@@ -944,7 +956,7 @@ object TextAnalysis extends Catalog {
     // no cancellation.
     "q128_source_kl_drift" -> Q(
       fn = (s, d) => {
-        val tok = docs(s, d)
+        val tok = Tables.documents(s, d)
           .select(col("source"),
             explode(split(lower(col("text")), " ")).as("w"))
           .filter(length(col("w")) > 0)
@@ -996,7 +1008,7 @@ object TextAnalysis extends Catalog {
     "q157_ngram_novelty" -> Q(
       fn = (s, d) => {
         val n = 5
-        val base = docs(s, d)
+        val base = Tables.documents(s, d)
         val pos = base
           .select(col("doc_id"), words.as("ws"))
           .filter(size(col("ws")) >= n)
@@ -1057,7 +1069,7 @@ object TextAnalysis extends Catalog {
         // one-pass native kernel (q35's TokenStats stance): the
         // explode → two-level groupBy spelling shuffles O(corpus
         // chars) rows and measured 5.7 s at sf0.1 vs sub-second here
-        docs(s, d)
+        Tables.documents(s, d)
           .select(col("doc_id"), lower(col("text")).as("t"))
           .filter(length(col("t")) >= 2)
           .select(col("doc_id"),
@@ -1095,7 +1107,7 @@ object TextAnalysis extends Catalog {
     // bytes first (q26's stance), which changes no count below.
     "q168_gram_diversity" -> Q(
       fn = (s, d) => {
-        val base = docs(s, d).filter(length(col("text")) > 0)
+        val base = Tables.documents(s, d).filter(length(col("text")) > 0)
           .select(col("source"), split(lower(col("text")), " ").as("ws"))
         val uni = base.select(col("source"), lit(1L).as("n"),
           explode(col("ws")).as("g"))
@@ -1155,7 +1167,7 @@ object TextAnalysis extends Catalog {
     "q172_zipf_exponent" -> Q(
       fn = (s, d) => {
         val R = 200
-        val counts = docs(s, d)
+        val counts = Tables.documents(s, d)
           .select(col("source"),
             explode(split(lower(col("text")), " ")).as("token"))
           .filter(length(col("token")) > 0)
@@ -1169,16 +1181,7 @@ object TextAnalysis extends Catalog {
           .select(col("source"),
             log(col("rk").cast("double")).as("x"),
             log(col("cnt").cast("double")).as("y"))
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("n_terms"),
-            sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-            sum(col("x") * col("y")).as("sxy"),
-            sum(col("x") * col("x")).as("sxx"))
-          .filter(col("n_terms") >= 2)
-          .select(col("source"), col("n_terms"),
-            round((col("n_terms") * col("sxy") - col("sx") * col("sy")) /
-              (col("n_terms") * col("sxx") - col("sx") * col("sx")), 6)
-              .as("zipf_slope"))
+          .transform(zipfFit)
       },
       sql = Some(ZipfOracleSql),
       scaleNote = "token counts collapse map-side into one (source, token) shuffle — q75's plan; the rank window runs on the VOCABULARY per source and the rk <= 200 cut bounds the regression input to 200 rows/source regardless of corpus size, so the fit itself is a |sources|-row aggregate; at 100 TB the window swaps for a per-source top-200 TakeOrdered (same rows, no full-vocab sort) — REGISTERED as q243 under this oracle VERBATIM"),
@@ -1196,7 +1199,7 @@ object TextAnalysis extends Catalog {
     // information a source-partitioned lake exposes as its directory
     // listing), never the corpus.
     "q243_zipf_topk_windowless" -> Q(
-      fn = (s, d) => zipfWindowless(docs(s, d)),
+      fn = (s, d) => zipfWindowless(Tables.documents(s, d)),
       sql = Some(ZipfOracleSql),
       scaleNote = "the vocabulary frame materializes ONCE (types, not tokens — Heaps'-law-sized) and each source's leg is a TakeOrderedAndProject over its slice: per-partition 200-row heaps, a |partitions|×200-row merge, zero sorts of the vocabulary (PlanSpec pins no Window anywhere and heaps present); rank assignment folds the ≤200-row head per source into ONE sorted array and posexplodes — an aggregate whose state is capped at 200 entries, so nothing anywhere in this plan holds more than the head; legs scale with |sources| (each pruning to its slice — on a source-partitioned lake each leg reads one partition), which trades q172's single vocab-wide window pass for |sources| head-sized passes of a checkpointed frame: the right side of the trade exactly when the vocabulary is huge and |sources| is dimension-sized, which is the 100 TB shape"),
 
@@ -1213,28 +1216,7 @@ object TextAnalysis extends Catalog {
     // comparison crosses a fusion boundary.
     "q173_hybrid_retrieval" -> Q(
       fn = (s, d) => {
-        val terms = Seq("table", "hash", "merge")
-        val base = docs(s, d).select(
-          col("doc_id") +: size(words).cast("long").as("dl") +:
-            terms.zipWithIndex.map { case (t, i) =>
-              size(filter(words, w => w === lit(t))).cast("long").as(s"tf$i")
-            }: _*)
-        val stats = base.agg(
-          count(lit(1)).as("n"),
-          sum(col("dl")).as("sdl") +:
-            terms.indices.map(i =>
-              sum((col(s"tf$i") > 0).cast("long")).as(s"df$i")): _*)
-        def partScore(i: Int) = {
-          val tf = col(s"tf$i"); val df = col(s"df$i")
-          log(lit(1.0) + (col("n") - df + lit(0.5)) / (df + lit(0.5))) *
-            ((tf * lit(2.2)) /
-              (tf + lit(1.2) * (lit(0.25) +
-                lit(0.75) * (col("dl") / (col("sdl") / col("n"))))))
-        }
-        val cand = base.crossJoin(broadcast(stats))
-          .filter(col("tf0") + col("tf1") + col("tf2") > 0)
-          .select(col("doc_id"),
-            round(partScore(0) + partScore(1) + partScore(2), 6).as("bm25"))
+        val cand = bm25Scores(s, d, "bm25")
           .orderBy(col("bm25").desc, col("doc_id"))
           .limit(50)
         val emb = Tables.load(s, d, "embeddings")
@@ -1259,39 +1241,7 @@ object TextAnalysis extends Catalog {
           .select(col("doc_id"), col("bm25"), col("cosine"),
             col("rank_lex"), col("rank_sem"), col("borda"))
       },
-      sql = Some("""
-        WITH base AS (
-          SELECT doc_id,
-                 CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS dl,
-                 CAST(len(list_filter(string_split(lower(text), ' '),
-                                      w -> w = 'table')) AS BIGINT) AS tf0,
-                 CAST(len(list_filter(string_split(lower(text), ' '),
-                                      w -> w = 'hash')) AS BIGINT) AS tf1,
-                 CAST(len(list_filter(string_split(lower(text), ' '),
-                                      w -> w = 'merge')) AS BIGINT) AS tf2
-          FROM documents),
-        stats AS (
-          SELECT count(*) AS n, sum(dl) AS sdl,
-                 sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-                 sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-                 sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-          FROM base),
-        sc AS (
-          SELECT doc_id, round(
-              ln(1.0 + CAST(n - df0 + 0.5 AS DOUBLE) / CAST(df0 + 0.5 AS DOUBLE)) *
-                ((tf0 * CAST(2.2 AS DOUBLE)) /
-                 (tf0 + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) +
-                   CAST(0.75 AS DOUBLE) * (dl / (sdl / n)))))
-            + ln(1.0 + CAST(n - df1 + 0.5 AS DOUBLE) / CAST(df1 + 0.5 AS DOUBLE)) *
-                ((tf1 * CAST(2.2 AS DOUBLE)) /
-                 (tf1 + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) +
-                   CAST(0.75 AS DOUBLE) * (dl / (sdl / n)))))
-            + ln(1.0 + CAST(n - df2 + 0.5 AS DOUBLE) / CAST(df2 + 0.5 AS DOUBLE)) *
-                ((tf2 * CAST(2.2 AS DOUBLE)) /
-                 (tf2 + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) +
-                   CAST(0.75 AS DOUBLE) * (dl / (sdl / n))))), 6) AS bm25
-          FROM base CROSS JOIN stats
-          WHERE tf0 + tf1 + tf2 > 0),
+      sql = Some(bm25Sql("bm25") + """
         cand AS (SELECT doc_id, bm25 FROM sc ORDER BY bm25 DESC, doc_id LIMIT 50),
         emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         qv AS (SELECT v AS q, sqrt(list_dot_product(v, v)) AS qn
@@ -1334,7 +1284,7 @@ object TextAnalysis extends Catalog {
           (1L, "sort"), (1L, "group"), (1L, "join"),
           (2L, "stream"), (2L, "window"), (2L, "batch"))
           .toDF("qid", "term")
-        val base = docs(s, d)
+        val base = Tables.documents(s, d)
           .select(col("doc_id"), split(lower(col("text")), " ").as("ws"))
           .select(col("doc_id"), size(col("ws")).cast("long").as("dl"),
             col("ws"))
@@ -1421,7 +1371,7 @@ object TextAnalysis extends Catalog {
     // non-empty; docs with NO duplicated 3-gram (the majority —
     // 467/500 at sf0.001) left-join to an explicit 0.
     "q233_repetition_signals" -> Q(
-      fn = (s, d) => repetitionReport(docs(s, d)),
+      fn = (s, d) => repetitionReport(Tables.documents(s, d)),
       sql = Some("""
         WITH base AS (
           SELECT doc_id, string_split(lower(text), ' ') AS w,
@@ -1527,7 +1477,13 @@ object TextAnalysis extends Catalog {
       .select(col("source"),
         log((col("pos") + 1).cast("double")).as("x"),
         log((-col("col.negcnt")).cast("double")).as("y"))
-      .groupBy(col("source"))
+      .transform(zipfFit)
+  }
+
+  /** q172/q243's per-source OLS slope of y = ln cnt on x = ln rank over
+    * a (source, x, y) head, for sources with at least two terms */
+  private def zipfFit(xy: DataFrame): DataFrame =
+    xy.groupBy(col("source"))
       .agg(count(lit(1)).as("n_terms"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
         sum(col("x") * col("y")).as("sxy"),
@@ -1537,7 +1493,6 @@ object TextAnalysis extends Catalog {
         round((col("n_terms") * col("sxy") - col("sx") * col("sy")) /
           (col("n_terms") * col("sxx") - col("sx") * col("sx")), 6)
           .as("zipf_slope"))
-  }
 
   /** q233's report body, factored out so the totality guard is
     * spec-testable on a fixture frame (`docsDf` needs doc_id + text).

@@ -36,4 +36,22 @@ class EntryContractSpec extends SparkSpec {
       finally walk.close()
     assert(builders == Seq("GraftSession.scala"))
   }
+
+  test("Tables.spread is the only place src/main reads the shuffle-partition count") {
+    import scala.jdk.CollectionConverters._
+    // split so that a grep of src/ for the read finds only Tables.scala
+    val read = ".get(\"spark.sql." + "shuffle.partitions\")"
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val walk = java.nio.file.Files.walk(root)
+    val hits =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(_ != root.resolve("graft/core/Tables.scala"))
+        .flatMap { p =>
+          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+            .collect { case (l, i) if l.contains(read) => s"$p:${i + 1}" }
+        }.toSeq.sorted
+      finally walk.close()
+    assert(hits.isEmpty,
+      s"${hits.size} scan spreads spelled by hand; use Tables.spread:\n${hits.mkString("\n")}")
+  }
 }

@@ -99,56 +99,66 @@ def canon(rows, cols):
     return out
 
 
-def main(outdir, sfdir):
+def connect(sfdir, threads=None):
+    """DuckDB connection with a view per sf_dir table."""
     con = duckdb.connect()
     # long-running oracles otherwise print a progress bar into stdout,
     # which breaks harnesses that parse this script's output
     con.execute("SET enable_progress_bar=false")
+    if threads is not None:
+        con.execute(f"SET threads={threads}")
     for tname in TABLES:
         p = f"{sfdir}/{tname}.parquet"
         if os.path.exists(p):
             con.execute(
                 f"CREATE VIEW {tname} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def check_one(con, outdir, name, sql):
+    """Compares one query's Spark dump with its oracle. Returns
+    (status, detail): ("PASS", "<n> rows") or ("FAIL", reason), where a
+    row mismatch's reason carries up to three got/want lines."""
+    files = glob.glob(f"{outdir}/{name}/*.parquet")
+    if not files:
+        return "FAIL", "no spark output"
+    try:
+        got = con.execute(
+            f"SELECT * FROM read_parquet({files!r})").fetchall()
+        gcols = [d[0] for d in con.description]
+        want = con.execute(sql).fetchall()
+        wcols = [d[0] for d in con.description]
+    except Exception as e:
+        return "FAIL", str(e)
+    if sorted(gcols) != sorted(wcols):
+        return "FAIL", f"cols {sorted(gcols)} != {sorted(wcols)}"
+    try:
+        lint = lint_types(con, name, sql, files)
+    except Exception as e:
+        lint = [f"lint error: {e}"]
+    if lint:
+        return "FAIL", "TYPELINT " + "; ".join(lint)
+    g, w = canon(got, gcols), canon(want, wcols)
+    if g == w:
+        return "PASS", f"{len(g)} rows"
+    lines = [f"rows differ ({len(g)} vs {len(w)})"]
+    for a, b in list(zip(g, w))[:3]:
+        if a != b:
+            lines.append(f"  got  {a[:200]}\n  want {b[:200]}")
+    return "FAIL", "\n".join(lines)
+
+
+def main(outdir, sfdir):
+    con = connect(sfdir)
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
-        pdir = f"{outdir}/{name}"
-        files = glob.glob(f"{pdir}/*.parquet")
-        if not files:
-            print(f"FAIL {name}: no spark output")
-            n_fail += 1
-            continue
-        try:
-            got = con.execute(
-                f"SELECT * FROM read_parquet({files!r})").fetchall()
-            gcols = [d[0] for d in con.description]
-            want = con.execute(sql).fetchall()
-            wcols = [d[0] for d in con.description]
-        except Exception as e:
-            print(f"FAIL {name}: {e}")
-            n_fail += 1
-            continue
-        if sorted(gcols) != sorted(wcols):
-            print(f"FAIL {name}: cols {sorted(gcols)} != {sorted(wcols)}")
-            n_fail += 1
-            continue
-        try:
-            lint = lint_types(con, name, sql, files)
-        except Exception as e:
-            lint = [f"lint error: {e}"]
-        if lint:
-            print(f"FAIL {name}: TYPELINT " + "; ".join(lint))
-            n_fail += 1
-            continue
-        g, w = canon(got, gcols), canon(want, wcols)
-        if g == w:
-            print(f"PASS {name} ({len(g)} rows)")
+        status, detail = check_one(con, outdir, name, sql)
+        if status == "PASS":
+            print(f"PASS {name} ({detail})")
             n_pass += 1
         else:
-            print(f"FAIL {name}: rows differ ({len(g)} vs {len(w)})")
-            for a, b in list(zip(g, w))[:3]:
-                if a != b:
-                    print(f"  got  {a[:200]}\n  want {b[:200]}")
+            print(f"FAIL {name}: {detail}")
             n_fail += 1
     print(f"\n{n_pass} pass / {n_fail} fail")
     return 1 if n_fail else 0

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""SF-robustness variant of check.py (dev tooling): same compare, but
+"""SF-robustness wrapper of check.py (dev tooling): check.py's own
+compare (check_one, so GRAFT_CHECK_FULLPREC applies here too), but
 each oracle runs in its own subprocess under a wall-clock watchdog, so
 the O(n²) brute-force oracle twins (practical only at the sf0.01 gate)
 time out as SKIP instead of wedging the run. DuckDB is pinned to one
@@ -9,67 +10,14 @@ BASELINE.md) — single-threaded it agrees with the engine everywhere.
 
   python3 tools/check_watchdog.py <verify_out_dir> <sf_dir> [timeout_s]
 """
-import json, math, sys, glob, os, multiprocessing as mp
+import json, sys, os, multiprocessing as mp
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
+from check import check_one, connect
 
 
-def canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float):
-                v = "NaN" if math.isnan(v) else f"{v:.6g}"
-            vals.append(str(v))
-        out.append("|".join(vals))
-    out.sort()
-    return out
-
-
-def check_one(outdir, sfdir, name, sql, q):
-    import duckdb
-    con = duckdb.connect()
-    con.execute("SET enable_progress_bar=false")
-    con.execute("SET threads=1")
-    for tname in TABLES:
-        p = f"{sfdir}/{tname}.parquet"
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {tname} AS SELECT * FROM read_parquet('{p}')")
-    files = glob.glob(f"{outdir}/{name}/*.parquet")
-    if not files:
-        q.put(("FAIL", name, "no spark output")); return
-    try:
-        got = con.execute(
-            f"SELECT * FROM read_parquet({files!r})").fetchall()
-        gcols = [d[0] for d in con.description]
-        want = con.execute(sql).fetchall()
-        wcols = [d[0] for d in con.description]
-    except Exception as e:
-        q.put(("FAIL", name, str(e))); return
-    if sorted(gcols) != sorted(wcols):
-        q.put(("FAIL", name, f"cols {sorted(gcols)} != {sorted(wcols)}")); return
-    try:
-        from check import lint_types
-        lint = lint_types(con, name, sql, files)
-    except Exception as e:
-        lint = [f"lint error: {e}"]
-    if lint:
-        q.put(("FAIL", name, "TYPELINT " + "; ".join(lint))); return
-    g, w = canon(got, gcols), canon(want, wcols)
-    if g == w:
-        q.put(("PASS", name, f"{len(g)} rows"))
-    else:
-        detail = next((f"got {a[:120]} want {b[:120]}"
-                       for a, b in zip(g, w) if a != b),
-                      f"rows {len(g)} vs {len(w)}")
-        q.put(("FAIL", name, detail))
+def check_in_child(outdir, sfdir, name, sql, q):
+    q.put(check_one(connect(sfdir, threads=1), outdir, name, sql))
 
 
 def main(outdir, sfdir, timeout):
@@ -77,7 +25,8 @@ def main(outdir, sfdir, timeout):
     n = {"PASS": 0, "FAIL": 0, "SKIP": 0}
     for name, sql in sorted(oracle.items()):
         q = mp.Queue()
-        p = mp.Process(target=check_one, args=(outdir, sfdir, name, sql, q))
+        p = mp.Process(target=check_in_child,
+                       args=(outdir, sfdir, name, sql, q))
         p.start()
         p.join(timeout)
         if p.is_alive():
@@ -88,7 +37,7 @@ def main(outdir, sfdir, timeout):
             try:
                 # a child killed hard (OOM, segfault) exits without
                 # posting a result — that's a FAIL, not a hang
-                status, _, detail = q.get(timeout=5)
+                status, detail = q.get(timeout=5)
             except Exception:
                 status, detail = "FAIL", f"checker died (exit {p.exitcode})"
             print(f"{status} {name}: {detail}")
