@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.DirSwap
+
 /** Partition-level MERGE: [[Upsert]] against a snapshot stored
   * `partitionBy(partitionCol)` on disk, rewriting ONLY the partition
   * directories the delta touches. The batch-MERGE answer to the
@@ -30,9 +32,9 @@ import org.apache.spark.sql.functions._
   *     key columns plus `partitionCol`.
   *   - single writer per snapshotDir (the DirSwap contract).
   *
-  * Crash safety: each partition installs via rename-aside (old dir
-  * preserved under `<snapshotDir>_merge_old/` until its replacement is
-  * in place); a crash mid-merge leaves SOME partitions new and some
+  * Crash safety: each partition installs via [[DirSwap]]'s swap (old
+  * dir preserved under `<snapshotDir>_merge_old/` until its replacement
+  * is in place); a crash mid-merge leaves SOME partitions new and some
   * old — re-applying the same batch re-converges, because the merge is
   * idempotent (same at-least-once stance as SnapshotSink's micro-batch
   * replay). Leftover aside dirs are restored automatically on the next
@@ -67,16 +69,11 @@ object PartitionedUpsert {
       s"deletes must carry exactly keys + $partitionCol, " +
         s"got ${del.columns.mkString(",")}"))
 
-    // normalize FIRST: with a trailing slash in snapshotDir, the
-    // string-concatenated `_merge_*`/`_init_tmp` siblings below would
-    // silently become CHILDREN of the root ("x/snap/" + "_init_tmp"),
-    // and the first-install rename would move the tmp dir INSIDE the
-    // root it just created — an empty-looking snapshot
     val root = new Path(snapshotDir)
     val dir = root.toString
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    restoreAside(fs, dir)
-    restoreFull(fs, dir)
+    DirSwap.recover(fs, root, new Path(dir + "_full_old"))
+    restoreAside(fs, root)
 
     // An EMPTIED snapshot (deletes wiped every row — see fullRewrite's
     // empty branch) is one root-level empty part file and no partition
@@ -98,27 +95,13 @@ object PartitionedUpsert {
 
     if (!fs.exists(root)) {
       // first install: the delta IS the snapshot (minus deletes, whose
-      // keys are simply absent). Written to a tmp sibling then renamed
-      // into place — a crash mid-write never leaves a torn visible dir.
+      // keys are simply absent)
       val init = deletes.fold(delta)(del =>
         delta.join(broadcast(del.select(keys.map(col): _*)), keys, "left_anti"))
-      val tmp = new Path(dir + "_init_tmp")
-      fs.delete(tmp, true)
-      init.write.mode("overwrite").partitionBy(partitionCol).parquet(tmp.toString)
-      // null partition values are outside the touched-partition
-      // contract on EVERY path: a null row landing in Hive's default
-      // partition dir could never be updated or deleted by later
-      // merges. The tmp write surfaces them with zero extra scan —
-      // fail before install, leaving no snapshot behind.
-      val hiveDefault = new Path(tmp, s"$partitionCol=__HIVE_DEFAULT_PARTITION__")
-      if (fs.exists(hiveDefault)) {
-        fs.delete(tmp, true)
-        sys.error(
-          s"PartitionedUpsert: null $partitionCol value in the first-install " +
-            "delta — null partitions are outside the touched-partition contract")
+      DirSwap.rewriteInPlace(spark, dir) { tmp =>
+        init.write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
+        rejectNullPartition(fs, new Path(tmp), partitionCol, "first-install delta")
       }
-      if (!fs.rename(tmp, root))
-        sys.error(s"PartitionedUpsert: could not install first snapshot at $root")
       return
     }
 
@@ -206,28 +189,19 @@ object PartitionedUpsert {
     // file per dir per merge. The extra shuffle moves only the merged
     // rows, which are delta-bounded by construction.
     val tmpPath = new Path(dir + "_merge_tmp")
-    fs.delete(tmpPath, true)
     merged.repartition(col(partitionCol))
       .write.mode("overwrite").partitionBy(partitionCol).parquet(tmpPath.toString)
 
     // ---- per-partition rename-aside install ------------------------
     // touchedDirs covers both cases: a dir present in tmp swaps in; a
     // touched dir ABSENT from tmp was emptied by deletes and must go.
-    // (bak slots cannot pre-exist here: restoreAside drained and
+    // (aside slots cannot pre-exist here: restoreAside drained and
     // deleted the whole aside dir at entry.)
     val aside = new Path(dir + "_merge_old")
     fs.mkdirs(aside)
     touchedDirs.toSeq.sorted.foreach { name =>
-      val cur = new Path(root, name)
-      val nw = new Path(tmpPath, name)
-      val bak = new Path(aside, name)
-      if (fs.exists(cur) && !fs.rename(cur, bak))
-        sys.error(s"PartitionedUpsert: could not move $cur aside")
-      if (fs.exists(nw) && !fs.rename(nw, cur)) {
-        fs.rename(bak, cur) // restore
-        sys.error(s"PartitionedUpsert: could not install $nw at $cur")
-      }
-      fs.delete(bak, true)
+      DirSwap.swap(fs, new Path(root, name), new Path(tmpPath, name),
+        new Path(aside, name))
     }
     fs.delete(tmpPath, true)
     fs.delete(aside, true)
@@ -247,8 +221,8 @@ object PartitionedUpsert {
     * single root-level swap. No driver-side value list exists on this
     * path at all — the null-partition contract is enforced by the same
     * zero-extra-scan Hive-default-dir probe the first install uses.
-    * Crash safety: rename root aside, rename tmp in ([[restoreFull]]
-    * recovers the one-rename-in window on the next call).
+    * Crash safety: [[DirSwap]]'s swap via `<snapshotDir>_full_old`,
+    * which the next call's recover resolves.
     */
   private def fullRewrite(
       spark: SparkSession,
@@ -263,8 +237,7 @@ object PartitionedUpsert {
     val merged0 = Upsert(snap, delta, keys)
     val merged = deletes.fold(merged0)(del =>
       merged0.join(broadcast(del.select(keys.map(col): _*)), keys, "left_anti"))
-    val tmp = new Path(dir + "_full_tmp")
-    fs.delete(tmp, true)
+    val tmp = new Path(dir + "_merge_tmp")
     if (merged.isEmpty) {
       // a delta whose deletes empty the table: a partitionBy write of
       // zero rows produces a dir with ONLY _SUCCESS, which schemaless
@@ -276,39 +249,23 @@ object PartitionedUpsert {
     } else
       merged.repartition(col(partitionCol))
         .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp.toString)
-    val hiveDefault = new Path(tmp, s"$partitionCol=__HIVE_DEFAULT_PARTITION__")
-    if (fs.exists(hiveDefault)) {
-      fs.delete(tmp, true)
-      sys.error(
-        s"PartitionedUpsert: null $partitionCol value in the delta — " +
-          "null partitions are outside the touched-partition contract")
-    }
-    val old = new Path(dir + "_full_old")
-    fs.delete(old, true)
-    if (!fs.rename(root, old))
-      sys.error(s"PartitionedUpsert: could not move $root aside for full rewrite")
-    if (!fs.rename(tmp, root)) {
-      fs.rename(old, root) // restore
-      sys.error(s"PartitionedUpsert: could not install full rewrite at $root")
-    }
-    fs.delete(old, true)
+    rejectNullPartition(fs, tmp, partitionCol, "delta")
+    DirSwap.swap(fs, root, tmp, new Path(dir + "_full_old"))
   }
 
-  /** Recover from a crash inside [[fullRewrite]]'s two-rename swap:
-    * old present + root missing = crashed between renames, move the
-    * old snapshot back; both present = install completed, drop the old.
+  /** Null partition values are outside the touched-partition contract
+    * on EVERY path: a null row landing in Hive's default partition dir
+    * could never be updated or deleted by later merges. The tmp write
+    * surfaces them with zero extra scan — fail before install, leaving
+    * nothing behind.
     */
-  private def restoreFull(fs: FileSystem, snapshotDir: String): Unit = {
-    val old = new Path(snapshotDir + "_full_old")
-    if (fs.exists(old)) {
-      val root = new Path(snapshotDir)
-      if (!fs.exists(root)) {
-        if (!fs.rename(old, root))
-          sys.error(s"PartitionedUpsert: could not restore $old to $root")
-      } else fs.delete(old, true)
+  private def rejectNullPartition(
+      fs: FileSystem, tmp: Path, partitionCol: String, what: String): Unit =
+    if (fs.exists(new Path(tmp, s"$partitionCol=__HIVE_DEFAULT_PARTITION__"))) {
+      fs.delete(tmp, true)
+      sys.error(s"PartitionedUpsert: null $partitionCol value in the $what — " +
+        "null partitions are outside the touched-partition contract")
     }
-    fs.delete(new Path(snapshotDir + "_full_tmp"), true)
-  }
 
   /** The touched-partitions-only snapshot read — package-private so
     * the spec can assert file-level pruning directly. Listing is
@@ -345,25 +302,21 @@ object PartitionedUpsert {
       .filter(_.startsWith(partitionCol + "="))
       .toSet
 
-  /** Recover from a crash inside a previous call's swap loop: any dir
-    * under `_merge_old` whose snapshot slot is EMPTY was moved aside
-    * but never replaced — rename it back; one whose slot is occupied
-    * was already replaced — drop it. Leaves the snapshot at a mix of
-    * old and new partitions; replaying the crashed batch re-converges.
+  /** Recover from a crash inside a previous call's swap loop:
+    * [[DirSwap]]'s recover over each dir under `_merge_old` (one whose
+    * snapshot slot is EMPTY was moved aside but never replaced and goes
+    * back; one whose slot is occupied was already replaced and is
+    * dropped). Leaves the snapshot at a mix of old and new
+    * partitions; replaying the crashed batch re-converges.
     */
-  private def restoreAside(fs: FileSystem, snapshotDir: String): Unit = {
-    val aside = new Path(snapshotDir + "_merge_old")
+  private def restoreAside(fs: FileSystem, root: Path): Unit = {
+    val aside = new Path(root.toString + "_merge_old")
     if (fs.exists(aside)) {
-      val root = new Path(snapshotDir)
       if (!fs.exists(root))
         sys.error(s"PartitionedUpsert: aside dir $aside exists but snapshot " +
           s"$root does not — refusing to guess; restore manually")
       fs.listStatus(aside).foreach { st =>
-        val back = new Path(root, st.getPath.getName)
-        if (!fs.exists(back)) {
-          if (!fs.rename(st.getPath, back))
-            sys.error(s"PartitionedUpsert: could not restore ${st.getPath} to $back")
-        } else fs.delete(st.getPath, true)
+        DirSwap.recover(fs, new Path(root, st.getPath.getName), st.getPath)
       }
       fs.delete(aside, true)
     }

@@ -159,18 +159,26 @@ object EnrichJob {
 
   /** Cache read tolerant of both schemas: pre-TTL files have no
     * `written_at` column (mergeSchema unions them; a wholly-legacy
-    * cache gets a null column added).
+    * cache gets a null column added). Only a missing dir, or one with
+    * no visible data files, reads as an empty cache. Any other read
+    * error (a corrupt or foreign file) propagates: read as empty, it
+    * would re-call the whole corpus on every run and keep appending
+    * into the broken dir.
     */
   private def readCache(
       spark: org.apache.spark.sql.SparkSession, cacheDir: String): DataFrame = {
+    val dir = new org.apache.hadoop.fs.Path(cacheDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasData = fs.exists(dir) && fs.listStatus(dir).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
     val raw =
-      try spark.read.option("mergeSchema", "true").parquet(cacheDir)
-      catch { case _: Throwable =>
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "cacheKey STRING, response STRING, written_at TIMESTAMP"))
-      }
+      if (hasData) spark.read.option("mergeSchema", "true").parquet(cacheDir)
+      else spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "cacheKey STRING, response STRING, written_at TIMESTAMP"))
     val withTs =
       if (raw.columns.contains("written_at")) raw
       else raw.withColumn("written_at", lit(null).cast("timestamp"))
@@ -182,14 +190,23 @@ object EnrichJob {
     * `maxAgeMs` (0 keeps all ages). Deleting from a response cache is
     * always SAFE — a dropped entry only costs a re-call — but legacy
     * rows with no timestamp are kept conservatively. The rewrite goes
-    * through a sibling temp dir + rename, so a reader sees either the
-    * old or the new cache; do not run concurrently with a writing job
-    * (the append-only contract covers jobs, not compaction).
+    * through DirSwap, so a reader sees either the old or the new
+    * cache, and a crash mid-swap leaves the full cache at
+    * `_compact_old`, which the next compactCache restores before it
+    * reads. Do not run concurrently with a writing job (the
+    * append-only contract covers jobs, not compaction).
+    *
+    * Boundary: [[runCached]] does not recover (the cache is shared by
+    * concurrent appending jobs, and recovery is a single-writer
+    * rename), so a runCached that runs between a crashed compaction
+    * and the next one re-calls the moved-aside answers. This costs
+    * calls, never wrong answers.
     */
   def compactCache(
       spark: org.apache.spark.sql.SparkSession,
       cacheDir: String,
       maxAgeMs: Long = 0L): Unit = {
+    DirSwap.recover(spark, cacheDir) // before the read below
     val cache = readCache(spark, cacheDir)
     val pruned =
       if (maxAgeMs <= 0) cache
@@ -204,8 +221,6 @@ object EnrichJob {
         struct(coalesce(col("written_at"), lit("1970-01-01").cast("timestamp")),
           col("response"))).as("m"))
       .select(col("cacheKey"), col("m.response"), col("m.written_at"))
-    // swap via rename-aside (DirSwap), not delete-then-rename: a crash
-    // leaves the full cache at _compact_old, never destroyed.
     DirSwap.rewriteInPlace(spark, cacheDir) { tmp =>
       compacted.write.mode("overwrite").parquet(tmp)
     }

@@ -106,7 +106,9 @@ object IncrementalDedup {
       excludeBatch: Option[String]): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(s"$indexDir/$sub")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) emptyDf(spark, schema)
+    // before the batch's write recreates a sub-table that a crashed
+    // compactIndex moved aside
+    if (!DirSwap.recover(spark, root.toString)) emptyDf(spark, schema)
     else {
       val keep = fs.listStatus(root)
         .map(_.getPath)
@@ -683,8 +685,9 @@ object IncrementalDedup {
     * emitted by subsequent calls are identical before and after.
     *
     * Crash-safety and the single-writer contract are DirSwap's: a
-    * crash mid-swap leaves the original sub-table at `_compact_old`;
-    * do not run concurrently with a dedup call on the same index.
+    * crash mid-swap leaves the original sub-table at `_compact_old`,
+    * which the next batch or compaction restores; do not run
+    * concurrently with a dedup call on the same index.
     * At 100 TB, run this on a cadence (e.g. every K batches) — cost
     * is one streamed rewrite of the index, no shuffle.
     */
@@ -693,11 +696,9 @@ object IncrementalDedup {
       indexDir: String,
       targetFilesPerTable: Int = 8): Unit = {
     require(targetFilesPerTable > 0, "targetFilesPerTable must be positive")
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     IndexTables.foreach { case (sub, schema) =>
       val dir = s"$indexDir/$sub"
-      if (fs.exists(new org.apache.hadoop.fs.Path(dir))) {
+      if (DirSwap.recover(spark, dir)) {
         DirSwap.rewriteInPlace(spark, dir) { tmp =>
           // recursive: folds per-batch b<id> subdirs (streaming layout)
           // into the flat compacted form along with legacy flat files.

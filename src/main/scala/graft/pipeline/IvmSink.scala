@@ -39,7 +39,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * Serving ([[readView]]) folds base ∪ partials — after N batches that
   * is N×|groups| rows, so the fold is O(view), not O(base), and
   * [[compact]] bounds N by folding committed partials back into the
-  * flat base (DirSwap — crash leaves the old layout at `_compact_old`).
+  * flat base (DirSwap — crash leaves the old layout at `_compact_old`,
+  * which the next batch or compaction restores).
   *
   * Contracts: single writer per viewDir; a committed batch is
   * permanently part of the view (resetting the checkpoint and
@@ -52,25 +53,19 @@ object IvmSink {
 
   /** Install the base aggregate — rows already in the partial shape
     * `(group…, n, total)` — as the view's flat layer. Exactly once,
-    * before the stream starts; written to a tmp sibling then renamed
-    * so a crash can never leave a torn flat dir (SnapshotSink's
-    * first-install discipline), and refused if the view already
+    * before the stream starts; installed through DirSwap so a crash
+    * can never leave a torn flat dir, and refused if the view already
     * exists (overwriting flat files would also delete committed
     * batch subdirs).
     */
   def initBase(baseAgg: DataFrame, viewDir: String): Unit = {
     val spark = baseAgg.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(viewDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirPath = new org.apache.hadoop.fs.Path(viewDir)
-    if (fs.exists(dirPath))
+    if (DirSwap.recover(spark, viewDir))
       sys.error(s"IvmSink: view at $viewDir already exists — initBase is " +
         "once-only (fold new changes through the stream, or compact).")
-    val tmpPath = new org.apache.hadoop.fs.Path(viewDir + "_init_tmp")
-    fs.delete(tmpPath, true)
-    baseAgg.write.mode("overwrite").parquet(tmpPath.toString)
-    if (!fs.rename(tmpPath, dirPath))
-      sys.error(s"IvmSink: could not install base view at $viewDir")
+    DirSwap.rewriteInPlace(spark, viewDir) { tmp =>
+      baseAgg.write.mode("overwrite").parquet(tmp)
+    }
   }
 
   /** Continuous maintenance: `stream` carries CDC rows with
@@ -121,6 +116,8 @@ object IvmSink {
     val partial = contribs.groupBy(col(asGroup))
       .agg(sum(col("n")).as("n"), sum(col("total")).as("total"))
     val sub = if (runId.isEmpty) s"b$batchId" else s"b$runId-$batchId"
+    // the subdir write would recreate a view a crashed compact moved aside
+    DirSwap.recover(batch.sparkSession, viewDir)
     partial.write.mode("overwrite").parquet(s"$viewDir/$sub")
   }
 

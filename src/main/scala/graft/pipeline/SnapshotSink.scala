@@ -91,47 +91,26 @@ object SnapshotSink {
         // touched-partition-only rewrite
         graft.operators.PartitionedUpsert(
           spark, snapshotDir, upserts, keys, pc, deletes)
-        return
-      case None => ()
-    }
-
-    val hc = spark.sparkContext.hadoopConfiguration
-    val dirPath = new org.apache.hadoop.fs.Path(snapshotDir)
-    val bakPath = new org.apache.hadoop.fs.Path(snapshotDir + "_compact_old")
-    val fs = dirPath.getFileSystem(hc)
-    // crash inside a previous DirSwap's rename window: the dir is
-    // absent but the WHOLE prior snapshot sits at _compact_old.
-    // Treating that as "first batch" would silently reset the table to
-    // one batch's rows — restore the moved-aside snapshot instead
-    // (the documented DirSwap recovery, automated).
-    if (!fs.exists(dirPath) && fs.exists(bakPath)) {
-      if (!fs.rename(bakPath, dirPath))
-        sys.error(s"SnapshotSink: could not restore $bakPath to $dirPath")
-    }
-    if (!fs.exists(dirPath)) {
-      // first batch: the compacted upserts ARE the snapshot (a key
-      // whose last op is a delete is already absent from `upserts`).
-      // Written to a tmp sibling then renamed into place, so a crash
-      // mid-write can never leave a torn dir that wedges the replay —
-      // the visible dir either doesn't exist or is complete.
-      val tmpPath = new org.apache.hadoop.fs.Path(
-        snapshotDir + "_init_tmp")
-      fs.delete(tmpPath, true)
-      upserts.write.mode("overwrite").parquet(tmpPath.toString)
-      if (!fs.rename(tmpPath, dirPath))
-        sys.error(s"SnapshotSink: could not install first snapshot at $dirPath")
-    } else {
-      val snap = spark.read.parquet(snapshotDir)
-      val merged0 = graft.operators.Upsert(snap, upserts, keys)
-      val merged = deletes.fold(merged0) { del =>
-        // tiny per-batch delete set: broadcast anti-join
-        merged0.join(broadcast(del), keys, "left_anti")
-      }
-      // the lazy read of the old snapshot inside writeTmp is safe:
-      // DirSwap swaps only after the tmp write completes
-      DirSwap.rewriteInPlace(spark, snapshotDir) { tmp =>
-        merged.write.mode("overwrite").parquet(tmp)
-      }
+      case None =>
+        // recover first, so that an absent dir is truly the first
+        // batch, not a snapshot a crashed swap moved aside: the
+        // compacted upserts ARE the snapshot (a key whose last op is a
+        // delete is already absent from `upserts`). Either way the new
+        // snapshot goes to a tmp sibling first, so a crash mid-write
+        // never leaves a torn visible dir that wedges the replay.
+        val next =
+          if (!DirSwap.recover(spark, snapshotDir)) upserts
+          else {
+            val merged = graft.operators.Upsert(
+              spark.read.parquet(snapshotDir), upserts, keys)
+            // tiny per-batch delete set: broadcast anti-join
+            deletes.fold(merged)(del => merged.join(broadcast(del), keys, "left_anti"))
+          }
+        // the lazy read of the old snapshot inside this write is safe:
+        // DirSwap swaps only after the tmp write completes
+        DirSwap.rewriteInPlace(spark, snapshotDir) { tmp =>
+          next.write.mode("overwrite").parquet(tmp)
+        }
     }
   }
 }

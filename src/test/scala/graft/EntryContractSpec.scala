@@ -54,4 +54,26 @@ class EntryContractSpec extends SparkSpec {
     assert(hits.isEmpty,
       s"${hits.size} scan spreads spelled by hand; use Tables.spread:\n${hits.mkString("\n")}")
   }
+
+  test("DirSwap is the only place src/main swaps or restores a rewritten directory") {
+    import scala.jdk.CollectionConverters._
+    // split so that a grep of src/ for the call does not hit this spec
+    val call = "." + "rename("
+    val root = java.nio.file.Paths.get("src/main/scala")
+    // Compact's manifest commit and VersionedSnapshot's pointer commit
+    // are their own protocols
+    val own = Set("pipeline/DirSwap.scala", "operators/Compact.scala",
+      "operators/VersionedSnapshot.scala").map(f => root.resolve(s"graft/$f"))
+    val walk = java.nio.file.Files.walk(root)
+    val hits =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filterNot(own)
+        .flatMap { p =>
+          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+            .collect { case (l, i) if l.contains(call) => s"$p:${i + 1}" }
+        }.toSeq.sorted
+      finally walk.close()
+    assert(hits.isEmpty,
+      s"${hits.size} directory renames outside DirSwap:\n${hits.mkString("\n")}")
+  }
 }

@@ -211,6 +211,49 @@ class EnrichJobSpec extends SparkSpec {
       s"stale dropped, legacy kept: $keys")
   }
 
+  test("compactCache recovers a crash inside its own swap instead of destroying the cache") {
+    val cacheDir = Files.createTempDirectory("graft-cache5").resolve("c").toString
+    EnrichJobSpec.calls.set(0)
+    val counting = new graft.llm.LlmClient {
+      override def chat(ms: Seq[graft.llm.Msg], c: JobConfig): String = {
+        EnrichJobSpec.calls.incrementAndGet(); s"R:${ms.last.text}"
+      }
+    }
+    EnrichJob.runCached(inputDf, cfg(), counting, cacheDir).good.count()
+    assert(EnrichJobSpec.calls.get() == 2)
+    // simulate dying between DirSwap's two renames inside compactCache:
+    // the cache dir is gone, the whole cache sits at _compact_old
+    Files.move(java.nio.file.Paths.get(cacheDir),
+      java.nio.file.Paths.get(cacheDir + "_compact_old"))
+    EnrichJob.compactCache(spark, cacheDir)
+    assert(!Files.exists(java.nio.file.Paths.get(cacheDir + "_compact_old")))
+    EnrichJob.runCached(inputDf, cfg(), counting, cacheDir).good.count()
+    assert(EnrichJobSpec.calls.get() == 2, "the recovered cache must serve every answer")
+    EnrichJob.compactCache(spark, cacheDir)
+    assert(spark.read.parquet(cacheDir).count() == 2)
+  }
+
+  test("runCached: an empty cache dir is an empty cache; an unreadable one " +
+    "fails before any backend call") {
+    val counting = new graft.llm.LlmClient {
+      override def chat(ms: Seq[graft.llm.Msg], c: JobConfig): String = {
+        EnrichJobSpec.calls.incrementAndGet(); "ok"
+      }
+    }
+    EnrichJobSpec.calls.set(0)
+    val empty = Files.createTempDirectory("graft-cache6").toString
+    assert(EnrichJob.runCached(inputDf, cfg(), counting, empty).good.count() == 2)
+    assert(EnrichJobSpec.calls.get() == 2, "an empty cache has no hits")
+
+    EnrichJobSpec.calls.set(0)
+    val broken = Files.createTempDirectory("graft-cache7")
+    Files.writeString(broken.resolve("part-00000"), "not parquet")
+    intercept[Exception] {
+      EnrichJob.runCached(inputDf, cfg(), counting, broken.toString).good.count()
+    }
+    assert(EnrichJobSpec.calls.get() == 0, "a broken cache must not re-call the corpus")
+  }
+
   test("dead-letter replay: failed records re-enter the pipeline and succeed") {
     val flaky = new FakeLlmClient(p =>
       if (p.contains("goodbye")) throw new RuntimeException("down") else "ok")

@@ -265,6 +265,30 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(p3.count() == 0)
   }
 
+  test("a crash inside compactIndex's swap is recovered by the next batch and compaction") {
+    // 12 words, 10 distinct 3-word shingles each; doc 2 changes the
+    // last word, so the two share 9 of 11: jaccard 0.818
+    val words = "a b c d e f g h i j k"
+    def doc(id: Long, last: String) = Seq((id, s"$words $last")).toDF("doc_id", "text")
+    def pairs(d: org.apache.spark.sql.DataFrame, idx: String) =
+      IncrementalDedup.dedupBatch(d, idx).as[(Long, Long, Double)].collect()
+        .map { case (a, b, j) => (a, b, math.round(j * 1000) / 1000.0) }.toSet
+
+    val idx = Files.createTempDirectory("graft-inc-crash").toString
+    assert(pairs(doc(1L, "l"), idx).isEmpty)
+    // simulate dying between DirSwap's two renames inside compactIndex:
+    // the postings dir is gone, the whole sub-table sits at
+    // postings_compact_old
+    Files.move(java.nio.file.Paths.get(idx, "postings"),
+      java.nio.file.Paths.get(idx, "postings_compact_old"))
+    assert(pairs(doc(2L, "z"), idx) == Set((1L, 2L, 0.818)),
+      "the next batch must restore the index, not read it as empty")
+    IncrementalDedup.compactIndex(spark, idx)
+    assert(!Files.exists(java.nio.file.Paths.get(idx, "postings_compact_old")))
+    // the compacted index still holds both earlier docs
+    assert(pairs(doc(3L, "l"), idx) == Set((1L, 3L, 1.0), (2L, 3L, 0.818)))
+  }
+
   test("two-batch incremental span coverage equals one-shot q117 for the last batch") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select(col("doc_id"), col("text"))

@@ -147,6 +147,26 @@ class IvmSinkSpec extends SparkSpec {
     assert(viewSet(viewDir) == finalRows.toSet.filterNot(_._1 == "F"))
   }
 
+  test("a crash inside compact's swap is recovered by the next batch and compaction") {
+    val viewDir = Files.createTempDirectory("graft-ivm6").toString + "/view"
+    IvmSink.initBase(baseAgg, viewDir)
+    val b1 = feedDf.filter(col("ncents") <= 250)
+    val b2 = feedDf.filter(col("ncents") > 250)
+    IvmSink.applyBatch(b1, "nst", "ncents", "ost", "ocents", "st",
+      viewDir, runId = "r", batchId = 0L)
+    // simulate dying between DirSwap's two renames inside compact: the
+    // view dir is gone, base and partials sit at _compact_old
+    Files.move(java.nio.file.Paths.get(viewDir),
+      java.nio.file.Paths.get(viewDir + "_compact_old"))
+    IvmSink.applyBatch(b2, "nst", "ncents", "ost", "ocents", "st",
+      viewDir, runId = "r", batchId = 1L)
+    assert(viewSet(viewDir) == finalRows.toSet,
+      "the next batch must restore the view, not start a new one")
+    IvmSink.compact(spark, viewDir)
+    assert(viewSet(viewDir) == finalRows.toSet)
+    assert(!Files.exists(java.nio.file.Paths.get(viewDir + "_compact_old")))
+  }
+
   test("initBase refuses an existing view") {
     val viewDir = Files.createTempDirectory("graft-ivm5").toString + "/view"
     IvmSink.initBase(baseAgg, viewDir)
