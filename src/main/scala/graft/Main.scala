@@ -79,12 +79,13 @@ object Main {
           stdoutTmp = Some(d)
           d.resolve("result").toString
         }
-        val split = Jsonl.read(spark, inPath)
+        // split by bytes so the call stage spreads over every core
+        val split = Jsonl.read(spark, inPath, spark.sparkContext.defaultParallelism)
         val result = EnrichJob.run(split.good, cfg, client, EnrichOptions())
         Jsonl.write(result.good, outDir)
-        // no --out → stream the part files to STDOUT, reference-shaped
-        // (one JSON object per line; order across partitions is the
-        // engine's, as documented for every distributed sink here)
+        // no --out → stream the part files to STDOUT, reference-shaped:
+        // one JSON object per line, in input order (the byte split has
+        // no shuffle, and part files are numbered by partition)
         if (out.isEmpty) {
           import scala.jdk.CollectionConverters._
           val listing = Files.list(Paths.get(outDir))

@@ -23,10 +23,34 @@ object Jsonl {
 
   final case class Split(good: DataFrame, corrupt: DataFrame)
 
-  /** Read JSONL into (good records, corrupt raw lines). */
-  def read(spark: SparkSession, path: String): Split = {
-    val raw = spark.read.text(path)
-      .filter(length(trim(col("value"))) > 0) // blank-line skip (rb:18)
+  /** Read JSONL into (good records, corrupt raw lines).
+    *
+    * By default this is Spark's text source, which packs a small file
+    * into one split. With `minPartitions` > 1 the input is split by
+    * bytes into about that many partitions, in file and byte order and
+    * without a shuffle, so the part files written from it stay in input
+    * order. The text source takes no per-read split size, so the split
+    * read goes through `textFile`: the same Hadoop line reader and
+    * hidden-file filter; a directory of many small files then reads as
+    * at least one partition per file.
+    *
+    * Every stage downstream of the read runs as that many tasks and
+    * every write lands that many part files, so the split pays only
+    * where the LLM calls run in the read's own stage: `Main` asks for
+    * `defaultParallelism` so a small corpus feeds every core's enrich
+    * task. Elsewhere the default is the cheaper one: in `runCached`, for
+    * one, a split of a small input multiplies the cache files each pass
+    * appends and the tasks that scan them, for calls that mostly wait
+    * on retry backoff rather than on free slots.
+    */
+  def read(spark: SparkSession, path: String, minPartitions: Int = 1): Split = {
+    val lines =
+      if (minPartitions <= 1) spark.read.text(path)
+      else {
+        import spark.implicits._
+        spark.sparkContext.textFile(path, minPartitions).toDS().toDF("value")
+      }
+    val raw = lines.filter(length(trim(col("value"))) > 0) // blank-line skip (rb:18)
     val parsed = raw.select(
       col("value"),
       from_json(

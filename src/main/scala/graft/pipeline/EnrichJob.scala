@@ -1,11 +1,10 @@
 package graft.pipeline
 
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, LinkedBlockingQueue, TimeUnit}
 
 import scala.collection.mutable
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.util.control.NonFatal
+import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -18,10 +17,19 @@ import graft.template.Template
   * contract (240 s timeout lives in JobConfig) plus the scale features
   * the reference lacks: per-partition async concurrency and
   * retry-with-backoff (SURVEY.md E18).
+  *
+  * Each partition keeps at most `concurrency` requests on the wire, so
+  * the total backend concurrency is partitions × `concurrency`; Main's
+  * input is split into about `defaultParallelism` partitions, so it
+  * grows with the cores. Finished answers wait for the slower ones
+  * before them in a reorder buffer of at most 16 × `concurrency`
+  * records. A retry waits out its backoff (`retryBackoffMs × 2^attempt`)
+  * on a scheduler, holding no slot. A record with no answer
+  * `requestTimeoutSec × (maxRetries + 1)` plus its total backoff after
+  * its first call is dead-lettered.
   */
 final case class EnrichOptions(
-    /** in-flight requests per partition; total cluster concurrency =
-      * partitions × this */
+    /** requests on the wire per partition */
     concurrency: Int = 8,
     maxRetries: Int = 2,
     retryBackoffMs: Long = 500)
@@ -34,7 +42,8 @@ final case class EnrichOptions(
   *
   *   prompt render     — Catalyst concat/element_at (Template.column)
   *   LLM invoke        — mapPartitions, pooled client per partition,
-  *                       async window of `concurrency` requests
+  *                       `concurrency` requests in flight, rows in
+  *                       input order (callPartition)
   *   checkpoint        — localCheckpoint(eager = false) of the called
   *                       rows: each record is called exactly once, at
   *                       the first action, whichever frame it runs on
@@ -58,6 +67,15 @@ final case class Called(
 object EnrichJob {
 
   final case class Result(good: DataFrame, deadLetter: DataFrame)
+
+  /** the reorder buffer's cap, in multiples of `concurrency` */
+  private val ReorderCap = 16
+
+  /** what wakes a partition's task thread: the outcome of one attempt,
+    * or a retry whose backoff has passed */
+  private sealed trait Signal { def seq: Long; def attempt: Int }
+  private final case class Answered(seq: Long, attempt: Int, answer: Try[String]) extends Signal
+  private final case class RetryDue(seq: Long, attempt: Int) extends Signal
 
   /** `<think>…</think>` removal + trim (reference clean_content,
     * lib/job_processor.rb:207-210; Ruby /m ≡ Java (?s)). Ruby strip
@@ -275,77 +293,149 @@ object EnrichJob {
           to_json(struct(col("id"), col("texts"), col("images"))).as("record")))
   }
 
-  /** One partition's work: a sliding window of `concurrency` in-flight
-    * requests over a dedicated pool; results come back in input order.
-    * The pool dies with the iterator — no cross-task leakage.
+  /** One partition's work: a request window over a dedicated pool whose
+    * rows come back in input order.
+    *  - At most `concurrency` requests are on the wire at once.
+    *  - Finished answers wait in an in-order reorder buffer. A record is
+    *    read from the input only while fewer than `ReorderCap ×
+    *    concurrency` read records are not yet emitted, so a slow record
+    *    at the head holds back emission, not the calls behind it.
+    *  - A failed attempt gives its slot back at once. Its retry waits
+    *    out the backoff on a scheduler, then re-enters the window ahead
+    *    of new records.
+    *  - Each answer, failure and due retry is a signal that wakes the
+    *    task thread, which refills the window.
+    *  - A record still unanswered `requestTimeoutSec × (maxRetries + 1)`
+    *    plus its total backoff after its first call is dead-lettered and
+    *    its call interrupted (the reference's fail-soft contract).
+    * The pool and the scheduler die with the task.
     */
   private def callPartition(
       it: Iterator[Prompted],
       cfg: JobConfig,
       client: LlmClient,
       opts: EnrichOptions): Iterator[Called] = {
-    val pool = Executors.newFixedThreadPool(math.max(1, opts.concurrency))
-    // the pool must die with the TASK, not with iterator exhaustion:
+    val slots = math.max(1, opts.concurrency)
+    val pool = Executors.newFixedThreadPool(slots)
+    val timer = Executors.newSingleThreadScheduledExecutor()
+    def stop(): Unit = { pool.shutdownNow(); timer.shutdownNow() }
+    // the threads must die with the TASK, not with iterator exhaustion:
     // partial consumption (downstream limit, task failure, write error)
     // would otherwise leak non-daemon threads + in-flight requests in a
     // long-lived executor JVM. Null TaskContext = driver-side test.
     Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ => pool.shutdownNow()))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      .foreach(_.addTaskCompletionListener[Unit](_ => stop()))
+    val backoffMs = (0 until opts.maxRetries).map(a => opts.retryBackoffMs << a)
+    val boundMs = cfg.requestTimeoutSec * 1000L * (opts.maxRetries + 1) + backoffMs.sum
+    val signals = new LinkedBlockingQueue[Signal]()
 
-    def callOne(r: Prompted): Called = {
-      val messages = buildMessages(r, cfg.useImages)
-      try Called(r.id, r.texts, r.images,
-        Some(withRetry(opts)(client.chat(messages, cfg))), None, r.cacheKey)
-      catch { case e: Throwable =>
+    final class Pending(val seq: Long, val r: Prompted) {
+      val deadlineNs: Long = System.nanoTime() + TimeUnit.MILLISECONDS.toNanos(boundMs)
+      var attempt = 0
+      var call: java.util.concurrent.Future[_] = null // set while on the wire
+    }
+    // task-thread state: read records not yet finished, finished rows
+    // not yet emitted, retries whose backoff has passed
+    val open = mutable.HashMap.empty[Long, Pending]
+    val done = mutable.HashMap.empty[Long, Called]
+    val due = mutable.Queue.empty[Pending]
+    var onWire = 0
+    var read = 0L
+    var emitted = 0L
+
+    def send(p: Pending): Unit = {
+      val (seq, attempt, r) = (p.seq, p.attempt, p.r)
+      p.call = pool.submit(new Runnable {
+        override def run(): Unit = signals.put(Answered(seq, attempt,
+          try Success(client.chat(buildMessages(r, cfg.useImages), cfg))
+          catch { case e: Throwable => Failure(e) }))
+      })
+      onWire += 1
+    }
+    def finish(p: Pending, response: Option[String], error: Option[String]): Unit = {
+      open.remove(p.seq)
+      done(p.seq) = Called(p.r.id, p.r.texts, p.r.images, response,
         // reference error contract: "API request failed: …" to stderr,
         // record dropped, job continues (rb:178, spec/bin_job_spec.rb:117-137)
-        Called(r.id, r.texts, r.images, None,
-          Some(s"API request failed: ${e.getMessage}"), r.cacheKey)
+        error.map(e => s"API request failed: $e"), p.r.cacheKey)
+    }
+    def handle(s: Signal): Unit = open.get(s.seq).filter(_.attempt == s.attempt) match {
+      case None => // the wait bound already dead-lettered this record
+      case Some(p) => s match {
+        case RetryDue(_, _) => due.enqueue(p)
+        case Answered(_, _, answer) =>
+          onWire -= 1
+          p.call = null
+          answer match {
+            case Success(text) => finish(p, Some(text), None)
+            case Failure(e) if p.attempt < opts.maxRetries && retryable(e) =>
+              val wait = backoffMs(p.attempt) // exp backoff, off the slot
+              p.attempt += 1
+              val retry = RetryDue(p.seq, p.attempt)
+              timer.schedule(new Runnable { override def run(): Unit = signals.put(retry) },
+                wait, TimeUnit.MILLISECONDS)
+            case Failure(e) => finish(p, None, Some(e.getMessage))
+          }
       }
     }
+    def expire(): Unit = {
+      val now = System.nanoTime()
+      open.values.filter(p => now - p.deadlineNs >= 0).toList.foreach { p =>
+        if (p.call != null) { p.call.cancel(true); onWire -= 1 }
+        finish(p, None, Some(s"no answer within $boundMs ms"))
+      }
+    }
+    def refill(): Unit = {
+      while (onWire < slots && due.nonEmpty) {
+        val p = due.dequeue()
+        if (open.get(p.seq).contains(p)) send(p)
+      }
+      while (onWire < slots && read - emitted < slots.toLong * ReorderCap && it.hasNext) {
+        val p = new Pending(read, it.next())
+        open(p.seq) = p
+        read += 1
+        send(p)
+      }
+    }
+    /** handle the signals that arrive within `waitNs`, then refill */
+    def pump(waitNs: Long): Unit = {
+      var s = if (waitNs > 0) signals.poll(waitNs, TimeUnit.NANOSECONDS) else signals.poll()
+      while (s != null) { handle(s); s = signals.poll() }
+      expire()
+      refill()
+    }
 
-    val source = it.map(r => Future(callOne(r))) // lazy — forced by enqueue
-    val inflight = mutable.Queue.empty[Future[Called]]
     new Iterator[Called] {
-      private def fill(): Unit =
-        while (inflight.size < math.max(1, opts.concurrency) && source.hasNext)
-          inflight.enqueue(source.next())
       override def hasNext: Boolean = {
-        fill()
-        val more = inflight.nonEmpty
-        if (!more) pool.shutdown()
+        if (emitted == read) refill()
+        val more = emitted < read
+        if (!more) stop()
         more
       }
       override def next(): Called = {
-        fill()
-        Await.result(inflight.dequeue(), Duration.Inf)
+        if (!hasNext) throw new NoSuchElementException("callPartition")
+        pump(0)
+        // the head is the earliest-read open record, so its deadline
+        // is the next one due
+        while (!done.contains(emitted)) pump(open(emitted).deadlineNs - System.nanoTime())
+        val row = done.remove(emitted).get
+        emitted += 1
+        row
       }
     }
   }
 
-  /** Retries, with exponential backoff, only what can succeed on a
-    * retry: transport errors, timeouts, 5xx, 408, 429 and malformed
-    * bodies. Any other 4xx is the same answer on every attempt, and a
-    * fatal throwable (including the InterruptedException the task-end
-    * `shutdownNow` delivers) is not a backend failure, so both are
-    * rethrown at once instead of paying for more calls.
+  /** Retry only what can succeed on a retry: transport errors,
+    * timeouts, 5xx, 408, 429 and malformed bodies. Any other 4xx is the
+    * same answer on every attempt, and a fatal throwable (including the
+    * InterruptedException the task-end `shutdownNow` delivers) is not a
+    * backend failure, so both end the record at once instead of paying
+    * for more calls.
     */
-  private def withRetry[A](opts: EnrichOptions)(f: => A): A = {
-    def retryable(e: Throwable): Boolean = e match {
-      case h: HttpStatusException => h.status / 100 != 4 || h.status == 408 || h.status == 429
-      case _ => true
-    }
-    var attempt = 0
-    while (true) {
-      try return f
-      catch {
-        case NonFatal(e) if attempt < opts.maxRetries && retryable(e) =>
-          Thread.sleep(opts.retryBackoffMs * (1L << attempt)) // exp backoff
-          attempt += 1
-      }
-    }
-    sys.error("unreachable")
+  private def retryable(e: Throwable): Boolean = e match {
+    case h: HttpStatusException => h.status / 100 != 4 || h.status == 408 || h.status == 429
+    case NonFatal(_) => true
+    case _ => false
   }
 
   /** system message only when the rendered prompt is non-blank

@@ -47,6 +47,28 @@ class MainSpec extends SparkSpec {
     assert(lines.forall(_.contains(""""summary":"FAKE[""")))
   }
 
+  test("stdout mode lists a multi-partition input's ids in input order") {
+    spark // ensure the shared session exists so Main reuses it
+    val d = setup()
+    val ids = (1 to 200).map(i => f"r$i%03d")
+    val in = ids.map(i => s"""{"id": "$i", "texts": {"content": "c$i"}}""")
+      .mkString("", "\n", "\n")
+    val oldIn = System.in
+    val oldOut = System.out
+    val bout = new java.io.ByteArrayOutputStream()
+    val code =
+      try {
+        System.setIn(new java.io.ByteArrayInputStream(in.getBytes("UTF-8")))
+        System.setOut(new java.io.PrintStream(bout, true, "UTF-8"))
+        Main.run(Array(d.resolve("job.yml").toString, "--fake"))
+      } finally { System.setIn(oldIn); System.setOut(oldOut) }
+    assert(code == 0)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val got = bout.toString("UTF-8").split("\n").filter(_.nonEmpty)
+      .map(l => mapper.readTree(l).path("id").asText()).toSeq
+    assert(got == ids)
+  }
+
   test("missing YAML file → exit 1") {
     assert(Main.run(Array("/nope/job.yml", "--in", "x", "--out", "y")) == 1)
   }

@@ -21,10 +21,23 @@ object EnrichJobSpec {
 
   /** static prompt log for the ValidateRepair frugality proof */
   val promptLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** call start times by "<prompt>#<attempt>", for the window specs */
+  val started = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** holds the slow-head spec's first call until released */
+  @volatile var gate = new java.util.concurrent.CountDownLatch(1)
+
+  /** records each call's start under "<prompt>#<attempt>" */
+  def start(prompt: String): Unit = {
+    var n = 1
+    while (started.putIfAbsent(s"$prompt#$n", System.nanoTime()) != null) n += 1
+  }
 }
 
-class EnrichJobSpec extends SparkSpec {
+class EnrichJobSpec extends SparkSpec with org.scalatest.concurrent.TimeLimits {
   import spark.implicits._
+  import org.scalatest.time.SpanSugar._
 
   private def jobDir(): Path = {
     val d = Files.createTempDirectory("graft-enrich")
@@ -347,6 +360,93 @@ class EnrichJobSpec extends SparkSpec {
     EnrichJobSpec.calls.set(0)
     EnrichJob.run(one, cfg(), answering(503), opts).deadLetter.count()
     assert(EnrichJobSpec.calls.get() == opts.maxRetries + 1)
+  }
+
+  /** `n` records with prompt "<id>" in one partition, in id order */
+  private def numbered(n: Int) = (1 to n)
+    .map(i => (i.toString, Map("content" -> s"c$i"), Seq.empty[String]))
+    .toDF("id", "texts", "images").coalesce(1)
+
+  private val idPrompt = JobConfig(
+    id = "window", erbTemplate = "<%= id %>",
+    backendEndpoint = "http://fake", model = "m", outputLabel = "summary",
+    systemErbTemplate = None, params = Map.empty, useImages = false,
+    responseFormat = None)
+
+  test("a slow head does not stall the calls behind it; rows keep input order") {
+    EnrichJobSpec.started.clear()
+    EnrichJobSpec.gate = new java.util.concurrent.CountDownLatch(1)
+    val slowHead = new graft.llm.LlmClient {
+      override def chat(ms: Seq[graft.llm.Msg], c: JobConfig): String = {
+        val id = ms.last.text
+        EnrichJobSpec.start(id)
+        if (id == "1") EnrichJobSpec.gate.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        s"A$id"
+      }
+    }
+    val run = scala.concurrent.Future(
+      EnrichJob.run(numbered(20), idPrompt, slowHead, EnrichOptions(concurrency = 2))
+        .good.select("id").as[String].collect().toSeq)(scala.concurrent.ExecutionContext.global)
+    val until = System.nanoTime() + 20L * 1000 * 1000 * 1000
+    while (EnrichJobSpec.started.size < 20 && System.nanoTime() < until) Thread.sleep(10)
+    val releasedNs = System.nanoTime()
+    EnrichJobSpec.gate.countDown()
+    val ids = scala.concurrent.Await.result(run, scala.concurrent.duration.Duration(60, "s"))
+    val startedBefore = (2 to 20).filter(i =>
+      Option(EnrichJobSpec.started.get(s"$i#1")).exists(_ < releasedNs))
+    assert(startedBefore == (2 to 20),
+      s"calls started while the head was held: ${startedBefore.size} of 19")
+    assert(ids == (1 to 20).map(_.toString))
+  }
+
+  test("a retry's backoff holds no slot") {
+    EnrichJobSpec.started.clear()
+    val once503 = new graft.llm.LlmClient {
+      override def chat(ms: Seq[graft.llm.Msg], c: JobConfig): String = {
+        val id = ms.last.text
+        EnrichJobSpec.start(id)
+        if (id == "1" && !EnrichJobSpec.started.containsKey("1#2"))
+          throw new graft.llm.HttpStatusException(503, "HTTP 503: busy")
+        s"A$id"
+      }
+    }
+    val r = EnrichJob.run(numbered(2), idPrompt, once503,
+      EnrichOptions(concurrency = 1, maxRetries = 2, retryBackoffMs = 400))
+    assert(r.good.select("id").as[String].collect().toSeq == Seq("1", "2"))
+    val second = EnrichJobSpec.started.get("2#1")
+    val retry = EnrichJobSpec.started.get("1#2")
+    assert(second != null && retry != null)
+    assert(second < retry, "record 2 waited for record 1's backoff")
+    assert(!EnrichJobSpec.started.containsKey("1#3"))
+  }
+
+  test("a hung backend ends in the dead letters within the wait bound") {
+    val hung = new graft.llm.LlmClient {
+      override def chat(ms: Seq[graft.llm.Msg], c: JobConfig): String = {
+        new java.util.concurrent.CountDownLatch(1).await() // until interrupted
+        "never"
+      }
+    }
+    val opts = EnrichOptions(maxRetries = 1, retryBackoffMs = 100)
+    // requestTimeoutSec × (maxRetries + 1) + total backoff
+    val boundMs = 1000L * 2 + 100
+    val sc = spark.sparkContext
+    sc.setJobGroup("hung-backend", "hung backend", interruptOnCancel = true)
+    try {
+      implicit val signaler: org.scalatest.concurrent.Signaler =
+        org.scalatest.concurrent.ThreadSignaler
+      failAfter(60.seconds) {
+        val t0 = System.nanoTime()
+        val dead = EnrichJob.run(numbered(1), idPrompt.copy(requestTimeoutSec = 1), hung, opts)
+          .deadLetter.select("id", "error").as[(String, String)].collect().toSeq
+        val tookMs = (System.nanoTime() - t0) / 1000000
+        assert(dead == Seq(("1", s"API request failed: no answer within $boundMs ms")))
+        assert(tookMs >= boundMs && tookMs < boundMs + 20000, s"took $tookMs ms")
+      }
+    } finally {
+      sc.cancelJobGroup("hung-backend")
+      sc.clearJobGroup()
+    }
   }
 
   test("reference repo's own example input runs end-to-end (README.md:35 scenario)") {
