@@ -29,12 +29,19 @@ object CdcApply {
     require(missing.isEmpty,
       s"changelog is missing columns ${missing.mkString(",")} " +
         s"(has: ${changelog.columns.mkString(",")})")
-    require(!changelog.columns.contains("__rn"),
-      "__rn is reserved by CdcApply")
+    lastPerKey(changelog, keys, seqCol)
+      .filter(col(opCol) =!= "D")
+      .drop(seqCol, opCol)
+  }
+
+  /** Each key's row with the highest `seqCol` (the rank-1 window
+    * above); also SnapshotSink's per-batch compaction.
+    */
+  def lastPerKey(changes: DataFrame, keys: Seq[String], seqCol: String): DataFrame = {
+    require(!changes.columns.contains("__rn"), "__rn is reserved by CdcApply")
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(seqCol).desc)
-    changelog
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col(opCol) =!= "D")
-      .drop("__rn", seqCol, opCol)
+    changes.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .drop("__rn")
   }
 }

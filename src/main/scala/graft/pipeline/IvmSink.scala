@@ -23,7 +23,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * `(asGroup, n BIGINT, total BIGINT)`:
   *
   *   viewDir/
-  *     part-*.parquet   — the base aggregate (and later, compacted partials)
+  *     part-*.parquet   — the base aggregate (later also compacted and
+  *                        batch-anonymous partials)
   *     b<runId>-<id>/   — one |groups|-row partial per committed micro-batch
   *
   * Per micro-batch (foreachBatch): collapse the batch's contribution
@@ -31,10 +32,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * batch's own run-namespaced subdir. A batch never reads prior state,
   * so at-least-once redelivery just rewrites the identical partial
   * (the batch partial is a pure function of the batch), and a crash
-  * mid-write is healed by the replay's overwrite. Run-namespacing is
-  * [[IncrementalDedup]]'s: micro-batch ids restart at 0 on checkpoint
-  * reset, and without the namespace a fresh run's b0 would clobber a
-  * prior run's committed b0.
+  * mid-write is healed by the replay's overwrite. The subdir names,
+  * their run namespace and the stream wiring are [[BatchDirs]]'. The
+  * view was born namespaced, so it has no older subdir naming to guard
+  * against.
   *
   * Serving ([[readView]]) folds base ∪ partials — after N batches that
   * is N×|groups| rows, so the fold is O(view), not O(base), and
@@ -82,22 +83,17 @@ object IvmSink {
       oldGroup: String, oldValue: String,
       asGroup: String,
       viewDir: String,
-      checkpointDir: String): DataStreamWriter[Row] = {
-    val spark = stream.sparkSession
-    lazy val runId = IncrementalDedup.checkpointQueryId(spark, checkpointDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, group, value, oldGroup, oldValue, asGroup,
-          viewDir, runId = runId, batchId = id)
-        ()
-      }
-  }
+      checkpointDir: String): DataStreamWriter[Row] =
+    BatchDirs.foreachBatch(stream, checkpointDir) { (batch, b) =>
+      applyBatch(batch, group, value, oldGroup, oldValue, asGroup,
+        viewDir, runId = b.runId, batchId = Some(b.id))
+    }
 
   /** One batch's fold step; also the batch-mode backfill entry.
     * Idempotent under redelivery of the same (runId, batchId): the
     * partial is a pure function of the batch and OVERWRITEs its own
-    * subdir.
+    * subdir. A call without `batchId` appends its partial to the flat
+    * layer, so anonymous backfill calls all stay counted.
     */
   def applyBatch(
       batch: DataFrame,
@@ -106,7 +102,7 @@ object IvmSink {
       asGroup: String,
       viewDir: String,
       runId: String = "",
-      batchId: Long = 0L): Unit = {
+      batchId: Option[Long] = None): Unit = {
     val contribs = batch.filter(col(group).isNotNull)
       .select(col(group).as(asGroup), lit(1L).as("n"),
         col(value).cast("long").as("total"))
@@ -115,10 +111,7 @@ object IvmSink {
           (-col(oldValue)).cast("long").as("total")))
     val partial = contribs.groupBy(col(asGroup))
       .agg(sum(col("n")).as("n"), sum(col("total")).as("total"))
-    val sub = if (runId.isEmpty) s"b$batchId" else s"b$runId-$batchId"
-    // the subdir write would recreate a view a crashed compact moved aside
-    DirSwap.recover(batch.sparkSession, viewDir)
-    partial.write.mode("overwrite").parquet(s"$viewDir/$sub")
+    BatchDirs.write(partial, viewDir, batchId.map(BatchDirs.subdir(runId, _)))
   }
 
   /** The maintained view: fold the flat base layer and every committed

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -49,12 +48,11 @@ object SnapshotSink {
       checkpointDir: String,
       partitionCol: Option[String] = None): DataStreamWriter[Row] = {
     require(keys.nonEmpty, "snapshot sink needs at least one key column")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch, keys, seqCol, opCol, snapshotDir, partitionCol)
-        ()
-      }
+    // the merge is idempotent, so the sink names no batch subdirs and
+    // never reads the run id
+    BatchDirs.foreachBatch(stream, checkpointDir) { (batch, _) =>
+      applyBatch(batch, keys, seqCol, opCol, snapshotDir, partitionCol)
+    }
   }
 
   /** one merge step; also the batch-mode backfill entry */
@@ -65,13 +63,8 @@ object SnapshotSink {
       opCol: Option[String],
       snapshotDir: String,
       partitionCol: Option[String] = None): Unit = {
-    require(!batch.columns.contains("__rn"),
-      "__rn is reserved by SnapshotSink")
     val spark = batch.sparkSession
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(seqCol).desc)
-    val last = batch.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+    val last = graft.operators.CdcApply.lastPerKey(batch, keys, seqCol)
     val upserts = opCol.fold(last.drop(seqCol)) { oc =>
       last.filter(col(oc) =!= "D").drop(seqCol, oc)
     }

@@ -2857,7 +2857,7 @@ object Analytics extends Catalog {
         def apply(b: DataFrame, id: Long): Unit =
           graft.pipeline.IvmSink.applyBatch(b, "nst", "ncents",
             "ost", "ocents", "o_orderstatus", viewDir,
-            runId = "q188", batchId = id)
+            runId = "q188", batchId = Some(id))
         apply(b0, 0L); apply(b0, 0L) // at-least-once redelivery: no-op
         apply(b1, 1L)
         graft.pipeline.IvmSink.compact(s, viewDir)

@@ -21,6 +21,45 @@ object Dedup extends Catalog {
   /** whitespace tokens, lowered */
   private val words: Column = split(lower(col("text")), " ")
 
+  /** The xxhash64 of every `n`-word gram POSITION of each doc with at
+    * least `n` words, as (doc_id, g): q117's positions (repeats inside
+    * a doc count), or with `distinct` each doc's distinct grams (q157).
+    * Also the kernel of IncrementalDedup's span and novelty services.
+    */
+  private[graft] def gramPositions(
+      docs: DataFrame, n: Int, distinct: Boolean = false): DataFrame = {
+    val grams = transform(sequence(lit(1), size(col("ws")) - (n - 1)),
+      i => xxhash64(array_join(slice(col("ws"), i, lit(n)), " ")))
+    docs.select(col("doc_id"), words.as("ws"))
+      .filter(size(col("ws")) >= n)
+      .select(col("doc_id"),
+        explode(if (distinct) array_distinct(grams) else grams).as("g"))
+  }
+
+  /** q117's per-doc coverage of `docs`: (doc_id, n_pos, n_dup,
+    * dup_ppm), where a position of `pos` is duplicated when its gram's
+    * occurrence count in `counts` (g, cnt) is at least 2. The ppm is an
+    * exact integer, so the incremental service's output equals the
+    * one-shot q117 bit for bit.
+    */
+  private[graft] def gramCoverage(
+      docs: DataFrame, pos: DataFrame, counts: DataFrame): DataFrame = {
+    // build from the aggregated side: without the hint Catalyst's
+    // Generate-output estimate can elect to broadcast the POSITION
+    // frame (corpus-token-sized) — legal at test SF, lethal at 100 TB
+    val per = pos.join(counts.hint("shuffle_hash"), "g")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("np"),
+        sum(when(col("cnt") >= 2, 1L).otherwise(0L)).as("nd"))
+    docs.select(col("doc_id")).join(per, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("np"), lit(0L)).as("n_pos"),
+        coalesce(col("nd"), lit(0L)).as("n_dup"),
+        when(col("np") > 0,
+          expr("nd * CAST(1000000 AS BIGINT) DIV np"))
+          .as("dup_ppm"))
+  }
+
   /** distinct 3-word-shingle HASHES (8 bytes each), one native scan —
     * graft.functions.ShingleHashes, hash-identical to
     * xxhash64(array_join(slice(split(lower(text)," "),i,3)," ")); empty
@@ -1522,29 +1561,9 @@ object Dedup extends Catalog {
     // DuckDB build. Integer division has no tie set at all.
     "q117_dup_ngram_coverage" -> Q(
       fn = (s, d) => {
-        val N = 5
         val base = Tables.documents(s, d)
-        val pos = base
-          .select(col("doc_id"), words.as("ws"))
-          .filter(size(col("ws")) >= N)
-          .select(col("doc_id"),
-            explode(transform(sequence(lit(1), size(col("ws")) - (N - 1)),
-              i => xxhash64(array_join(slice(col("ws"), i, lit(N)), " ")))).as("g"))
-        val occ = pos.groupBy(col("g")).agg(count(lit(1)).as("occ"))
-        // build from the aggregated side: without the hint Catalyst's
-        // Generate-output estimate can elect to broadcast the POSITION
-        // frame (corpus-token-sized) — legal at test SF, lethal at 100 TB
-        val per = pos.join(occ.hint("shuffle_hash"), "g")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("np"),
-            sum(when(col("occ") >= 2, 1L).otherwise(0L)).as("nd"))
-        base.select(col("doc_id")).join(per, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("np"), lit(0L)).as("n_pos"),
-            coalesce(col("nd"), lit(0L)).as("n_dup"),
-            when(col("np") > 0,
-              expr("nd * CAST(1000000 AS BIGINT) DIV np"))
-              .as("dup_ppm"))
+        val pos = gramPositions(base, 5)
+        gramCoverage(base, pos, pos.groupBy(col("g")).agg(count(lit(1)).as("cnt")))
       },
       sql = Some("""
         WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws

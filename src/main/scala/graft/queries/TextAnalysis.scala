@@ -18,6 +18,28 @@ object TextAnalysis extends Catalog {
 
   private val words: Column = split(lower(col("text")), " ")
 
+  /** q157's per-doc novelty of `docs`: (doc_id, n_grams, n_novel,
+    * novelty_ppm), where a distinct gram of `pos` is novel in the doc
+    * whose id is its first occurrence in `firsts` (g, fd). Also the
+    * emitter of IncrementalDedup's novelty service.
+    */
+  private[graft] def gramNovelty(
+      docs: DataFrame, pos: DataFrame, firsts: DataFrame): DataFrame = {
+    // q117's build-side stance: the aggregated first-occurrence
+    // index is the build side, never the corpus-sized gram frame
+    val per = pos.join(firsts.hint("shuffle_hash"), "g")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("np"),
+        sum(when(col("fd") === col("doc_id"), 1L).otherwise(0L)).as("nn"))
+    docs.select(col("doc_id")).join(per, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("np"), lit(0L)).as("n_grams"),
+        coalesce(col("nn"), lit(0L)).as("n_novel"),
+        when(col("np") > 0,
+          expr("nn * CAST(1000000 AS BIGINT) DIV np"))
+          .as("novelty_ppm"))
+  }
+
   /** tiny per-language stopword lists (shared with the oracle SQL) */
   private val stop: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "a", "of", "and", "to", "is"),
@@ -1007,30 +1029,9 @@ object TextAnalysis extends Catalog {
     // integer emission throughout (counts + novelty ppm).
     "q157_ngram_novelty" -> Q(
       fn = (s, d) => {
-        val n = 5
         val base = Tables.documents(s, d)
-        val pos = base
-          .select(col("doc_id"), words.as("ws"))
-          .filter(size(col("ws")) >= n)
-          .select(col("doc_id"),
-            explode(array_distinct(
-              transform(sequence(lit(1), size(col("ws")) - (n - 1)),
-                i => xxhash64(array_join(slice(col("ws"), i, lit(n)), " ")))))
-              .as("g"))
-        val first = pos.groupBy(col("g")).agg(min(col("doc_id")).as("fd"))
-        // q117's build-side stance: the aggregated first-occurrence
-        // index is the build side, never the corpus-sized gram frame
-        val per = pos.join(first.hint("shuffle_hash"), "g")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("np"),
-            sum(when(col("fd") === col("doc_id"), 1L).otherwise(0L)).as("nn"))
-        base.select(col("doc_id")).join(per, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("np"), lit(0L)).as("n_grams"),
-            coalesce(col("nn"), lit(0L)).as("n_novel"),
-            when(col("np") > 0,
-              expr("nn * CAST(1000000 AS BIGINT) DIV np"))
-              .as("novelty_ppm"))
+        val pos = Dedup.gramPositions(base, 5, distinct = true)
+        gramNovelty(base, pos, pos.groupBy(col("g")).agg(min(col("doc_id")).as("fd")))
       },
       sql = Some("""
         WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws

@@ -76,4 +76,22 @@ class EntryContractSpec extends SparkSpec {
     assert(hits.isEmpty,
       s"${hits.size} directory renames outside DirSwap:\n${hits.mkString("\n")}")
   }
+
+  test("BatchDirs is the only pipeline code that wires a checkpoint or names a batch subdir") {
+    import scala.jdk.CollectionConverters._
+    // split so that a grep of src/ for either spelling does not hit this spec
+    val spellings = Seq("\"checkpoint" + "Location\"", "s\"b" + "$")
+    val root = java.nio.file.Paths.get("src/main/scala/graft/pipeline")
+    val walk = java.nio.file.Files.walk(root)
+    val hits =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(_ != root.resolve("BatchDirs.scala"))
+        .flatMap { p =>
+          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+            .collect { case (l, i) if spellings.exists(l.contains) => s"$p:${i + 1}" }
+        }.toSeq.sorted
+      finally walk.close()
+    assert(hits.isEmpty,
+      s"${hits.size} micro-batch wirings outside BatchDirs:\n${hits.mkString("\n")}")
+  }
 }

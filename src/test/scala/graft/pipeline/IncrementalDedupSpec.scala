@@ -235,6 +235,51 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(e.getMessage.contains("legacy"), e.getMessage)
   }
 
+  test("an un-namespaced index subdir (b<id>) fails fast under a run id") {
+    // a stream that ran before the run namespace and crashed mid-batch
+    // left postings/b0: a crashed attempt at this batch or a committed
+    // batch of an earlier run, which the name cannot tell apart
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select(col("doc_id"), col("text")).limit(50)
+    val idx = Files.createTempDirectory("graft-legacy-idx").toString
+    Files.createDirectories(java.nio.file.Paths.get(idx, "postings", "b0"))
+    val e = intercept[RuntimeException] {
+      IncrementalDedup.dedupBatch(docs, idx, batchId = Some(0L), runId = "run1")
+    }
+    assert(e.getMessage.contains("legacy"), e.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(idx, "sizes")),
+      "the guard must run before the batch extends the index")
+  }
+
+  test("a legacy output subdir (pairsDir/b0) fails a namespaced stream in its first batch") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select(col("doc_id"), col("text"))
+      .as[(Long, String)].collect().sortBy(_._1).take(50)
+
+    val idx = Files.createTempDirectory("graft-legacy-out-idx").toString
+    val pairsDir = Files.createTempDirectory("graft-legacy-out").toString + "/pairs"
+    Files.createDirectories(java.nio.file.Paths.get(pairsDir, "b0"))
+    val ckpt = Files.createTempDirectory("graft-legacy-out-ckpt").toString
+    Files.write(java.nio.file.Paths.get(ckpt, "metadata"),
+      """{"id":"aaaaaaaa-0000-4000-8000-000000000003"}""".getBytes("UTF-8"))
+
+    val ms = MemoryStream[(Long, String)]
+    val q = IncrementalDedup.streamingDedup(
+      ms.toDF().toDF("doc_id", "text"), idx, pairsDir, ckpt).start()
+    val e = try {
+      ms.addData(docs)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("legacy"))), e.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(idx, "postings")),
+      "the first batch must fail before it extends the index")
+  }
+
   test("two-batch incremental dedup equals the one-shot near-dup pairs") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select(col("doc_id"), col("text"))

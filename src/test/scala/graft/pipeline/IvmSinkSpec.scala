@@ -102,11 +102,21 @@ class IvmSinkSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$viewDir/brun-1")
 
     IvmSink.applyBatch(b1, "nst", "ncents", "ost", "ocents", "st",
-      viewDir, runId = "run", batchId = 0L)
+      viewDir, runId = "run", batchId = Some(0L))
     IvmSink.applyBatch(b1, "nst", "ncents", "ost", "ocents", "st",
-      viewDir, runId = "run", batchId = 0L) // at-least-once redelivery
+      viewDir, runId = "run", batchId = Some(0L)) // at-least-once redelivery
     IvmSink.applyBatch(b2, "nst", "ncents", "ost", "ocents", "st",
-      viewDir, runId = "run", batchId = 1L) // heals the torn subdir
+      viewDir, runId = "run", batchId = Some(1L)) // heals the torn subdir
+    assert(viewSet(viewDir) == finalRows.toSet)
+  }
+
+  test("batch-anonymous backfill calls append: readView counts every one") {
+    val viewDir = Files.createTempDirectory("graft-ivm7").toString + "/view"
+    IvmSink.initBase(baseAgg, viewDir)
+    IvmSink.applyBatch(feedDf.filter(col("ncents") <= 250),
+      "nst", "ncents", "ost", "ocents", "st", viewDir)
+    IvmSink.applyBatch(feedDf.filter(col("ncents") > 250),
+      "nst", "ncents", "ost", "ocents", "st", viewDir)
     assert(viewSet(viewDir) == finalRows.toSet)
   }
 
@@ -116,11 +126,11 @@ class IvmSinkSpec extends SparkSpec {
     val b1 = feedDf.filter(col("ncents") <= 250)
     val b2 = feedDf.filter(col("ncents") > 250)
     IvmSink.applyBatch(b1, "nst", "ncents", "ost", "ocents", "st",
-      viewDir, runId = "runA", batchId = 0L)
+      viewDir, runId = "runA", batchId = Some(0L))
     // checkpoint reset: the NEXT run's ids restart at 0 — its b0 must
     // not clobber runA's committed b0
     IvmSink.applyBatch(b2, "nst", "ncents", "ost", "ocents", "st",
-      viewDir, runId = "runB", batchId = 0L)
+      viewDir, runId = "runB", batchId = Some(0L))
     assert(viewSet(viewDir) == finalRows.toSet)
   }
 
@@ -129,7 +139,7 @@ class IvmSinkSpec extends SparkSpec {
     IvmSink.initBase(baseAgg, viewDir)
     feedRows.zipWithIndex.foreach { case (r, i) =>
       IvmSink.applyBatch(Seq(r).toDF("nst", "ncents", "ost", "ocents"),
-        "nst", "ncents", "ost", "ocents", "st", viewDir, runId = "r", batchId = i.toLong)
+        "nst", "ncents", "ost", "ocents", "st", viewDir, runId = "r", batchId = Some(i.toLong))
     }
     val before = viewSet(viewDir)
     IvmSink.compact(spark, viewDir)
@@ -143,7 +153,7 @@ class IvmSinkSpec extends SparkSpec {
     IvmSink.applyBatch(
       Seq((null.asInstanceOf[String], 0L, "F", 150L))
         .toDF("nst", "ncents", "ost", "ocents"),
-      "nst", "ncents", "ost", "ocents", "st", viewDir, runId = "r2", batchId = 0L)
+      "nst", "ncents", "ost", "ocents", "st", viewDir, runId = "r2", batchId = Some(0L))
     assert(viewSet(viewDir) == finalRows.toSet.filterNot(_._1 == "F"))
   }
 
@@ -153,13 +163,13 @@ class IvmSinkSpec extends SparkSpec {
     val b1 = feedDf.filter(col("ncents") <= 250)
     val b2 = feedDf.filter(col("ncents") > 250)
     IvmSink.applyBatch(b1, "nst", "ncents", "ost", "ocents", "st",
-      viewDir, runId = "r", batchId = 0L)
+      viewDir, runId = "r", batchId = Some(0L))
     // simulate dying between DirSwap's two renames inside compact: the
     // view dir is gone, base and partials sit at _compact_old
     Files.move(java.nio.file.Paths.get(viewDir),
       java.nio.file.Paths.get(viewDir + "_compact_old"))
     IvmSink.applyBatch(b2, "nst", "ncents", "ost", "ocents", "st",
-      viewDir, runId = "r", batchId = 1L)
+      viewDir, runId = "r", batchId = Some(1L))
     assert(viewSet(viewDir) == finalRows.toSet,
       "the next batch must restore the view, not start a new one")
     IvmSink.compact(spark, viewDir)
