@@ -23,7 +23,10 @@ import graft.template.Template
   * input is split into about `defaultParallelism` partitions, so it
   * grows with the cores. Finished answers wait for the slower ones
   * before them in a reorder buffer of at most 16 × `concurrency`
-  * records. A retry waits out its backoff (`retryBackoffMs × 2^attempt`)
+  * records. In [[EnrichJob.runCached]] a record whose request repeats
+  * one the partition has open, or one of its last 16 × `concurrency`
+  * finished ones, takes that request's outcome instead of calling.
+  * A retry waits out its backoff (`retryBackoffMs × 2^attempt`)
   * on a scheduler, holding no slot. A record with no answer
   * `requestTimeoutSec × (maxRetries + 1)` plus its total backoff after
   * its first call is dead-lettered.
@@ -43,9 +46,12 @@ final case class EnrichOptions(
   *   prompt render     — Catalyst concat/element_at (Template.column)
   *   LLM invoke        — mapPartitions, pooled client per partition,
   *                       `concurrency` requests in flight, rows in
-  *                       input order (callPartition)
+  *                       input order (callPartition); with cache keys
+  *                       (runCached) one request per distinct key in
+  *                       the request window, and a cached answer
+  *                       takes no slot
   *   checkpoint        — localCheckpoint(eager = false) of the called
-  *                       rows: each record is called exactly once, at
+  *                       rows: each record is called at most once, at
   *                       the first action, whichever frame it runs on
   *   <think> strip     — regexp_replace + trim (codegen)
   *   label append      — map_filter + map_concat (codegen; overwrite
@@ -55,14 +61,16 @@ final case class EnrichOptions(
   */
 /** internal row shapes for the typed mapPartitions stage — must be
   * top-level (non-private) so Catalyst's generated encoder code can
-  * construct them
+  * construct them. `cacheKey` is empty and `cached` is None outside
+  * runCached; `fresh` marks a row answered by its own call, the rows
+  * runCached appends to its cache.
   */
 final case class Prompted(
     id: String, texts: Map[String, String], images: Seq[String],
-    prompt: String, sys: Option[String], cacheKey: String)
+    prompt: String, sys: Option[String], cacheKey: String, cached: Option[String])
 final case class Called(
     id: String, texts: Map[String, String], images: Seq[String],
-    response: Option[String], error: Option[String], cacheKey: String)
+    response: Option[String], error: Option[String], cacheKey: String, fresh: Boolean)
 
 object EnrichJob {
 
@@ -88,22 +96,34 @@ object EnrichJob {
       "(?s)\\A[\\s\\u0000]+|[\\s\\u0000]+\\z", "")
 
   /** `good` and `deadLetter` read the same rows of [[calledFrame]]: the
-    * backend is called once per record, whatever the caller consumes. */
+    * backend is called once per record, whatever the caller consumes.
+    * Records carry no cache key, so identical prompts are still one
+    * call each (an LLM answer is a sample, as in the reference). */
   def run(
       records: DataFrame,
       cfg: JobConfig,
       client: LlmClient,
       opts: EnrichOptions = EnrichOptions()): Result =
-    assemble(calledFrame(promptedFrame(records, cfg), cfg, client, opts), cfg)
+    assemble(calledFrame(promptedFrame(records, cfg).withColumns(Map(
+      "cacheKey" -> lit(""), "cached" -> lit(null).cast("string"))), cfg, client, opts), cfg)
 
   /** Cached variant for at-least-once environments (SURVEY.md §7.4):
     * responses are keyed by an idempotency hash of the full request
     * content and persisted under `cacheDir`. Re-running the same job
     * (task retry, failed-run restart, incremental corpus growth) calls
-    * the backend only for prompts never answered before. The cache is
-    * append-only parquet — safe to share across concurrent jobs at the
-    * granularity of duplicate work, never wrong results (duplicate
-    * keys resolve deterministically to one response).
+    * the backend only for prompts never answered before, and within a
+    * run only once per distinct request in each partition's request
+    * window (the open requests plus the last 16 × `concurrency` keys
+    * that finished): a repeated record takes that request's answer or
+    * dead-letter error. The cache is append-only parquet — safe to
+    * share across concurrent jobs at the granularity of duplicate
+    * work, never wrong results (duplicate keys resolve
+    * deterministically to one response).
+    *
+    * Each pass is one checkpointed stage over `records ⋈ cache`: the
+    * cache append and both outputs read the same called rows, so the
+    * cache is scanned once per run. The trade: the checkpoint holds
+    * the hit rows too, not only the called ones.
     */
   def runCached(
       records: DataFrame,
@@ -147,41 +167,30 @@ object EnrichJob {
                 coalesce(length(x).cast("string"), lit("-")),
                 coalesce(x, lit("")))))))))
       else md5(textKey)
+    val cache = readCache(spark, cacheDir).groupBy("cacheKey")
+      .agg(min("response").as("cached"))
     val prompted = promptedFrame(records, cfg).withColumn("cacheKey", keyCol)
-
-    val cacheDeduped = readCache(spark, cacheDir).groupBy("cacheKey")
-      .agg(min("response").as("cached_response"))
-
-    val joined = prompted.join(cacheDeduped, Seq("cacheKey"), "left")
-    val hits = joined.filter(col("cached_response").isNotNull)
-    val misses = joined.filter(col("cached_response").isNull)
-      .drop("cached_response")
+      .join(cache, Seq("cacheKey"), "left")
 
     // the cache append below is the first action: it makes the calls,
-    // and the output union reads the same checkpointed rows
-    val missCalled = calledFrame(misses, cfg, client, opts)
-
-    missCalled.filter(col("error").isNull)
+    // and both outputs read the same checkpointed rows
+    val called = calledFrame(prompted, cfg, client, opts)
+    called.filter(col("fresh"))
       .select(col("cacheKey"), col("response"))
       .withColumn("written_at", current_timestamp())
       .write.mode("append").parquet(cacheDir)
-
-    val hitCalled = hits.select(col("id"), col("texts"), col("images"),
-      col("cached_response").as("response"), lit(null).cast("string").as("error"))
-    assemble(
-      missCalled.select(col("id"), col("texts"), col("images"),
-        col("response"), col("error"))
-        .unionByName(hitCalled),
-      cfg)
+    assemble(called, cfg)
   }
 
-  /** Cache read tolerant of both schemas: pre-TTL files have no
-    * `written_at` column (mergeSchema unions them; a wholly-legacy
-    * cache gets a null column added). Only a missing dir, or one with
-    * no visible data files, reads as an empty cache. Any other read
-    * error (a corrupt or foreign file) propagates: read as empty, it
-    * would re-call the whole corpus on every run and keep appending
-    * into the broken dir.
+  private val CacheSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "cacheKey STRING, response STRING, written_at TIMESTAMP")
+
+  /** Cache read under its declared schema: a pre-TTL file has no
+    * `written_at` column and reads it as null. Only a missing dir, or
+    * one with no visible data files, reads as an empty cache. Any
+    * other read error (a corrupt or foreign file) propagates: read as
+    * empty, it would re-call the whole corpus on every run and keep
+    * appending into the broken dir.
     */
   private def readCache(
       spark: org.apache.spark.sql.SparkSession, cacheDir: String): DataFrame = {
@@ -191,16 +200,8 @@ object EnrichJob {
       val n = st.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     }
-    val raw =
-      if (hasData) spark.read.option("mergeSchema", "true").parquet(cacheDir)
-      else spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "cacheKey STRING, response STRING, written_at TIMESTAMP"))
-    val withTs =
-      if (raw.columns.contains("written_at")) raw
-      else raw.withColumn("written_at", lit(null).cast("timestamp"))
-    withTs.select(col("cacheKey"), col("response"), col("written_at"))
+    if (hasData) spark.read.schema(CacheSchema).parquet(cacheDir)
+    else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), CacheSchema)
   }
 
   /** Offline cache maintenance: collapse duplicate keys (concurrent
@@ -244,7 +245,8 @@ object EnrichJob {
     }
   }
 
-  /** prompt/sys render — Catalyst columns, shared by run/runCached */
+  /** prompt/sys render — Catalyst columns, shared by run/runCached;
+    * each adds its own `cacheKey` and `cached` columns */
   private def promptedFrame(records: DataFrame, cfg: JobConfig): DataFrame = {
     val userTpl = Template.compile(cfg.erbTemplate)
     val sysTpl = cfg.systemErbTemplate.map(Template.compile)
@@ -255,14 +257,15 @@ object EnrichJob {
       id.as("id"), texts.as("texts"), images.as("images"),
       userTpl.column(id, texts, images).as("prompt"),
       sysTpl.map(_.column(id, texts, images))
-        .getOrElse(lit(null).cast("string")).as("sys"),
-      lit("").as("cacheKey"))
+        .getOrElse(lit(null).cast("string")).as("sys"))
   }
 
   /** The one LLM stage, shared by run/runCached, checkpointed lazily:
     * the first action makes the calls (a partial one such as `limit`
     * still completes the stage) and later actions read the stored rows
-    * instead of paying again. Trade-off: checkpoint blocks are
+    * instead of paying again. The stages below an exchange
+    * (runCached's cache scan) finish before the first call.
+    * Trade-off: checkpoint blocks are
     * unreplicated executor-local state, so losing an executor fails
     * the job instead of re-calling — restart durability is what
     * [[runCached]]'s on-disk cache is for.
@@ -305,6 +308,11 @@ object EnrichJob {
     *    of new records.
     *  - Each answer, failure and due retry is a signal that wakes the
     *    task thread, which refills the window.
+    *  - A record with a `cached` answer finishes as it is read, taking
+    *    no slot. One with a non-empty `cacheKey` sends no request of
+    *    its own if that key's request is open (on the wire or waiting
+    *    out a retry) or among the last `ReorderCap × concurrency` keys
+    *    that finished: it takes that request's answer or error.
     *  - A record still unanswered `requestTimeoutSec × (maxRetries + 1)`
     *    plus its total backoff after its first call is dead-lettered and
     *    its call interrupted (the reference's fail-soft contract).
@@ -329,16 +337,25 @@ object EnrichJob {
     val boundMs = cfg.requestTimeoutSec * 1000L * (opts.maxRetries + 1) + backoffMs.sum
     val signals = new LinkedBlockingQueue[Signal]()
 
+    val window = slots.toLong * ReorderCap
+
+    /** one request: the record `seq` that sent it, then every record
+      * with the same key read while it was open */
     final class Pending(val seq: Long, val r: Prompted) {
       val deadlineNs: Long = System.nanoTime() + TimeUnit.MILLISECONDS.toNanos(boundMs)
       var attempt = 0
       var call: java.util.concurrent.Future[_] = null // set while on the wire
+      val takers = mutable.ArrayBuffer(seq -> r)
     }
-    // task-thread state: read records not yet finished, finished rows
-    // not yet emitted, retries whose backoff has passed
+    // task-thread state: read records not yet finished (each under the
+    // request whose outcome it takes), finished rows not yet emitted,
+    // retries whose backoff has passed, the open request per cache key
+    // and the outcomes of the last `window` keys that finished
     val open = mutable.HashMap.empty[Long, Pending]
     val done = mutable.HashMap.empty[Long, Called]
     val due = mutable.Queue.empty[Pending]
+    val byKey = mutable.HashMap.empty[String, Pending]
+    val recent = mutable.LinkedHashMap.empty[String, (Option[String], Option[String])]
     var onWire = 0
     var read = 0L
     var emitted = 0L
@@ -352,13 +369,39 @@ object EnrichJob {
       })
       onWire += 1
     }
-    def finish(p: Pending, response: Option[String], error: Option[String]): Unit = {
-      open.remove(p.seq)
-      done(p.seq) = Called(p.r.id, p.r.texts, p.r.images, response,
-        // reference error contract: "API request failed: …" to stderr,
-        // record dropped, job continues (rb:178, spec/bin_job_spec.rb:117-137)
-        error.map(e => s"API request failed: $e"), p.r.cacheKey)
+    def emit(seq: Long, r: Prompted, response: Option[String], error: Option[String],
+        fresh: Boolean): Unit =
+      done(seq) = Called(r.id, r.texts, r.images, response, error, r.cacheKey, fresh)
+    def finish(p: Pending, response: Option[String], failure: Option[String]): Unit = {
+      // reference error contract: "API request failed: …" to stderr,
+      // record dropped, job continues (rb:178, spec/bin_job_spec.rb:117-137)
+      val error = failure.map(e => s"API request failed: $e")
+      p.takers.foreach { case (seq, r) =>
+        open.remove(seq)
+        emit(seq, r, response, error, fresh = seq == p.seq && response.isDefined)
+      }
+      val key = p.r.cacheKey
+      if (key.nonEmpty) {
+        byKey.remove(key)
+        recent(key) = (response, error)
+        if (recent.size > window) recent.remove(recent.head._1)
+      }
     }
+    /** a read record finishes at once on a cached or recent answer,
+      * joins its key's open request, or sends its own */
+    def admit(seq: Long, r: Prompted): Unit =
+      (r.cached, byKey.get(r.cacheKey), recent.get(r.cacheKey)) match {
+        case (Some(answer), _, _) => emit(seq, r, Some(answer), None, fresh = false)
+        case (_, Some(p), _) =>
+          p.takers += seq -> r
+          open(seq) = p
+        case (_, _, Some((response, error))) => emit(seq, r, response, error, fresh = false)
+        case _ =>
+          val p = new Pending(seq, r)
+          open(seq) = p
+          if (r.cacheKey.nonEmpty) byKey(r.cacheKey) = p
+          send(p)
+      }
     def handle(s: Signal): Unit = open.get(s.seq).filter(_.attempt == s.attempt) match {
       case None => // the wait bound already dead-lettered this record
       case Some(p) => s match {
@@ -380,7 +423,7 @@ object EnrichJob {
     }
     def expire(): Unit = {
       val now = System.nanoTime()
-      open.values.filter(p => now - p.deadlineNs >= 0).toList.foreach { p =>
+      open.values.filter(p => now - p.deadlineNs >= 0).toList.distinct.foreach { p =>
         if (p.call != null) { p.call.cancel(true); onWire -= 1 }
         finish(p, None, Some(s"no answer within $boundMs ms"))
       }
@@ -390,11 +433,9 @@ object EnrichJob {
         val p = due.dequeue()
         if (open.get(p.seq).contains(p)) send(p)
       }
-      while (onWire < slots && read - emitted < slots.toLong * ReorderCap && it.hasNext) {
-        val p = new Pending(read, it.next())
-        open(p.seq) = p
+      while (onWire < slots && read - emitted < window && it.hasNext) {
+        admit(read, it.next())
         read += 1
-        send(p)
       }
     }
     /** handle the signals that arrive within `waitNs`, then refill */

@@ -267,6 +267,86 @@ class EnrichJobSpec extends SparkSpec with org.scalatest.concurrent.TimeLimits {
     assert(EnrichJobSpec.calls.get() == 0, "a broken cache must not re-call the corpus")
   }
 
+  /** answers "A:<prompt>" and logs every call's prompt; a prompt that
+    * contains "bad" gets a 400 on every attempt */
+  private val logging400 = new graft.llm.LlmClient {
+    override def chat(ms: Seq[graft.llm.Msg], c: JobConfig): String = {
+      val p = ms.last.text
+      EnrichJobSpec.promptLog.add(p)
+      if (p.contains("bad")) throw new graft.llm.HttpStatusException(400, "HTTP 400: nope")
+      s"A:$p"
+    }
+  }
+
+  private def contents(cs: String*) = cs.zipWithIndex
+    .map { case (c, i) => ((i + 1).toString, Map("content" -> c), Seq.empty[String]) }
+    .toDF("id", "texts", "images").coalesce(1)
+
+  private def summaries(r: EnrichJob.Result): Map[String, String] =
+    r.good.select(col("id"), element_at(col("texts"), "summary"))
+      .as[(String, String)].collect().toMap
+
+  private def errors(r: EnrichJob.Result): Map[String, String] =
+    r.deadLetter.select("id", "error").as[(String, String)].collect().toMap
+
+  test("runCached: one call per distinct prompt in a partition; duplicates " +
+    "share its answer or dead-letter error; the cache holds one row per key") {
+    EnrichJobSpec.promptLog.clear()
+    val cacheDir = Files.createTempDirectory("graft-cache8").resolve("c").toString
+    val r = EnrichJob.runCached(
+      contents("same", "same", "bad", "same", "other", "bad", "same", "same"),
+      cfg(), logging400, cacheDir, EnrichOptions(retryBackoffMs = 1))
+    val prompts = EnrichJobSpec.promptLog.toArray(Array.empty[String]).toSeq.sorted
+    assert(prompts == Seq("summarize: bad", "summarize: other", "summarize: same"))
+    val same = "A:summarize: same"
+    assert(summaries(r) == Map("1" -> same, "2" -> same, "4" -> same,
+      "5" -> "A:summarize: other", "7" -> same, "8" -> same))
+    val err = "API request failed: HTTP 400: nope"
+    assert(errors(r) == Map("3" -> err, "6" -> err))
+    val cache = spark.read.parquet(cacheDir).select("response").as[String].collect()
+    assert(cache.sorted.toSeq == Seq("A:summarize: other", same))
+  }
+
+  test("run: identical prompts are still one call per record") {
+    EnrichJobSpec.promptLog.clear()
+    val r = EnrichJob.run(contents(Seq.fill(6)("same"): _*), cfg(), logging400)
+    assert(r.good.count() == 6)
+    assert(EnrichJobSpec.promptLog.size == 6, "an LLM answer is a sample, not a cache hit")
+  }
+
+  test("runCached: both outputs read the checkpointed stage, not the cache dir") {
+    EnrichJobSpec.promptLog.clear()
+    val cacheDir = Files.createTempDirectory("graft-cache9").resolve("c").toString
+    val records = contents("hello", "bad", "world")
+    EnrichJob.runCached(records, cfg(), logging400, cacheDir).good.count()
+    val warm = EnrichJob.runCached(records, cfg(), logging400, cacheDir)
+    // a 400 is never cached, so the warm run re-calls it
+    assert(EnrichJobSpec.promptLog.size == 4)
+    val dir = new org.apache.hadoop.fs.Path(cacheDir)
+    assert(dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true))
+    assert(summaries(warm) == Map("1" -> "A:summarize: hello", "3" -> "A:summarize: world"))
+    assert(errors(warm) == Map("2" -> "API request failed: HTTP 400: nope"))
+    assert(EnrichJobSpec.promptLog.size == 4, "reading the outputs made no calls")
+  }
+
+  test("runCached: a pre-TTL cache file (no written_at) and a current one both serve hits") {
+    EnrichJobSpec.promptLog.clear()
+    val root = Files.createTempDirectory("graft-cache10")
+    val first = root.resolve("first").toString
+    EnrichJob.runCached(inputDf, cfg(), logging400, first).good.count()
+    val keys = spark.read.parquet(first).select("cacheKey").as[String].collect().sorted
+    val cacheDir = root.resolve("mixed").toString
+    Seq((keys(0), "legacy answer")).toDF("cacheKey", "response").write.parquet(cacheDir)
+    Seq((keys(1), "current answer", new java.sql.Timestamp(System.currentTimeMillis())))
+      .toDF("cacheKey", "response", "written_at")
+      .write.mode("append").parquet(cacheDir)
+    EnrichJobSpec.promptLog.clear()
+    val got = EnrichJob.runCached(inputDf, cfg(), logging400, cacheDir).good
+      .select(element_at(col("texts"), "summary")).as[String].collect().sorted.toSeq
+    assert(EnrichJobSpec.promptLog.isEmpty, "both files must serve hits")
+    assert(got == Seq("current answer", "legacy answer"))
+  }
+
   test("dead-letter replay: failed records re-enter the pipeline and succeed") {
     val flaky = new FakeLlmClient(p =>
       if (p.contains("goodbye")) throw new RuntimeException("down") else "ok")

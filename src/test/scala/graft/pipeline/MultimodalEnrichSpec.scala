@@ -147,9 +147,10 @@ class MultimodalEnrichSpec extends SparkSpec {
         "resp"
       }
     }
-    // two RUNS (the cache dedups across runs, not within a batch):
-    // same prompt, different image payload — text mode never ships
-    // the image, so run 2 must be a cache hit
+    // two RUNS, so run 2 is served by the on-disk cache rather than
+    // by the in-partition request dedupe: same prompt, different image
+    // payload — text mode never ships the image, so run 2 must be a
+    // cache hit
     val run1 = Seq(("same", Map.empty[String, String], Seq("QUFB")))
       .toDF("id", "texts", "images")
     EnrichJob.runCached(run1, visionCfg(useImages = false),
